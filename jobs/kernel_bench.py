@@ -22,11 +22,9 @@ from openie_spark.spec.rules import extract_pairs
 
 
 def load_payload(n_files: int = 2) -> list[list[tuple[str, str]]]:
-    d = Path(".fixtures/scale_docs_200000")
-    if not d.exists():
-        from openie_spark.fixtures.gen_scale import ensure_scale_corpus
+    from openie_spark.fixtures.gen_scale import ensure_scale_corpus
 
-        d = Path(ensure_scale_corpus(200000))
+    d = Path(ensure_scale_corpus(200000))
     payload = []
     for f in sorted(d.glob("part-*.parquet"))[:n_files]:
         t = pq.read_table(f, columns=["spans"])

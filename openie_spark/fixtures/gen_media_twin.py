@@ -3,7 +3,7 @@ side for ``media_features``, ``media_thumbnails`` and ``media_frames``.
 
 Same fixture discipline as gen_spec_triples / gen_dedup_twin: the twin
 shares ONLY the frozen per-item kernels (the synthetic fetch, the
-ONE-HOMED decode → probe → stub chain ``multimodal.decode_media_row``,
+ONE-HOMED decode → stub chain ``multimodal.decode_media_row``,
 and the image resize/frame-sample kernels) and re-executes the span
 explosion, fetch, decode, resize and frame-sampling loops single-process
 over plain lists.  Everything the CLUSTER adds — posexplode provenance,
@@ -86,7 +86,7 @@ def _media_items(sf_dir: str) -> list[tuple[str, int, str, str, bytes]]:
 
 
 def media_feature_rows(sf_dir: str) -> list[dict]:
-    # the per-row decode → probe → stub chain is ONE-HOMED in
+    # the per-row decode → stub chain is ONE-HOMED in
     # multimodal.decode_media_row (shared with the Spark fence) — the
     # twin only adds the sentinel encoding and the serialization twin
     from openie_spark.operators.multimodal import decode_media_row, feature_micro
@@ -161,7 +161,7 @@ def media_frame_rows(
 
 def media_features_path(sf_dir: str) -> str:
     fp = store.file_fingerprint(Path(sf_dir) / "documents.parquet")
-    name = f"media_twin_features_v7_{Path(sf_dir).name}_{fp}"
+    name = f"media_twin_features_v8_{Path(sf_dir).name}_{fp}"
     return store.ensure(
         name, lambda p: store.write_rows(media_feature_rows(sf_dir), FEATURES_PA, p)
     )
@@ -169,7 +169,7 @@ def media_features_path(sf_dir: str) -> str:
 
 def media_thumbs_path(sf_dir: str) -> str:
     fp = store.file_fingerprint(Path(sf_dir) / "documents.parquet")
-    name = f"media_twin_thumbs_v7_{Path(sf_dir).name}_{fp}"
+    name = f"media_twin_thumbs_v8_{Path(sf_dir).name}_{fp}"
     return store.ensure(
         name, lambda p: store.write_rows(media_thumb_rows(sf_dir), THUMBS_PA, p)
     )
@@ -177,7 +177,7 @@ def media_thumbs_path(sf_dir: str) -> str:
 
 def media_frames_path(sf_dir: str) -> str:
     fp = store.file_fingerprint(Path(sf_dir) / "documents.parquet")
-    name = f"media_twin_frames_v7_{Path(sf_dir).name}_{fp}"
+    name = f"media_twin_frames_v8_{Path(sf_dir).name}_{fp}"
     return store.ensure(
         name, lambda p: store.write_rows(media_frame_rows(sf_dir), FRAMES_PA, p)
     )

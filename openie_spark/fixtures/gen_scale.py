@@ -4,9 +4,10 @@
 directly as a multi-file parquet dataset (one file per chunk — which also
 gives Spark a parallel scan with no repartition).
 
-Determinism: chunk c uses rng seed (SEED, c); doc ids are s{c:04d}{i:07d};
-re-running with the same (n_docs, n_chunks) is byte-stable, and the corpus
-is cached under .fixtures/scale_docs_{n_docs}/ behind a _SUCCESS marker.
+Determinism: chunk c uses rng seed (seed, c); doc ids are s{c:04d}{i:07d};
+re-running with the same (n_docs, n_chunks, seed) is byte-stable, and the
+corpus is cached under .fixtures/scale_docs_{n_docs}_c{n_chunks}_s{seed}/
+behind a _SUCCESS marker — keyed on all three, since each changes the docs.
 """
 
 from __future__ import annotations
@@ -43,8 +44,9 @@ def _gen_chunk(args: tuple) -> int:
 
 
 def ensure_scale_corpus(n_docs: int, n_chunks: int = 64, seed: int = SEED) -> str:
-    """Build-once cache; returns the dataset directory path."""
-    d = store.FIXTURE_DIR / f"scale_docs_{n_docs}"
+    """Build-once cache keyed on every generator input; returns the
+    dataset directory path."""
+    d = store.FIXTURE_DIR / f"scale_docs_{n_docs}_c{n_chunks}_s{seed}"
     marker = d / "_SUCCESS"
     if marker.exists():
         return str(d)

@@ -2,18 +2,14 @@
 
 Same discipline as functions/imagecodec.py: no codec dependencies, so the
 multimodal audio path can decode REAL payloads end-to-end (header parse,
-sample decode, windowed energy features) instead of the labeled stubs —
-which remain only for formats that genuinely need external codecs
-(MP3/AAC/video).  The format is the public RIFF/WAVE spec (Microsoft/IBM
-1991): ``RIFF <size> WAVE`` followed by ``fmt `` and ``data`` chunks.
-Decode (r5 scope) covers the uncompressed family: integer PCM at
-8 (unsigned) / 16 / 24 / 32 bits, IEEE float32 (format 3), and
-WAVE_FORMAT_EXTENSIBLE (0xFFFE) wrapping either — every sample width
-renders to the int16 contract (8-bit recentered and widened, 24/32-bit
-truncated to the high 16, float clipped to ±1 and scaled half-up).
-Compressed formats (ADPCM, a-law/mu-law, …) return None and the caller
-falls back to its stub, exactly like decode_image on an unsupported
-container.  The encoder stays PCM16-only (the synth path's one home).
+sample decode, windowed energy features) instead of the labeled stubs.
+The format is the public RIFF/WAVE spec (Microsoft/IBM 1991):
+``RIFF <size> WAVE`` followed by ``fmt `` and ``data`` chunks.
+Scope is the flavor ``encode_wav`` emits (the synth path's one home):
+integer PCM (format 1) at 16 bits.  Every other sample format — 8/24/32
+bit, IEEE float, WAVE_FORMAT_EXTENSIBLE, compressed — returns None and
+the caller falls back to its stub (replace it with soundfile), exactly
+like decode_image on an unsupported container.
 
 Determinism contract: encode/decode round-trip bit-exactly, and
 ``pcm_features`` computes in float64 from exact int16 values before the
@@ -52,42 +48,9 @@ def encode_wav(sample_rate: int, samples: np.ndarray, n_channels: int = 1) -> by
     return struct.pack("<4sI", b"RIFF", len(body)) + body
 
 
-def _pcm_to_int16(pcm: bytes, fmt: int, bits: int, channels: int) -> np.ndarray | None:
-    """Raw data-chunk bytes → int16 samples per the module contract."""
-    if fmt == 3:  # IEEE float32: clip to ±1, scale half-up
-        if bits != 32:
-            return None
-        usable = len(pcm) - len(pcm) % (4 * channels)
-        f = np.frombuffer(pcm[:usable], dtype="<f4").astype(np.float64)
-        # canonicalize non-finite samples BEFORE the int cast: astype on
-        # NaN/±inf is C-undefined (INT_MIN on x86, 0 on some ARM paths),
-        # which would break the module's cross-host determinism contract
-        f = np.nan_to_num(f, nan=0.0, posinf=1.0, neginf=-1.0)
-        f = np.clip(f, -1.0, 1.0)
-        return np.floor(f * 32767.0 + 0.5).astype(np.int16)
-    if fmt != 1:
-        return None  # compressed: caller falls back
-    if bits == 16:
-        usable = len(pcm) - len(pcm) % (2 * channels)
-        return np.frombuffer(pcm[:usable], dtype="<i2")
-    if bits == 8:  # unsigned per spec: recenter + widen
-        usable = len(pcm) - len(pcm) % channels
-        u = np.frombuffer(pcm[:usable], np.uint8).astype(np.int16)
-        return ((u - 128) << 8).astype(np.int16)
-    if bits == 24:  # little-endian: high 16 bits
-        usable = len(pcm) - len(pcm) % (3 * channels)
-        b = np.frombuffer(pcm[:usable], np.uint8).reshape(-1, 3)
-        return ((b[:, 2].astype(np.int16) << 8) | b[:, 1]).astype(np.int16)
-    if bits == 32:
-        usable = len(pcm) - len(pcm) % (4 * channels)
-        return (np.frombuffer(pcm[:usable], dtype="<i4") >> 16).astype(np.int16)
-    return None
-
-
 def decode_wav(data: bytes) -> tuple[int, int, np.ndarray] | None:
     """bytes → (sample_rate, n_channels, int16 sample array) or None when
-    the payload is not an uncompressed RIFF/WAVE (see module docstring
-    for the supported sample formats and their int16 renderings)."""
+    the payload is not a PCM16 RIFF/WAVE."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         return None
     pos = 12
@@ -106,20 +69,13 @@ def decode_wav(data: bytes) -> tuple[int, int, np.ndarray] | None:
             fmt, channels, rate, _br, _ba, bits = struct.unpack_from(
                 "<HHIIHH", chunk, 0
             )
-            if fmt == 0xFFFE:  # WAVE_FORMAT_EXTENSIBLE: real format leads
-                # the 16-byte SubFormat GUID after cbSize + validBits + mask
-                if size < 26:
-                    return None
-                fmt = struct.unpack_from("<H", chunk, 24)[0]
         elif cid == b"data":
             pcm = chunk
         pos += size + (size % 2)  # word alignment padding
-    if rate is None or channels is None or channels < 1 or pcm is None:
+    if fmt != 1 or bits != 16 or not rate or channels < 1 or pcm is None:
         return None
-    samples = _pcm_to_int16(pcm, fmt, bits, channels)
-    if samples is None:
-        return None
-    return rate, channels, samples
+    usable = len(pcm) - len(pcm) % (2 * channels)
+    return rate, channels, np.frombuffer(pcm[:usable], dtype="<i2")
 
 
 def wav_duration_ms(sample_rate: int, n_channels: int, samples: np.ndarray) -> int:

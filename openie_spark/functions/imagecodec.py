@@ -1,29 +1,25 @@
-"""Pure-stdlib image codecs: 24-bit BMP, binary PPM (P6), 8-bit PNG, and
-palette GIF.
+"""Pure-stdlib image codecs: 24-bit BMP, binary PPM (P6), 8-bit RGB PNG,
+and palette GIF.
 
 The container ships no image libraries (no PIL/opencv), but these four
 formats are fully specified public formats decodable with nothing beyond
 `struct`/`zlib` and numpy — so the multimodal decode path (multimodal.py)
 can be REAL end-to-end for them instead of a stub: header parse, pixel
 decode, nearest-neighbor resize, and histogram features all compute from
-actual pixels.  Unknown formats still fall back to the clearly-marked
-stubs.
+actual pixels.  Decode scope is the flavor each encoder here emits (the
+ones the synthetic fetch produces); every other flavor returns None and
+falls back to the clearly-marked stubs (replace them with PIL).
 
 Formats (public specs):
   - PPM P6 (Netpbm): ``P6<ws>width<ws>height<ws>maxval<single-ws>`` then
     raw RGB rows top-down.  Comments (``#`` to EOL) allowed in the header.
   - BMP (Windows BITMAPINFOHEADER): 14-byte file header ('BM', size,
     pixel-data offset) + 40-byte DIB (width, height, planes, bpp,
-    compression); decode covers BI_RGB at 24 bpp (BGR), 32 bpp (BGRX,
-    pad/alpha dropped) and 8 bpp palette (BGRX color table); rows
-    bottom-up (top-down when height < 0), stride padded to 4 bytes.
-    The encoder emits 24 bpp only.
-  - PNG (W3C spec): every color-type/bit-depth combination — greyscale
-    (1/2/4/8/16), RGB (8/16), palette (1/2/4/8 via PLTE), grey+alpha and
-    RGBA (8/16) — non-interlaced AND Adam7; chunked container,
-    zlib-inflated raster, the five scanline filters (none / sub / up /
-    average / paeth) reversed per spec §6.  16-bit renders the high
-    byte; sub-8-bit grey rescales to full range; alpha is dropped.
+    compression); BI_RGB at 24 bpp (BGR) only, rows bottom-up (top-down
+    when height < 0), stride padded to 4 bytes.
+  - PNG (W3C spec): 8-bit RGB (color type 2), non-interlaced; chunked
+    container, zlib-inflated raster, the five scanline filters (none /
+    sub / up / average / paeth) reversed per spec §6.
   - GIF (CompuServe 87a/89a): logical screen + global/local color table,
     variable-width LZW (LSB-first bit packing, clear/end codes, 12-bit
     cap with deferred-clear table freeze), 4-pass interlace supported on
@@ -109,11 +105,9 @@ def encode_bmp(width: int, height: int, rgb: bytes) -> bytes:
 
 
 def decode_bmp(data: bytes) -> tuple[int, int, bytes] | None:
-    """Uncompressed (BI_RGB) BMP at 24 bpp (BGR), 32 bpp (BGRX — the
-    padding/alpha byte dropped), or 8 bpp palette (BGRX color table after
-    the DIB header) → top-down RGB.  Bottom-up rows (h > 0) flipped,
-    top-down (h < 0) kept; RLE/bitfields compression and sub-8-bit
-    palettes return None (fall through to the labeled stubs)."""
+    """Uncompressed (BI_RGB) 24 bpp BMP → top-down RGB.  Bottom-up rows
+    (h > 0) flipped, top-down (h < 0) kept; other bit depths and
+    compressions return None (fall through to the labeled stubs)."""
     if data[:2] != b"BM" or len(data) < 54:
         return None
     (off,) = struct.unpack_from("<I", data, 10)
@@ -121,41 +115,24 @@ def decode_bmp(data: bytes) -> tuple[int, int, bytes] | None:
     if dib_size < 40:  # BITMAPCOREHEADER not supported
         return None
     planes, bpp, compression = struct.unpack_from("<HHI", data, 26)
-    if planes != 1 or bpp not in (8, 24, 32) or compression != 0 or w <= 0 or h == 0:
+    if planes != 1 or bpp != 24 or compression != 0 or w <= 0 or h == 0:
         return None
     top_down = h < 0
     h = abs(h)
-    stride = ((bpp // 8) * w + 3) & ~3
+    stride = (3 * w + 3) & ~3
     if len(data) < off + stride * h:
         return None
     rows = np.frombuffer(data, np.uint8, count=stride * h, offset=off).reshape(
         h, stride
     )
-    if bpp == 8:
-        # color table: biClrUsed entries (0 = full 256) of BGRX quads
-        (used,) = struct.unpack_from("<I", data, 46)
-        n_colors = used or 256
-        tbl_off = 14 + dib_size
-        if len(data) < tbl_off + 4 * n_colors:
-            return None
-        table = np.frombuffer(
-            data, np.uint8, count=4 * n_colors, offset=tbl_off
-        ).reshape(-1, 4)[:, :3][:, ::-1]  # BGRX -> RGB
-        idx = rows[:, :w]
-        if int(idx.max()) >= n_colors:
-            return None
-        img = table[idx]
-    elif bpp == 32:
-        img = rows[:, : 4 * w].reshape(h, w, 4)[:, :, 2::-1]  # BGRX -> RGB
-    else:
-        img = rows[:, : 3 * w].reshape(h, w, 3)[:, :, ::-1]  # BGR -> RGB
+    img = rows[:, : 3 * w].reshape(h, w, 3)[:, :, ::-1]  # BGR -> RGB
     if not top_down:
         img = img[::-1]
     return w, h, np.ascontiguousarray(img).tobytes()
 
 
 # ---------------------------------------------------------------------------
-# PNG (8-bit greyscale / RGB / RGBA, non-interlaced — W3C PNG spec)
+# PNG (8-bit RGB, non-interlaced — W3C PNG spec)
 # ---------------------------------------------------------------------------
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -225,71 +202,21 @@ def _png_unfilter(raw: np.ndarray, h: int, rowbytes: int, bpp: int) -> np.ndarra
     return out.astype(np.uint8)
 
 
-# Adam7 interlace pass grid: (x0, y0, dx, dy) per pass, spec order.
-_ADAM7 = (
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-)
-
-# color type → (channels, valid bit depths)
-_PNG_COLORS = {
-    0: (1, (1, 2, 4, 8, 16)),  # greyscale
-    2: (3, (8, 16)),           # RGB
-    3: (1, (1, 2, 4, 8)),      # palette indices
-    4: (2, (8, 16)),           # grey + alpha
-    6: (4, (8, 16)),           # RGBA
-}
-
-
-def _png_samples(
-    raster: bytes, off: int, w: int, h: int, channels: int, depth: int
-) -> tuple[int, np.ndarray]:
-    """Consume one (sub)image of filtered scanlines starting at ``off``;
-    returns (next offset, (h, w, channels) samples — bytes for depth 8,
-    high bytes for 16, raw small values for sub-8-bit).  Raises
-    ValueError on truncation (caught by decode_png's refusal wrapper)."""
-    row_samples = w * channels
-    rowbytes = (row_samples * depth + 7) // 8
-    bpp = max(1, (channels * depth + 7) // 8)
-    need = h * (rowbytes + 1)
-    buf = raster[off : off + need]
-    if len(buf) != need:
-        raise ValueError("png: truncated raster")
-    recon = _png_unfilter(np.frombuffer(buf, np.uint8), h, rowbytes, bpp)
-    if depth == 8:
-        out = recon.reshape(h, w, channels)
-    elif depth == 16:
-        # 16-bit samples are big-endian; the 8-bit rendering keeps the
-        # high byte (exact for the v*257 standard upscaling)
-        out = recon.reshape(h, row_samples, 2)[:, :, 0].reshape(h, w, channels)
-    else:  # 1/2/4-bit: MSB-first packed samples, rows padded to bytes
-        bits = np.unpackbits(recon, axis=1)
-        weights = 1 << np.arange(depth - 1, -1, -1)
-        samples = (bits.reshape(h, -1, depth) * weights).sum(axis=2)
-        out = samples[:, :row_samples].reshape(h, w, channels).astype(np.uint8)
-    return off + need, out
-
-
 def decode_png(data: bytes) -> tuple[int, int, bytes] | None:
-    """Greyscale / RGB / palette / grey+alpha / RGBA PNG at any spec bit
-    depth (1/2/4/8/16 where the color type allows), non-interlaced OR
-    Adam7-interlaced → top-down RGB (alpha dropped, grey replicated,
-    sub-8-bit grey rescaled to full range, 16-bit truncated to the high
-    byte).  Malformed images return None (fall through to the labeled
-    stubs)."""
+    """8-bit RGB non-interlaced PNG → top-down RGB.  Other color types,
+    bit depths and Adam7 interlace return None, as do malformed images
+    (fall through to the labeled stubs)."""
     import zlib
 
     if data[: len(_PNG_SIG)] != _PNG_SIG:
         return None
     # Malformed payloads must fall through to the stubs like the sibling
     # decoders (sniff-and-fall-back contract), never crash the Spark task:
-    # truncated IHDR -> struct.error, filter byte > 4 / short raster /
-    # palette-index overflow -> ValueError.
+    # truncated IHDR -> struct.error, filter byte > 4 -> ValueError.
     try:
         i, w = len(_PNG_SIG), 0
         h = bitdepth = color = interlace = -1
         idat = bytearray()
-        plte = None
         while i + 8 <= len(data):
             (length,), typ = struct.unpack_from(">I", data, i), data[i + 4 : i + 8]
             payload = data[i + 8 : i + 8 + length]
@@ -297,55 +224,20 @@ def decode_png(data: bytes) -> tuple[int, int, bytes] | None:
                 w, h, bitdepth, color, _comp, _filt, interlace = struct.unpack(
                     ">IIBBBBB", payload
                 )
-            elif typ == b"PLTE":
-                if length % 3:
-                    return None
-                plte = np.frombuffer(payload, np.uint8).reshape(-1, 3)
             elif typ == b"IDAT":
                 idat += payload
             elif typ == b"IEND":
                 break
             i += 12 + length  # len + type + payload + crc
-        if color not in _PNG_COLORS or w <= 0 or h <= 0:
-            return None
-        channels, depths = _PNG_COLORS[color]
-        if bitdepth not in depths or (color == 3 and plte is None):
+        if (bitdepth, color, interlace) != (8, 2, 0) or w <= 0 or h <= 0:
             return None
         raster = zlib.decompress(bytes(idat))
-        if interlace == 0:
-            off, img = _png_samples(raster, 0, w, h, channels, bitdepth)
-        elif interlace == 1:  # Adam7
-            img = np.zeros((h, w, channels), np.uint8)
-            off = 0
-            for x0, y0, dx, dy in _ADAM7:
-                pw = -(-(w - x0) // dx) if w > x0 else 0
-                ph = -(-(h - y0) // dy) if h > y0 else 0
-                if pw <= 0 or ph <= 0:
-                    continue
-                off, sub = _png_samples(raster, off, pw, ph, channels, bitdepth)
-                img[y0::dy, x0::dx] = sub
-        else:
+        if len(raster) != h * (3 * w + 1):
             return None
-        if off != len(raster):
-            return None
-        if color == 3:  # palette lookup
-            if int(img.max()) >= len(plte):
-                return None
-            img = plte[img[:, :, 0]]
-        elif bitdepth < 8:  # rescale 1/2/4-bit grey to full range
-            img = (img.astype(np.uint16) * (255 // ((1 << bitdepth) - 1))).astype(
-                np.uint8
-            )
+        img = _png_unfilter(np.frombuffer(raster, np.uint8), h, 3 * w, 3)
     except (struct.error, ValueError, zlib.error):
         return None
-    ch = img.shape[2]
-    if ch == 1:
-        img = np.repeat(img, 3, axis=2)
-    elif ch == 2:  # grey + alpha: drop alpha, replicate grey
-        img = np.repeat(img[:, :, :1], 3, axis=2)
-    elif ch == 4:
-        img = img[:, :, :3]
-    return w, h, np.ascontiguousarray(img).tobytes()
+    return w, h, img.tobytes()
 
 
 # ---------------------------------------------------------------------------

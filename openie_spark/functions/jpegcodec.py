@@ -2,37 +2,24 @@
 
 Same discipline as functions/{image,audio,video}codec.py: no codec
 dependencies, so the multimodal image path can decode REAL JPEG payloads
-end-to-end.  Scope (honest and spec-valid, not a general-purpose decoder):
+end-to-end.  Scope is exactly the flavor ``encode_jpeg`` emits (the one
+the synthetic fetch produces):
 
-  - **Encoder**: baseline sequential DCT, 8-bit, 4:4:4 (no chroma
-    subsampling), JFIF color (RGB→YCbCr), edge-replicated padding to 8×8
-    MCUs, and SELF-DEFINED canonical Huffman tables written to DHT (the
-    spec lets any valid tables ride in the file — emitting our own
-    removes any dependence on remembering Annex K byte-for-byte; every
-    conforming decoder, including this one, reads tables from DHT).
-  - **Decoder**: baseline sequential (SOF0) with per-component sampling
-    factors 1-2 per axis — 4:4:4, 4:2:0, 4:2:2 (MCU-interleaved
-    sub-block rasters, nearest-neighbor chroma upsample) — AND
-    progressive (SOF2, 4:4:4 only): spectral selection, successive
-    approximation (DC + AC first and refinement scans, EOB runs spanning
-    blocks, buffered correction bits), multi-scan parsing with DHT/DQT
-    between scans.  8-bit, tables taken from the stream, 0xFF00
-    byte-stuffing, EOB/ZRL runs, DC prediction.  Anything else —
-    sampling factors above 2, subsampled progressive, arithmetic coding,
-    lossless/differential frames, restart intervals — returns None and
-    the caller falls back to its labeled stub, exactly like decode_image
-    on an unknown container.
-  - **4:2:0 encoder** (``encode_jpeg_420``): luma 2×2 / chroma 1×1 with
-    2×2 box-mean chroma downsampling — exists chiefly to round-trip-test
-    the subsampled decode path (flat content survives the
-    box-mean/replicate pair exactly; the MCU quadrant test pins the
-    interleave order).
-  - **Progressive encoder** (``encode_jpeg_progressive``): same quantized
-    coefficients as the baseline encoder, emitted as a full scan script
-    (interleaved DC first at Al=1 + DC refinement, then per-component AC
-    first at Al=1 + AC refinement) — so a progressive round-trip must
-    decode BIT-IDENTICAL to the baseline round-trip of the same pixels,
-    which is exactly what the tests pin.
+  - **Encoder**: baseline sequential DCT, 8-bit, 3 components at 4:4:4
+    (no chroma subsampling), JFIF color (RGB→YCbCr), edge-replicated
+    padding to 8×8 MCUs, and SELF-DEFINED canonical Huffman tables
+    written to DHT (the spec lets any valid tables ride in the file —
+    emitting our own removes any dependence on remembering Annex K
+    byte-for-byte; every conforming decoder, including this one, reads
+    tables from DHT).
+  - **Decoder**: baseline sequential (SOF0), 8-bit, 3 components at
+    1×1 sampling, one interleaved full-band scan; tables taken from the
+    stream, 0xFF00 byte-stuffing, EOB/ZRL runs, DC prediction.  Anything
+    else — progressive, subsampled or greyscale frames, arithmetic
+    coding, lossless/differential frames, restart intervals, 16-bit
+    tables — returns None and the caller falls back to its labeled stub
+    (replace it with PIL for foreign JPEGs), exactly like decode_image on
+    an unknown container.
 
 Determinism contract: FDCT/IDCT run in float64 through one fixed 8×8
 DCT matrix; quantization is floor(x/q + 0.5) with half-away-from-zero
@@ -100,17 +87,6 @@ def _canonical_codes(bits: list[int], symbols: list[int]) -> dict[int, tuple[int
 
 _DC_ENC = _canonical_codes(_DC_BITS, _DC_SYMBOLS)
 _AC_ENC = _canonical_codes(_AC_BITS, _AC_SYMBOLS)
-
-# Progressive AC table: the baseline symbols PLUS the EOBn codes
-# (run<<4, size 0, run 1..14) progressive EOB runs need.  A SEPARATE
-# table (DHT rides per-stream) so the baseline encoder's bytes — and with
-# them every synthesized media fixture — stay bit-identical.
-_AC_SYMBOLS_P = [0x00, 0xF0] + [run << 4 for run in range(1, 15)] + [
-    (run << 4) | size for run in range(16) for size in range(1, 11)
-]
-_AC_BITS_P = [0] * 16
-_AC_BITS_P[7] = len(_AC_SYMBOLS_P)  # 176 codes at length 8 (max 175 < 255)
-_AC_ENC_P = _canonical_codes(_AC_BITS_P, _AC_SYMBOLS_P)
 
 # one fixed DCT-II matrix (float64) drives both transforms
 _C = np.array(
@@ -235,9 +211,7 @@ def _dht_segment(tc: int, th: int, bits: list[int], symbols: list[int]) -> bytes
 
 
 def _quantize_image(width: int, height: int, rgb: bytes) -> np.ndarray:
-    """RGB bytes → quantized zigzag-order coefficients (3, bh, bw, 64) —
-    the shared front half of both encoders (so a progressive stream
-    carries byte-for-byte the same coefficients as the baseline one)."""
+    """RGB bytes → quantized zigzag-order coefficients (3, bh, bw, 64)."""
     img = (
         np.frombuffer(rgb, np.uint8)
         .reshape(height, width, 3)
@@ -259,30 +233,21 @@ def _quantize_image(width: int, height: int, rgb: bytes) -> np.ndarray:
     return out
 
 
-def _headers(
-    width: int,
-    height: int,
-    sof_marker: int,
-    samplings: tuple[int, int, int] = (0x11, 0x11, 0x11),
-) -> list[bytes]:
-    """SOI..DHT common header segments (SOF0 baseline / SOF2 progressive;
-    the progressive variant writes the EOBn-capable AC tables)."""
-    prog = sof_marker == 0xFFC2
-    ac_bits = _AC_BITS_P if prog else _AC_BITS
-    ac_syms = _AC_SYMBOLS_P if prog else _AC_SYMBOLS
+def _headers(width: int, height: int) -> list[bytes]:
+    """SOI..DHT header segments of the baseline 4:4:4 stream."""
     qzz = bytes(int(_QTABLE.reshape(64)[z]) for z in _ZIGZAG)
     return [
         b"\xff\xd8",  # SOI
         struct.pack(">HH", 0xFFE0, 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00",
         struct.pack(">HH", 0xFFDB, 2 + 65) + b"\x00" + qzz,  # DQT id 0
         struct.pack(">HH", 0xFFDB, 2 + 65) + b"\x01" + qzz,  # DQT id 1
-        # SOF: 8-bit, 3 components
-        struct.pack(">HHBHHB", sof_marker, 17, 8, height, width, 3)
-        + bytes([1, samplings[0], 0, 2, samplings[1], 1, 3, samplings[2], 1]),
+        # SOF0: 8-bit, 3 components, 1×1 sampling; luma DQT 0, chroma 1
+        struct.pack(">HHBHHB", 0xFFC0, 17, 8, height, width, 3)
+        + bytes([1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1]),
         _dht_segment(0, 0, _DC_BITS, _DC_SYMBOLS),
-        _dht_segment(1, 0, ac_bits, ac_syms),
+        _dht_segment(1, 0, _AC_BITS, _AC_SYMBOLS),
         _dht_segment(0, 1, _DC_BITS, _DC_SYMBOLS),
-        _dht_segment(1, 1, ac_bits, ac_syms),
+        _dht_segment(1, 1, _AC_BITS, _AC_SYMBOLS),
     ]
 
 
@@ -295,8 +260,7 @@ def _write_magnitude(w: _BitWriter, enc, sym: int, v: int, size: int) -> None:
 
 def _encode_block_entropy(w: _BitWriter, zz, prev_dc: int) -> int:
     """One baseline block (DC diff + AC runs/EOB) → bitstream; returns
-    the new DC predictor.  Shared verbatim by every baseline encoder
-    flavor so their per-block bytes cannot drift."""
+    the new DC predictor."""
     diff = int(zz[0]) - prev_dc
     new_dc = int(zz[0])
     size = _size_cat(diff)
@@ -334,7 +298,7 @@ def encode_jpeg(width: int, height: int, rgb: bytes) -> bytes:
                 prev_dc[comp] = _encode_block_entropy(
                     w, coefs[comp, by, bx], prev_dc[comp]
                 )
-    out = _headers(width, height, 0xFFC0)
+    out = _headers(width, height)
     out += [
         # SOS: 3 components; luma uses tables (0,0), chroma (1,1)
         struct.pack(">HHB", 0xFFDA, 12, 3)
@@ -342,224 +306,6 @@ def encode_jpeg(width: int, height: int, rgb: bytes) -> bytes:
         w.flush(),
         b"\xff\xd9",  # EOI
     ]
-    return b"".join(out)
-
-
-def _quantize_plane(plane: np.ndarray) -> np.ndarray:
-    """(H, W) float plane with H, W multiples of 8 → quantized zigzag
-    coefficients (H//8, W//8, 64)."""
-    H, W = plane.shape
-    out = np.zeros((H // 8, W // 8, 64), np.int64)
-    for by in range(0, H, 8):
-        for bx in range(0, W, 8):
-            q = _quantize(_fdct(plane[by : by + 8, bx : bx + 8] - 128.0))
-            out[by // 8, bx // 8] = q.reshape(64)[_ZIGZAG]
-    return out
-
-
-def encode_jpeg_420(width: int, height: int, rgb: bytes) -> bytes:
-    """Top-down RGB bytes → baseline 4:2:0 JFIF JPEG (luma 2×2, chroma
-    1×1; chroma downsampled by 2×2 box mean).  The common real-world
-    photo flavor — exists chiefly so the decoder's subsampled MCU
-    interleave + nearest-neighbor upsample path is round-trip-tested
-    against content with known properties (flat regions survive the
-    box-mean/replicate pair exactly)."""
-    img = (
-        np.frombuffer(rgb, np.uint8)
-        .reshape(height, width, 3)
-        .astype(np.float64)
-    )
-    ycc = _rgb_to_ycbcr(img)
-    ph, pw = -(-height // 16) * 16, -(-width // 16) * 16
-    padded = np.empty((ph, pw, 3))
-    padded[:height, :width] = ycc
-    padded[height:, :width] = ycc[height - 1 : height, :]  # edge replicate
-    padded[:, width:] = padded[:, width - 1 : width]
-    yb = _quantize_plane(padded[:, :, 0])
-    csub = padded[:, :, 1:].reshape(ph // 2, 2, pw // 2, 2, 2).mean(axis=(1, 3))
-    cbb = _quantize_plane(csub[:, :, 0])
-    crb = _quantize_plane(csub[:, :, 1])
-
-    w = _BitWriter()
-    prev = [0, 0, 0]
-    for my in range(ph // 16):
-        for mx in range(pw // 16):
-            for byy in range(2):  # luma 2×2 sub-blocks, raster order
-                for bxx in range(2):
-                    prev[0] = _encode_block_entropy(
-                        w, yb[2 * my + byy, 2 * mx + bxx], prev[0]
-                    )
-            prev[1] = _encode_block_entropy(w, cbb[my, mx], prev[1])
-            prev[2] = _encode_block_entropy(w, crb[my, mx], prev[2])
-
-    out = _headers(width, height, 0xFFC0, samplings=(0x22, 0x11, 0x11))
-    out += [
-        struct.pack(">HHB", 0xFFDA, 12, 3)
-        + bytes([1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]),
-        w.flush(),
-        b"\xff\xd9",  # EOI
-    ]
-    return b"".join(out)
-
-
-def _sos_segment(comps: list[tuple[int, int]], ss: int, se: int, ah: int, al: int) -> bytes:
-    """comps = [(component id, table-selector byte), ...]."""
-    ns = len(comps)
-    body = bytes([ns])
-    for cid, tsel in comps:
-        body += bytes([cid, tsel])
-    body += bytes([ss, se, (ah << 4) | al])
-    return struct.pack(">HH", 0xFFDA, 2 + len(body)) + body
-
-
-class _EobState:
-    """Cross-block EOB-run + buffered-correction-bit state for one
-    progressive AC scan (the encoder mirror of the decoder's eobrun)."""
-
-    def __init__(self, w: _BitWriter, enc) -> None:
-        self.w = w
-        self.enc = enc
-        self.eobrun = 0
-        self.pending: list[int] = []  # correction bits riding the EOB run
-
-    def flush(self) -> None:
-        if self.eobrun > 0:
-            nbits = self.eobrun.bit_length() - 1
-            code, length = self.enc[nbits << 4]
-            self.w.write(code, length)
-            if nbits:
-                self.w.write(self.eobrun - (1 << nbits), nbits)
-            self.eobrun = 0
-        for b in self.pending:
-            self.w.write(b, 1)
-        self.pending = []
-
-
-def _encode_ac_first(coefs_c, w: _BitWriter, enc, ss: int, se: int, al: int) -> None:
-    """AC first pass (Ah=0): magnitudes point-transformed by |v| >> Al,
-    EOB runs spanning blocks."""
-    bh, bw = coefs_c.shape[0], coefs_c.shape[1]
-    st = _EobState(w, enc)
-    for by in range(bh):
-        for bx in range(bw):
-            zz = coefs_c[by, bx]
-            run = 0
-            for k in range(ss, se + 1):
-                v = int(zz[k])
-                mag = abs(v) >> al
-                if mag == 0:
-                    run += 1
-                    continue
-                st.flush()
-                while run > 15:
-                    code, length = enc[0xF0]  # ZRL
-                    w.write(code, length)
-                    run -= 16
-                size = mag.bit_length()
-                _write_magnitude(
-                    w, enc, (run << 4) | size, mag if v >= 0 else -mag, size
-                )
-                run = 0
-            if run > 0:
-                st.eobrun += 1
-                if st.eobrun == 0x7FFF:
-                    st.flush()
-    st.flush()
-
-
-def _encode_ac_refine(coefs_c, w: _BitWriter, enc, ss: int, se: int, ah: int, al: int) -> None:
-    """AC refinement (Ah=Al+1): newly-significant ±1-at-Al coefficients
-    positioned by zero-HISTORY runs; correction bits for already-nonzero
-    coefficients buffered and emitted after the covering symbol."""
-    bh, bw = coefs_c.shape[0], coefs_c.shape[1]
-    st = _EobState(w, enc)
-    for by in range(bh):
-        for bx in range(bw):
-            zz = coefs_c[by, bx]
-            mags = [abs(int(zz[k])) >> al for k in range(ss, se + 1)]
-            eob = 0  # index past the last newly-significant coefficient
-            for i, m in enumerate(mags):
-                if m == 1 and (abs(int(zz[ss + i])) >> ah) == 0:
-                    eob = i + 1
-            run = 0
-            br: list[int] = []
-            for i, m in enumerate(mags):
-                if m == 0:
-                    run += 1
-                    continue
-                while run > 15 and i < eob:
-                    st.flush()
-                    code, length = enc[0xF0]  # ZRL
-                    w.write(code, length)
-                    run -= 16
-                    for b in br:
-                        w.write(b, 1)
-                    br = []
-                if (abs(int(zz[ss + i])) >> ah) != 0:
-                    br.append(m & 1)  # history-nonzero: correction bit
-                    continue
-                # newly significant (m == 1 by construction)
-                st.flush()
-                code, length = enc[(run << 4) | 1]
-                w.write(code, length)
-                w.write(1 if int(zz[ss + i]) >= 0 else 0, 1)
-                run = 0
-                for b in br:
-                    w.write(b, 1)
-                br = []
-            if run > 0 or br:
-                st.eobrun += 1
-                st.pending += br
-                if st.eobrun == 0x7FFF:
-                    st.flush()
-    st.flush()
-
-
-def encode_jpeg_progressive(width: int, height: int, rgb: bytes) -> bytes:
-    """Top-down RGB bytes → progressive (SOF2) 4:4:4 JFIF JPEG carrying
-    the SAME quantized coefficients as ``encode_jpeg``, emitted as a
-    full scan script that exercises every progressive decode path:
-    interleaved DC first at Al=1 → DC refinement, then per component an
-    AC 1..63 first pass at Al=1 → AC refinement — so decoding must be
-    bit-identical to decoding the baseline stream (test-pinned)."""
-    coefs = _quantize_image(width, height, rgb)
-    _, bh, bw, _ = coefs.shape
-    out = _headers(width, height, 0xFFC2)
-
-    # scan 1: DC first, all components interleaved, Al=1
-    w = _BitWriter()
-    prev = [0, 0, 0]
-    for by in range(bh):
-        for bx in range(bw):
-            for comp in range(3):
-                dc = int(coefs[comp, by, bx, 0]) >> 1  # arithmetic shift
-                diff = dc - prev[comp]
-                prev[comp] = dc
-                size = _size_cat(diff)
-                _write_magnitude(w, _DC_ENC, size, diff, size)
-    out += [_sos_segment([(1, 0x00), (2, 0x00), (3, 0x00)], 0, 0, 0, 1), w.flush()]
-
-    # scan 2: DC refinement, Ah=1 Al=0 — one raw bit per block
-    w = _BitWriter()
-    for by in range(bh):
-        for bx in range(bw):
-            for comp in range(3):
-                w.write(int(coefs[comp, by, bx, 0]) & 1, 1)
-    out += [_sos_segment([(1, 0x00), (2, 0x00), (3, 0x00)], 0, 0, 1, 0), w.flush()]
-
-    # scans 3-5: per-component AC first pass (band 1..63, Al=1)
-    for comp, cid in ((0, 1), (1, 2), (2, 3)):
-        w = _BitWriter()
-        _encode_ac_first(coefs[comp], w, _AC_ENC_P, 1, 63, 1)
-        out += [_sos_segment([(cid, 0x00 if comp == 0 else 0x01)], 1, 63, 0, 1), w.flush()]
-
-    # scans 6-8: per-component AC refinement (Ah=1, Al=0)
-    for comp, cid in ((0, 1), (1, 2), (2, 3)):
-        w = _BitWriter()
-        _encode_ac_refine(coefs[comp], w, _AC_ENC_P, 1, 63, 1, 0)
-        out += [_sos_segment([(cid, 0x00 if comp == 0 else 0x01)], 1, 63, 1, 0), w.flush()]
-
-    out.append(b"\xff\xd9")  # EOI
     return b"".join(out)
 
 
@@ -592,7 +338,7 @@ def _read_symbol(r: _BitReader, table: dict[tuple[int, int], int]) -> int | None
 
 def _entropy_end(data: bytes, start: int) -> int | None:
     """Index of the first real marker after ``start`` (skipping stuffed
-    0xFF00 pairs) — the end of one scan's entropy-coded segment."""
+    0xFF00 pairs) — the end of the scan's entropy-coded segment."""
     i = start
     while True:
         j = data.find(b"\xff", i)
@@ -642,196 +388,38 @@ def _decode_block(zz, r, dct, act, prev_dc: int) -> int | None:
     return prev_dc
 
 
-def _decode_baseline_scan(coefs, comps, scan, htables, r, mcuy, mcux) -> bool:
-    """One full-band interleaved scan → per-component zigzag coefficient
-    arrays, MCU order with per-component h×v sub-block rasters (T.81
-    A.2.3) — 1×1 everywhere degenerates to the plain block raster."""
+def _decode_scan(coefs, scan, htables, r) -> bool:
+    """One interleaved full-band 4:4:4 scan → per-component zigzag
+    coefficient grids, plain block raster with the scan's components
+    interleaved per block."""
     prev_dc = [0] * len(coefs)
-    for my in range(mcuy):
-        for mx in range(mcux):
+    _, bh, bw, _ = coefs.shape
+    for by in range(bh):
+        for bx in range(bw):
             for ci, dc_id, ac_id in scan:
                 dct = htables.get((0, dc_id))
                 act = htables.get((1, ac_id))
                 if dct is None or act is None:
                     return False
-                _, h, v, _ = comps[ci]
-                for byy in range(v):
-                    for bxx in range(h):
-                        dc = _decode_block(
-                            coefs[ci][my * v + byy, mx * h + bxx],
-                            r, dct, act, prev_dc[ci],
-                        )
-                        if dc is None:
-                            return False
-                        prev_dc[ci] = dc
-    return True
-
-
-def _ac_first_block(block, r, act, ss, se, al, eobrun) -> int | None:
-    """Progressive AC first-pass (Ah=0) for one block; returns the new
-    EOB-run count (blocks this code already covers) or None on error."""
-    if eobrun > 0:
-        return eobrun - 1
-    k = ss
-    while k <= se:
-        sym = _read_symbol(r, act)
-        if sym is None:
-            return None
-        run, size = sym >> 4, sym & 0x0F
-        if size == 0:
-            if run == 15:
-                k += 16  # ZRL
-                continue
-            eb = r.read(run) if run else 0
-            if eb is None:
-                return None
-            return (1 << run) - 1 + eb  # EOBn: current block consumed
-        k += run
-        if k > se:
-            return None
-        v = r.read(size)
-        if v is None:
-            return None
-        block[k] = _extend(v, size) << al
-        k += 1
-    return 0
-
-
-def _refine_nonzero(block, r, k, al) -> bool:
-    """Append one correction bit to an already-nonzero coefficient."""
-    p1 = 1 << al
-    bit = r.read(1)
-    if bit is None:
-        return False
-    if bit and (int(block[k]) & p1) == 0:
-        block[k] += p1 if block[k] >= 0 else -p1
-    return True
-
-
-def _ac_refine_block(block, r, act, ss, se, al, eobrun) -> int | None:
-    """Progressive AC refinement (Ah>0) for one block; the T.81 G.1.2.3
-    flow: new ±1-at-Al coefficients positioned by zero-HISTORY run
-    lengths, correction bits interleaved on every nonzero-history
-    position passed, EOB runs refining the band remainder."""
-    p1 = 1 << al
-    k = ss
-    if eobrun == 0:
-        while k <= se:
-            sym = _read_symbol(r, act)
-            if sym is None:
-                return None
-            run, size = sym >> 4, sym & 0x0F
-            val = 0
-            if size == 0:
-                if run != 15:  # EOBn (ZRL handled by the advance loop)
-                    eb = r.read(run) if run else 0
-                    if eb is None:
-                        return None
-                    eobrun = (1 << run) + eb
-                    break
-            else:
-                if size != 1:
-                    return None  # refinement codes only ±1 new values
-                bit = r.read(1)
-                if bit is None:
-                    return None
-                val = p1 if bit else -p1
-            while k <= se:
-                if block[k] != 0:
-                    if not _refine_nonzero(block, r, k, al):
-                        return None
-                else:
-                    if run == 0:
-                        break
-                    run -= 1
-                k += 1
-            if val and k <= se:
-                block[k] = val
-            k += 1
-    if eobrun > 0:
-        while k <= se:
-            if block[k] != 0 and not _refine_nonzero(block, r, k, al):
-                return None
-            k += 1
-        eobrun -= 1
-    return eobrun
-
-
-def _decode_progressive_scan(coefs, scan, ss, se, ah, al, htables, r, dc_pred) -> bool:
-    # progressive support is 1×1-sampling only, so every component grid
-    # has identical dims (checked by the caller)
-    bh, bw, _ = coefs[0].shape
-    if ss == 0:  # DC scan (first or refinement), interleaved
-        if se != 0:
-            return False
-        for by in range(bh):
-            for bx in range(bw):
-                for ci, dc_id, _ in scan:
-                    if ah == 0:
-                        dct = htables.get((0, dc_id))
-                        if dct is None:
-                            return False
-                        size = _read_symbol(r, dct)
-                        if size is None or size > 11:
-                            return False
-                        diff = 0
-                        if size:
-                            v = r.read(size)
-                            if v is None:
-                                return False
-                            diff = _extend(v, size)
-                        dc_pred[ci] += diff
-                        coefs[ci][by, bx, 0] = dc_pred[ci] << al
-                    else:  # refinement: one raw bit per block
-                        bit = r.read(1)
-                        if bit is None:
-                            return False
-                        if bit:
-                            coefs[ci][by, bx, 0] |= 1 << al
-        return True
-    # AC scan: exactly one component, band inside 1..63
-    if len(scan) != 1 or ss > se or se > 63:
-        return False
-    ci, _, ac_id = scan[0]
-    act = htables.get((1, ac_id))
-    if act is None:
-        return False
-    eobrun = 0
-    step = _ac_first_block if ah == 0 else _ac_refine_block
-    for by in range(bh):
-        for bx in range(bw):
-            eobrun = step(coefs[ci][by, bx], r, act, ss, se, al, eobrun)
-            if eobrun is None:
-                return False
+                dc = _decode_block(coefs[ci, by, bx], r, dct, act, prev_dc[ci])
+                if dc is None:
+                    return False
+                prev_dc[ci] = dc
     return True
 
 
 def decode_jpeg(data: bytes) -> tuple[int, int, bytes] | None:
-    """Baseline (SOF0, sampling factors 1-2 per axis — 4:4:4, 4:2:0,
-    4:2:2) or progressive (SOF2, 4:4:4) JPEG bytes → (width, height,
-    top-down RGB) or None for any unsupported flavor (sampling factors
-    above 2, subsampled progressive, arithmetic-coded,
-    lossless/differential frames, restart intervals, non-8-bit).
-    Chroma upsampling is nearest-neighbor replication (the exact inverse
-    of encode_jpeg_420's box mean on flat content)."""
+    """Baseline 8-bit 4:4:4 three-component JPEG bytes → (width, height,
+    top-down RGB), or None for any other flavor and for malformed
+    streams (see the module docstring)."""
     if len(data) < 4 or data[:2] != b"\xff\xd8":
         return None
     qtables: dict[int, np.ndarray] = {}
     htables: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
     width = height = None
-    progressive = False
-    comps: list[tuple[int, int, int, int]] = []  # (comp id, h, v, qtable id)
-    # (scan comps, Ss, Se, Ah, Al, entropy bytes, Huffman-table SNAPSHOT)
-    # per SOS — tables may be legally redefined between progressive scans
-    # (libjpeg -optimize emits fresh DHTs reusing ids 0/1 per scan), so
-    # each scan must decode with the table state in effect at ITS header,
-    # not the final state.
-    scans: list[tuple[list, int, int, int, int, bytes, dict]] = []
-    # per-component quantization table, latched at the component's FIRST
-    # scan (the libjpeg latch_quant_tables rule) — progressive dequant
-    # happens once at EOI but must use the table in effect when the
-    # component's coefficients started arriving
-    latched_qt: dict[int, np.ndarray] = {}
+    qids: list[int] = []  # per-component DQT id, SOF order
+    cids: list[int] = []  # per-component id, SOF order
+    coefs = qt = None  # set by the one scan (tables as of its SOS)
     pos = 2
     saw_eoi = False
     while pos + 2 <= len(data):
@@ -860,38 +448,21 @@ def decode_jpeg(data: bytes) -> tuple[int, int, bytes] | None:
                 q[_ZIGZAG] = vals
                 qtables[tid] = q.reshape(8, 8)
                 sp += 65
-        elif marker in (0xC0, 0xC2):  # SOF0 baseline / SOF2 progressive
+        elif marker == 0xC0:  # SOF0 baseline
             # malformed-but-self-consistent segment lengths must refuse,
             # not raise: a crafted short SOF would otherwise throw out of
             # the slice unpack and kill the task instead of stubbing
-            if width is not None or len(seg) < 6 or seg[0] != 8:
+            if width is not None or len(seg) < 15 or seg[0] != 8 or seg[5] != 3:
                 return None
-            progressive = marker == 0xC2
             height, width = struct.unpack_from(">HH", seg, 1)
-            ncomp = seg[5]
-            if ncomp not in (1, 3) or len(seg) < 6 + 3 * ncomp:
-                return None
-            comps = []
-            for c in range(ncomp):
+            for c in range(3):
                 cid, sampling, qid = seg[6 + 3 * c : 9 + 3 * c]
-                h, v = sampling >> 4, sampling & 0x0F
-                if h not in (1, 2) or v not in (1, 2):
-                    return None  # sampling factors above 2: unsupported
-                comps.append((cid, h, v, qid))
-            if ncomp == 1:
-                # T.81 A.2: a single-component scan is NON-interleaved —
-                # one data unit per MCU in plain block raster; the
-                # declared sampling factors do not shape the scan.
-                # Normalizing to 1×1 here makes the MCU loop degenerate
-                # to exactly that raster (and keeps 2×2-declared
-                # grayscale streams decoding unscrambled).
-                cid, _, _, qid = comps[0]
-                comps = [(cid, 1, 1, qid)]
-        elif marker in (
-            0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
-            0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF,
-        ):
-            return None  # non-baseline/progressive SOF flavors
+                if sampling != 0x11:
+                    return None  # chroma subsampling: unsupported
+                cids.append(cid)
+                qids.append(qid)
+        elif 0xC1 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
+            return None  # progressive/lossless/arithmetic SOF flavors
         elif marker == 0xC4:  # DHT (possibly several tables)
             sp = 0
             while sp + 17 <= len(seg):
@@ -906,94 +477,46 @@ def decode_jpeg(data: bytes) -> tuple[int, int, bytes] | None:
         elif marker == 0xDD:  # DRI restart interval
             return None  # unsupported (our encoder never emits it)
         elif marker == 0xDA:  # SOS
-            if not seg:
-                return None
-            ns = seg[0]
-            if width is None or ns < 1 or len(seg) < 1 + 2 * ns + 3:
-                return None
-            if not progressive and ns != len(comps):
-                return None
+            if width is None or coefs is not None or len(seg) != 10 or seg[0] != 3:
+                return None  # baseline carries exactly one 3-component scan
             scan = []
-            for c in range(ns):
+            for c in range(3):
                 cid, tsel = seg[1 + 2 * c], seg[2 + 2 * c]
-                idx = next(
-                    (i for i, c4 in enumerate(comps) if c4[0] == cid), None
-                )
-                if idx is None:
+                if cid not in cids:
                     return None
-                scan.append((idx, tsel >> 4, tsel & 0x0F))
-            band = seg[1 + 2 * ns : 4 + 2 * ns]
+                scan.append((cids.index(cid), tsel >> 4, tsel & 0x0F))
+            if sorted(ci for ci, _, _ in scan) != [0, 1, 2]:
+                return None  # a component missing from the scan
+            if tuple(seg[7:10]) != (0, 63, 0):
+                return None  # spectral selection / successive approximation
+            if any(q not in qtables for q in qids):
+                return None
+            qt = [qtables[q] for q in qids]
             entropy_start = pos + 2 + seglen
             end = _entropy_end(data, entropy_start)
             if end is None:
                 return None
-            for ci, _, _ in scan:
-                if ci not in latched_qt and comps[ci][3] in qtables:
-                    latched_qt[ci] = qtables[comps[ci][3]]
-            scans.append(
-                (scan, band[0], band[1], band[2] >> 4, band[2] & 0x0F,
-                 data[entropy_start:end], dict(htables))
-            )
+            coefs = np.zeros((3, -(-height // 8), -(-width // 8), 64), np.int64)
+            if not _decode_scan(
+                coefs, scan, htables, _BitReader(data[entropy_start:end])
+            ):
+                return None
             pos = end
             continue
         pos += 2 + seglen
-    if not saw_eoi or width is None or not comps or not scans:
+    if not saw_eoi or coefs is None:
         return None
 
-    ncomp = len(comps)
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = -(-width // (8 * hmax))
-    mcuy = -(-height // (8 * vmax))
-    # per-component MCU-padded block grids (all equal when 1×1 everywhere)
-    coefs = [
-        np.zeros((mcuy * v, mcux * h, 64), np.int64) for _, h, v, _ in comps
-    ]
-    if not progressive:
-        scan, ss, se, ah, al, ent, tabs = scans[0]
-        if len(scans) != 1 or (ss, se, ah, al) != (0, 63, 0, 0):
-            return None
-        if not _decode_baseline_scan(
-            coefs, comps, scan, tabs, _BitReader(ent), mcuy, mcux
-        ):
-            return None
-    else:
-        if hmax != 1 or vmax != 1:
-            return None  # progressive support is 4:4:4 only
-        dc_pred = [0] * ncomp
-        for scan, ss, se, ah, al, ent, tabs in scans:
-            if ss == 0 and ah == 0:
-                for ci, _, _ in scan:
-                    dc_pred[ci] = 0
-            if not _decode_progressive_scan(
-                coefs, scan, ss, se, ah, al, tabs, _BitReader(ent), dc_pred
-            ):
-                return None
-
-    planes = np.zeros((mcuy * vmax * 8, mcux * hmax * 8, ncomp))
-    for ci, (_, h, v, qid) in enumerate(comps):
-        qt = latched_qt.get(ci)
-        if qt is None:
-            return None
-        bh_c, bw_c = coefs[ci].shape[0], coefs[ci].shape[1]
-        plane = np.zeros((bh_c * 8, bw_c * 8))
-        for by in range(bh_c):
-            for bx in range(bw_c):
+    _, bh, bw, _ = coefs.shape
+    planes = np.zeros((bh * 8, bw * 8, 3))
+    for ci in range(3):
+        for by in range(bh):
+            for bx in range(bw):
                 coef = np.zeros(64, np.int64)
-                coef[_ZIGZAG] = coefs[ci][by, bx]
-                plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                    _idct(coef.reshape(8, 8) * qt) + 128.0
+                coef[_ZIGZAG] = coefs[ci, by, bx]
+                planes[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8, ci] = (
+                    _idct(coef.reshape(8, 8) * qt[ci]) + 128.0
                 )
-        # nearest-neighbor chroma upsample back to full resolution
-        if v != vmax:
-            plane = np.repeat(plane, vmax // v, axis=0)
-        if h != hmax:
-            plane = np.repeat(plane, hmax // h, axis=1)
-        planes[:, :, ci] = plane[: planes.shape[0], : planes.shape[1]]
-    planes = planes[:height, :width]
-    if ncomp == 1:
-        rgb = np.repeat(planes, 3, axis=-1)
-    else:
-        rgb = _ycbcr_to_rgb(planes)
+    rgb = _ycbcr_to_rgb(planes[:height, :width])
     out = np.clip(np.floor(rgb + 0.5), 0, 255).astype(np.uint8)
     return width, height, out.tobytes()

@@ -15,7 +15,8 @@ as pagerank.py / hits.py).  Here every stage is exact int64 arithmetic:
      ties toward the smaller centroid id — realized on the Spark side as
      a lexicographic struct(dist, cid) minimum and on the oracle side as
      arg_min on the fused priority dist·TIE_SCALE + cid (identical
-     because dist ≥ 0 and cid < TIE_SCALE);
+     because dist ≥ 0 and cid < TIE_SCALE — kmeans_int8 refuses
+     k ≥ TIE_SCALE, which the adaptive rule reaches at ~4.1e9 vectors);
   4. update: per-dimension integer mean, TRUNCATED TOWARD ZERO (Spark
      div == DuckDB // semantics; the driver-side Python mirrors it with an
      explicit sign split because Python // floors — see
@@ -52,7 +53,8 @@ TWO bit-identical physical plans, chosen by the resolved k:
 
 Scale shape: the corpus is scanned once per iteration either way.
 max |dist| = d·254² ≈ 4.1e6 at d=64, so dist·TIE_SCALE (≤ 4.2e12) and
-all sums sit far inside int64.
+all sums sit far inside int64.  The tie fusion caps k below TIE_SCALE,
+i.e. the adaptive rule serves up to ~4.1e9 vectors.
 """
 
 from __future__ import annotations
@@ -67,7 +69,8 @@ from openie_spark.operators.similarity import quantize_embeddings
 
 KMEANS_K = 8  # floor for adaptive k (and the frozen k of the demo corpora)
 KMEANS_ITERS = 3
-# > any cluster id the adaptive rule can produce below ~4e12 vectors;
+# > any cluster id the adaptive rule produces below ~4.1e9 vectors
+# (k = ceil(n / 4096)); kmeans_int8 refuses k >= TIE_SCALE.
 # dist * TIE_SCALE stays < 4.2e12 at d = 64, far inside int64.
 KMEANS_TIE_SCALE = 1_000_000
 # Adaptive-k target: expected cluster size n/k never exceeds this, which
@@ -253,7 +256,8 @@ def kmeans_int8(
     assignment after ``iters`` exact-integer Lloyd rounds (dist = squared
     L2 in quantized units to the winning centroid).  ``k=None`` resolves
     to ``adaptive_k(count, target_cluster_size)`` — the scale knob;
-    requires at least ``k`` input rows."""
+    requires at least ``k`` input rows and ``k < KMEANS_TIE_SCALE`` (the
+    oracle's fused dist·TIE_SCALE + cid tie rule needs cid < TIE_SCALE)."""
     q = cut_lineage(
         quantize_embeddings(vectors, vec_col, "q_vec").select(
             F.col(id_col).alias("vec_id"), "q_vec"
@@ -264,6 +268,8 @@ def kmeans_int8(
     if k is None:
         n = q.count()
         k = adaptive_k(n, target_cluster_size)
+    if k >= KMEANS_TIE_SCALE:
+        raise ValueError(f"k-means needs k < {KMEANS_TIE_SCALE}, got {k}")
     if k <= literal_max_k:
         # driver-side seeding: collect the k ordered rows directly (their
         # list position IS the cid) — no window needed on this path

@@ -1,33 +1,27 @@
 """Multimodal column plumbing: media as opaque binary + typed metadata.
 
-The container ships no image/audio libraries, so decode is split by
-format capability:
+The container ships no image/audio libraries, so every codec is a
+pure-stdlib kernel scoped to exactly the seven flavors the synthetic
+fetch (``synth_media_bytes``) emits:
 
-  - **REAL image decode** for 24-bit BMP, binary PPM (P6), PNG (all spec
-    bit depths per color type incl. palette and 16-bit, non-interlaced
-    and Adam7), palette GIF (functions/imagecodec.py) and JPEG — baseline
-    4:4:4/4:2:0/4:2:2 AND progressive 4:4:4
-    (functions/jpegcodec.py — full DCT entropy codec, pure stdlib) —
-    header parse, pixel decode (incl. GIF LZW and JPEG Huffman+IDCT),
-    nearest-neighbor resize, and luminance-histogram features all compute
-    from actual pixels, end-to-end through the Spark plan.  The synthetic
-    fetch rotates image payloads over all five containers, so every codec
-    runs e2e in the tests and registry queries.
-  - **REAL audio decode** for RIFF/WAVE PCM16 via functions/audiocodec.py:
-    the synthetic fetch emits genuine WAV payloads, and duration, energy
-    features and per-frame windowed features all compute from actual
-    samples.
+  - **REAL image decode** for binary PPM (P6), 24-bpp BMP, 8-bit RGB
+    non-interlaced PNG, palette GIF (functions/imagecodec.py) and
+    baseline 3-component 4:4:4 JPEG (functions/jpegcodec.py) — header
+    parse, pixel decode, nearest-neighbor resize, and luminance-histogram
+    features all compute from actual pixels, end-to-end through the Spark
+    plan.  The synthetic fetch rotates image payloads over all five
+    containers, so every codec runs e2e in the tests and registry queries.
+  - **REAL audio decode** for PCM16 RIFF/WAVE (the fetch emits mono) via
+    functions/audiocodec.py: duration, energy features and per-frame
+    windowed features all compute from actual samples.
   - **REAL video decode** for YUV4MPEG2 C444 via functions/videocodec.py:
-    genuine y4m payloads; dims, exact duration, poster-frame features and
-    per-instant frame seek + luma features all compute from actual frames.
-  - **REAL header-layer metadata probes** for the remaining compressed
-    formats (functions/mediaprobe.py): MP3 and ADTS-AAC frame walks give
-    exact duration/rate/bitrate, H.264 Annex-B SPS parsing gives exact
-    dims (+fps when VUI timing is present).  Only the parts that need
-    PCM/pixel reconstruction (feature vectors, thumbnails, frame decode)
-    keep **deterministic STUBS** (clearly marked — Huffman/IMDCT/CABAC
-    need codec deps).  Swapping a stub for PIL/ffmpeg changes one inner
-    function, not the plan.
+    dims, exact duration, poster-frame features and per-instant frame
+    seek + luma features all compute from actual frames.
+
+Any other payload (another flavor of these containers, or MP3/AAC/H.264
+and friends) falls through to **deterministic STUBS** (clearly marked).
+Swapping a stub for PIL/soundfile/ffmpeg changes one inner function, not
+the plan.
 
 Everything Spark-side is real and tested either way: schemas, Arrow batch
 shapes, mapInPandas iterator signatures, partition-size controls.
@@ -200,8 +194,8 @@ def synth_media_bytes(kind: str, media_ref: str) -> bytes:
     """SINGLE HOME for the synthetic fetch kernel — the Spark fetch fence
     and the single-process oracle twin (fixtures/gen_media_twin.py) must
     both call this, or the driver hash forks.  All three modalities emit
-    REAL containers (PPM/BMP/PNG/GIF, WAV, y4m); unknown kinds keep the
-    sha256-hexdigest stub payload."""
+    REAL containers (PPM/BMP/PNG/GIF/JPEG, WAV, y4m); unknown kinds keep
+    the sha256-hexdigest stub payload."""
     if kind == "image":
         return _synth_image(media_ref)
     if kind == "audio":
@@ -233,7 +227,7 @@ def fetch_media_bytes(media: DataFrame) -> DataFrame:
 
 
 def _decode_image_stub(content: bytes) -> tuple[int, int]:
-    """STUB for formats without an in-container codec (JPEG/...).
+    """STUB for image flavors without an in-container codec.
     Deterministic fake dimensions derived from the content hash.  Replace
     with PIL: ``img = PIL.Image.open(io.BytesIO(content)); return
     img.size``."""
@@ -243,7 +237,7 @@ def _decode_image_stub(content: bytes) -> tuple[int, int]:
 
 def _duration_stub(content: bytes) -> int:
     """STUB — deterministic fake duration for ANY timed modality whose
-    container neither decodes nor probes (audio and video share it on
+    container does not decode (audio and video share it on
     purpose — the fallback is modality-neutral); replace with
     soundfile/ffmpeg."""
     h = hashlib.sha256(content or b"").digest()
@@ -259,21 +253,19 @@ def _feature_stub(content: bytes, dim: int = FEATURE_DIM) -> list[float]:
 
 
 def decode_media_row(kind: str, content: bytes):
-    """SINGLE HOME for the per-row decode → probe → labeled-stub chain —
-    the Spark fence (decode_media) and the oracle twin
+    """SINGLE HOME for the per-row decode → labeled-stub chain — the
+    Spark fence (decode_media) and the oracle twin
     (fixtures/gen_media_twin.py:media_feature_rows) must BOTH call this,
-    or the driver hash forks the moment a probed format enters the
-    fixture path.  Returns ``(width, height, duration_ms, feature)``
-    with None for fields the format does not carry; ``feature`` is
-    always a FEATURE_DIM float list (real where pixels/PCM decode,
-    the labeled stub otherwise)."""
+    or the two sides' value hashes fork.  Returns ``(width, height,
+    duration_ms, feature)`` with None for fields the format does not
+    carry; ``feature`` is always a FEATURE_DIM float list (real where
+    pixels/PCM decode, the labeled stub otherwise)."""
     from openie_spark.functions.audiocodec import (
         decode_wav,
         pcm_features,
         wav_duration_ms,
     )
     from openie_spark.functions.imagecodec import decode_image, rgb_features
-    from openie_spark.functions.mediaprobe import probe_adts, probe_h264, probe_mp3
     from openie_spark.functions.videocodec import (
         decode_y4m,
         y4m_duration_ms,
@@ -296,14 +288,7 @@ def decode_media_row(kind: str, content: bytes):
             duration = wav_duration_ms(rate, ch, samples)
             feature = pcm_features(samples, ch, FEATURE_DIM)
         else:
-            mp3 = probe_mp3(content)
-            adts = None if mp3 is not None else probe_adts(content)
-            if mp3 is not None:
-                duration = int(mp3[2])  # exact frame-walk ms
-            elif adts is not None:
-                duration = int(adts[3])
-            else:
-                duration = _duration_stub(content)
+            duration = _duration_stub(content)
     elif kind == "video":
         vid = decode_y4m(content)
         if vid is not None:
@@ -314,12 +299,7 @@ def decode_media_row(kind: str, content: bytes):
             # first frame's luma profile
             feature = y_features(w, h, frames[0], FEATURE_DIM)
         else:
-            h264 = probe_h264(content)
-            if h264 is not None:
-                width, height, _nf, dur = h264
-                duration = None if dur is None else int(dur)
-            else:
-                duration = _duration_stub(content)
+            duration = _duration_stub(content)
     if feature is None:
         feature = _feature_stub(content)
     return width, height, duration, feature
@@ -327,15 +307,11 @@ def decode_media_row(kind: str, content: bytes):
 
 def decode_media(media_with_bytes: DataFrame) -> DataFrame:
     """mapInPandas decode/feature-extraction over Arrow batches.  Images
-    in a supported format (BMP/PPM/PNG/GIF) get a REAL decode + pixel
+    in a supported flavor (PPM/BMP/PNG/GIF/JPEG) get a REAL decode + pixel
     features; WAV audio a REAL decode + sample-energy features; y4m video
-    a REAL decode + dims/duration/poster-frame luma features.  Compressed
-    formats without an in-container codec run the REAL header-layer
-    probes (functions/mediaprobe.py: MP3/ADTS frame walks, H.264 SPS
-    parse) for exact duration/rate/dims metadata — only the feature
-    vector (which needs PCM/pixels) falls back to the labeled stub there.
-    Unparseable bytes fall through to the stubs.  The per-row chain is
-    one-homed in ``decode_media_row`` (shared with the oracle twin)."""
+    a REAL decode + dims/duration/poster-frame luma features.  Anything
+    else falls through to the stubs.  The per-row chain is one-homed in
+    ``decode_media_row`` (shared with the oracle twin)."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -366,16 +342,16 @@ def decode_media(media_with_bytes: DataFrame) -> DataFrame:
 
 
 def media_feature_stage(docs: DataFrame) -> DataFrame:
-    """Full media path: explode → synthetic fetch → decode (real for
-    BMP/PPM/PNG/GIF images and WAV audio; labeled stubs otherwise) →
+    """Full media path: explode → synthetic fetch → decode (real for the
+    supported image/audio/video flavors; labeled stubs otherwise) →
     features."""
     return decode_media(fetch_media_bytes(media_spans(docs)))
 
 
 # ---------------------------------------------------------------------------
-# resize / frame-sample (BMP/PPM/PNG/GIF resize is REAL pixels; other formats keep
-# the stub discipline: Spark plumbing real, codec kernels replaceable one
-# function at a time)
+# resize / frame-sample (PPM/BMP/PNG/GIF/JPEG resize is REAL pixels; other
+# formats keep the stub discipline: Spark plumbing real, codec kernels
+# replaceable one function at a time)
 # ---------------------------------------------------------------------------
 
 RESIZED_SCHEMA = StructType(
@@ -429,9 +405,9 @@ def thumbnail_row(content: bytes, max_side: int):
 
 def resize_images(media_with_bytes: DataFrame, max_side: int = 256) -> DataFrame:
     """Aspect-preserving thumbnail pass over image spans (mapInPandas).
-    Supported formats (BMP/PPM/PNG/GIF/JPEG) run a REAL nearest-neighbor
-    downscale and emit the thumbnail re-encoded as PPM; unknown formats
-    use the stub.  Per-image chain one-homed in ``thumbnail_row``."""
+    Supported flavors (PPM/BMP/PNG/GIF/JPEG) run a REAL nearest-neighbor
+    downscale and emit the thumbnail re-encoded as PPM; anything else
+    uses the stub.  Per-image chain one-homed in ``thumbnail_row``."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -533,7 +509,7 @@ def sample_frames(
     """Uniform frame sampling over audio/video spans: one output row per
     sampled frame with a per-frame feature vector (mapInPandas).  WAV
     audio and y4m video run REAL per-instant features (see
-    sampled_frame_rows); compressed formats keep the stub (replace with
+    sampled_frame_rows); anything else keeps the stub (replace with
     ffmpeg seek+decode)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -54,7 +54,11 @@ def disc_percentiles(
     nn = F.when(F.col(val_col).isNotNull(), F.col("_c")).otherwise(F.lit(0))
     h = df.groupBy(*keys, val_col).agg(F.count("*").alias("_c"))
     by = Window.partitionBy(*keys)
-    cum_w = by.orderBy(val_col).rowsBetween(Window.unboundedPreceding, 0)
+    # NULLS FIRST: the null-group row then sits before every value, so
+    # its _cum is 0 and the non-null cumulative counts exclude it
+    cum_w = by.orderBy(F.col(val_col).asc_nulls_first()).rowsBetween(
+        Window.unboundedPreceding, 0
+    )
     h = (
         h.withColumn("_cum", F.sum(nn).over(cum_w))
         .withColumn("_n", F.sum("_c").over(by))

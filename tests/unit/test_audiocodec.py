@@ -1,5 +1,5 @@
 """WAV codec (functions/audiocodec.py): round-trip bit-exactness, chunk
-walking, unsupported-format refusal, and feature determinism."""
+walking, refusal of every flavor but PCM16, and feature determinism."""
 
 from __future__ import annotations
 
@@ -52,14 +52,19 @@ def test_refuses_non_wav_and_non_pcm16():
     assert decode_wav(b"") is None
     assert decode_wav(b"not a wav at all") is None
     assert decode_wav(b"RIFF\x00\x00\x00\x00JUNK") is None
-    # non-spec sample width / compressed fmt refused (caller falls back
-    # to the stub); 8-bit is now a SUPPORTED width (see the widened-WAV
-    # tests below), so the refusal pin uses 12-bit instead
+    # every sample width but 16 and every format but PCM refuse (caller
+    # falls back to the stub): the synth stream, header-patched
+    for bits in (8, 12, 24, 32):
+        buf = bytearray(encode_wav(8000, np.arange(10, dtype=np.int16)))
+        buf[34] = bits  # bits-per-sample field
+        assert decode_wav(bytes(buf)) is None, bits
+    for fmt in (2, 3, 7):  # ADPCM, IEEE float, mu-law
+        buf = bytearray(encode_wav(8000, np.arange(10, dtype=np.int16)))
+        buf[20] = fmt  # audio_format
+        assert decode_wav(bytes(buf)) is None, fmt
+    # a zero sample rate has no duration
     buf = bytearray(encode_wav(8000, np.arange(10, dtype=np.int16)))
-    buf[34] = 12  # bits-per-sample field
-    assert decode_wav(bytes(buf)) is None
-    buf = bytearray(encode_wav(8000, np.arange(10, dtype=np.int16)))
-    buf[20] = 2  # audio_format = ADPCM
+    buf[24:28] = bytes(4)
     assert decode_wav(bytes(buf)) is None
     # truncated data chunk
     assert decode_wav(encode_wav(8000, np.arange(10, dtype=np.int16))[:-4]) is None
@@ -89,83 +94,20 @@ def test_synth_audio_is_real_wav(spark):
     assert decode_wav(synth_media_bytes("video", "s3://bucket/v-1")) is None
 
 
-# ---------------------------------------------------------------------------
-# Widened WAV decode (round 5): PCM 8/24/32-bit, IEEE float32, and
-# WAVE_FORMAT_EXTENSIBLE — all rendered to the int16 contract.  Streams
-# are built by a test-local writer so every expectation is constructed.
-# ---------------------------------------------------------------------------
-
-
-def _wav(fmt, channels, rate, bits, data, extensible=False) -> bytes:
-    import struct
-
-    if extensible:
-        sub = (
-            struct.pack("<H", fmt)
-            + b"\x00\x00"
-            + b"\x00\x00\x10\x00\x80\x00\x00\xaa\x00\x38\x9b\x71"
-        )
-        fchunk = (
-            struct.pack("<4sIHHIIHH", b"fmt ", 40, 0xFFFE, channels, rate, 0, 0, bits)
-            + struct.pack("<HHI", 22, bits, 0)
-            + sub
-        )
-    else:
-        fchunk = struct.pack("<4sIHHIIHH", b"fmt ", 16, fmt, channels, rate, 0, 0, bits)
-    body = (
-        b"WAVE"
-        + fchunk
-        + struct.pack("<4sI", b"data", len(data))
-        + data
-        + (b"\x00" if len(data) % 2 else b"")
-    )
-    return struct.pack("<4sI", b"RIFF", len(body)) + body
-
-
-def test_wav_pcm8_recentered_and_widened():
-    r = decode_wav(_wav(1, 1, 8000, 8, bytes([0, 128, 255, 200])))
-    assert r is not None
-    assert list(r[2]) == [(-128) << 8, 0, 127 << 8, 72 << 8]
-
-
-def test_wav_pcm24_and_pcm32_high_16_bits():
-    import struct
-
-    vals = [0x123456, 0xFFFF00, 0x800000, 0x7FFFFF]
-    data24 = b"".join(struct.pack("<I", v)[:3] for v in vals)
-    r = decode_wav(_wav(1, 1, 8000, 24, data24))
-    exp = [(v >> 8) if v < (1 << 23) else ((v >> 8) - (1 << 16)) for v in vals]
-    assert list(r[2]) == exp
-    i32 = np.array([0, 1 << 16, -(1 << 16), 0x7FFFFFFF, -0x80000000], "<i4")
-    r = decode_wav(_wav(1, 1, 8000, 32, i32.tobytes()))
-    assert list(r[2]) == [0, 1, -1, 0x7FFF, -0x8000]
-
-
-def test_wav_float32_clip_and_scale_half_up():
-    f = np.array([0.0, 0.5, -0.5, 2.0, -2.0, 1.0, -1.0], "<f4")
-    r = decode_wav(_wav(3, 1, 8000, 32, f.tobytes()))
-    assert list(r[2]) == [0, 16384, -16383, 32767, -32767, 32767, -32767]
-
-
 def test_wav_extensible_wrapper_and_compressed_refusals():
-    s = np.array([5, -7, 300], "<i2")
-    r = decode_wav(_wav(1, 2, 16000, 16, s.tobytes() + s.tobytes(), extensible=True))
-    assert r is not None and r[0] == 16000 and r[1] == 2
-    f = np.array([0.25, -0.25], "<f4")
-    r = decode_wav(_wav(3, 1, 16000, 32, f.tobytes(), extensible=True))
-    # 0.25*32767 = 8191.75 -> half-up 8192; -8191.75 + 0.5 floors to -8192
-    assert list(r[2]) == [8192, -8192]
-    assert decode_wav(_wav(2, 1, 8000, 4, b"\x00" * 16)) is None  # ADPCM
-    assert decode_wav(_wav(7, 1, 8000, 8, b"\x00" * 16)) is None  # mu-law
-    assert decode_wav(_wav(1, 1, 8000, 12, b"\x00" * 16)) is None  # odd width
-
-
-def test_wav_float32_nonfinite_samples_canonicalized():
-    """NaN / ±inf float samples must decode deterministically (NaN → 0,
-    ±inf → full scale) — a raw astype on NaN is C-undefined and varies
-    across hosts, which would break the cross-host fingerprint
-    contract."""
-    f = np.array([np.nan, np.inf, -np.inf, 0.5], "<f4")
-    r = decode_wav(_wav(3, 1, 8000, 32, f.tobytes()))
-    assert r is not None
-    assert list(r[2]) == [0, 32767, -32767, 16384]
+    """WAVE_FORMAT_EXTENSIBLE (0xFFFE) wrapping PCM16 and compressed
+    formats are outside the decode scope: each refuses, never raises."""
+    s16 = np.array([5, -7, 300], "<i2").tobytes()
+    sub = struct.pack("<H", 1) + b"\x00\x00" + bytes(12)  # SubFormat GUID
+    fchunk = (
+        struct.pack("<4sIHHIIHH", b"fmt ", 40, 0xFFFE, 1, 16000, 0, 0, 16)
+        + struct.pack("<HHI", 22, 16, 0)
+        + sub
+    )
+    body = b"WAVE" + fchunk + struct.pack("<4sI", b"data", len(s16)) + s16
+    assert decode_wav(struct.pack("<4sI", b"RIFF", len(body)) + body) is None
+    for fmt, bits in ((2, 4), (6, 8), (7, 8)):  # ADPCM, a-law, mu-law
+        buf = bytearray(encode_wav(8000, np.arange(8, dtype=np.int16)))
+        struct.pack_into("<H", buf, 20, fmt)
+        struct.pack_into("<H", buf, 34, bits)
+        assert decode_wav(bytes(buf)) is None, fmt

@@ -1,7 +1,8 @@
 """Pure-stdlib image codec (functions/imagecodec.py): encode/decode
-round-trips for BMP and PPM, nearest-neighbor resize geometry, pixel
-features, and the end-to-end REAL decode through the multimodal Spark
-path (the synthetic fetch emits genuine PPM payloads for image spans)."""
+round-trips for PPM, BMP, PNG and GIF, refusal of every other flavor,
+nearest-neighbor resize geometry, pixel features, and the end-to-end
+REAL decode through the multimodal Spark path (the synthetic fetch emits
+genuine payloads for image spans)."""
 
 from __future__ import annotations
 
@@ -61,6 +62,11 @@ def test_decode_image_sniffs_and_rejects():
     # truncated raster must not crash, just refuse
     assert decode_ppm(encode_ppm(4, 3, rgb)[:-5]) is None
     assert decode_bmp(encode_bmp(4, 3, rgb)[:-5]) is None
+    # BMP bit depths other than 24 (32 bpp BGRX, 8 bpp palette) refuse
+    for bpp in (32, 8):
+        patched = bytearray(encode_bmp(4, 3, rgb))
+        patched[28] = bpp  # DIB biBitCount
+        assert decode_bmp(bytes(patched)) is None, bpp
 
 
 def test_resize_nearest_geometry_and_identity():
@@ -142,21 +148,24 @@ def _png_chunk(typ: bytes, payload: bytes) -> bytes:
     )
 
 
-def _build_png(w, h, channels, color_type, raster_rows):
-    """Hand-assemble a PNG from pre-filtered scanlines (filter byte +
-    row bytes each) — exercises exactly the wire format the decoder sees."""
+def _png_build(w, h, depth, color, interlace, raster, plte=None) -> bytes:
     import struct
     import zlib
 
     from openie_spark.functions.imagecodec import _PNG_SIG
 
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(b"".join(raster_rows)))
-        + _png_chunk(b"IEND", b"")
-    )
+    ihdr = struct.pack(">IIBBBBB", w, h, depth, color, 0, 0, interlace)
+    out = _PNG_SIG + _png_chunk(b"IHDR", ihdr)
+    if plte is not None:
+        out += _png_chunk(b"PLTE", plte.tobytes())
+    return out + _png_chunk(b"IDAT", zlib.compress(raster)) + _png_chunk(b"IEND", b"")
+
+
+def _png_rows(samples2d, depth) -> bytes:
+    """Filter-0 scanlines of 8- or 16-bit samples (one row per line)."""
+    if depth == 16:
+        samples2d = (samples2d.astype(np.uint16) * 257).astype(">u2")
+    return b"".join(b"\x00" + row.tobytes() for row in samples2d)
 
 
 def _forward_filter(f, row, prev, bpp):
@@ -205,27 +214,8 @@ def test_png_all_filters_reconstruct():
         for y in range(h):
             rows.append(_forward_filter(f, pixels[y], prev, bpp))
             prev = pixels[y]
-        got = decode_png(_build_png(w, h, bpp, 2, rows))
+        got = decode_png(_png_build(w, h, 8, 2, 0, b"".join(rows)))
         assert got is not None and got[2] == b"".join(pixels), f"filter {f}"
-
-
-def test_png_grey_and_rgba():
-    from openie_spark.functions.imagecodec import decode_png
-
-    # greyscale replicates into RGB
-    w, h = 4, 3
-    grey = bytes(range(w * h))
-    rows = [bytes([0]) + grey[y * w : (y + 1) * w] for y in range(h)]
-    got = decode_png(_build_png(w, h, 1, 0, rows))
-    assert got is not None
-    assert got[2] == b"".join(bytes([g, g, g]) for g in grey)
-    # RGBA drops alpha
-    rgba = bytes((x * 5) % 256 for x in range(w * h * 4))
-    rows = [bytes([0]) + rgba[y * w * 4 : (y + 1) * w * 4] for y in range(h)]
-    got = decode_png(_build_png(w, h, 4, 6, rows))
-    assert got is not None
-    expect = b"".join(rgba[i : i + 3] for i in range(0, len(rgba), 4))
-    assert got[2] == expect
 
 
 def test_png_rejects_unsupported():
@@ -233,16 +223,28 @@ def test_png_rejects_unsupported():
 
     from openie_spark.functions.imagecodec import _PNG_SIG, decode_image, decode_png
 
+    from openie_spark.functions.imagecodec import encode_png
+
     # palette (color type 3) and 16-bit fall through to None
     for bitdepth, color in ((8, 3), (16, 2)):
         ihdr = struct.pack(">IIBBBBB", 2, 2, bitdepth, color, 0, 0, 0)
         data = _PNG_SIG + _png_chunk(b"IHDR", ihdr) + _png_chunk(b"IEND", b"")
         assert decode_png(data) is None
     assert decode_png(b"nope") is None
+    # every flavor but 8-bit RGB non-interlaced refuses: the synth stream
+    # with its IHDR patched (bit depth, color type, interlace bytes)
+    synth = encode_png(2, 2, bytes(12))
+    ihdr = len(_PNG_SIG) + 8
+    for field, value in (
+        (8, 16), (8, 4), (8, 1),  # 16-bit, sub-8-bit
+        (9, 0), (9, 3), (9, 4), (9, 6),  # grey, palette, grey+alpha, RGBA
+        (12, 1),  # Adam7 interlace
+    ):
+        patched = bytearray(synth)
+        patched[ihdr + field] = value
+        assert decode_image(bytes(patched)) is None, (field, value)
     # sniffing dispatch
-    from openie_spark.functions.imagecodec import encode_png
-
-    assert decode_image(encode_png(2, 2, bytes(12)))[0] == 2
+    assert decode_image(synth)[0] == 2
 
 
 def test_png_malformed_falls_through_to_none():
@@ -340,139 +342,13 @@ def test_gif_malformed_falls_through_to_none():
         encode_gif(32, 32, true_color)
 
 
-# ---------------------------------------------------------------------------
-# Widened PNG decode (round 5): palette / 16-bit / sub-8-bit / grey+alpha /
-# Adam7 interlace.  Streams are built by a test-local writer (filter 0, one
-# IDAT) so every expectation is independently constructed.
-# ---------------------------------------------------------------------------
-
-_ADAM7 = (
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-)
-
-
-def _png_chunk(typ: bytes, payload: bytes) -> bytes:
-    import struct
-    import zlib
-
-    return (
-        struct.pack(">I", len(payload)) + typ + payload
-        + struct.pack(">I", zlib.crc32(typ + payload) & 0xFFFFFFFF)
-    )
-
-
-def _png_build(w, h, depth, color, interlace, raster, plte=None) -> bytes:
-    import struct
-    import zlib
-
-    from openie_spark.functions.imagecodec import _PNG_SIG
-
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, color, 0, 0, interlace)
-    out = _PNG_SIG + _png_chunk(b"IHDR", ihdr)
-    if plte is not None:
-        out += _png_chunk(b"PLTE", plte.tobytes())
-    return out + _png_chunk(b"IDAT", zlib.compress(raster)) + _png_chunk(b"IEND", b"")
-
-
-def _png_rows(samples2d, depth) -> bytes:
-    import struct
-
-    h = samples2d.shape[0]
-    rows = []
-    for y in range(h):
-        row = samples2d[y]
-        if depth == 8:
-            rb = row.astype(np.uint8).tobytes()
-        elif depth == 16:
-            rb = b"".join(struct.pack(">H", int(v) * 257) for v in row)
-        else:
-            bits = np.zeros(((len(row) * depth + 7) // 8) * 8, np.uint8)
-            for i, v in enumerate(row):
-                for b in range(depth):
-                    bits[i * depth + b] = (int(v) >> (depth - 1 - b)) & 1
-            rb = np.packbits(bits).tobytes()
-        rows.append(b"\x00" + rb)
-    return b"".join(rows)
-
-
-def _png_adam7_raster(img, depth, channels) -> bytes:
-    parts = []
-    for x0, y0, dx, dy in _ADAM7:
-        sub = img[y0::dy, x0::dx]
-        if sub.shape[0] == 0 or sub.shape[1] == 0:
-            continue
-        parts.append(_png_rows(sub.reshape(sub.shape[0], sub.shape[1] * channels), depth))
-    return b"".join(parts)
-
-
-def test_png_16bit_palette_subbit_and_grey_alpha():
-    import random
-
-    from openie_spark.functions.imagecodec import decode_png
-
-    rng = random.Random(1)
-    w, h = 13, 9
-    rgb = np.array(
-        [[[rng.randrange(256) for _ in range(3)] for _ in range(w)] for _ in range(h)],
-        np.uint8,
-    )
-    out = decode_png(_png_build(w, h, 16, 2, 0, _png_rows(rgb.reshape(h, w * 3), 16)))
-    assert out is not None and out[:2] == (w, h) and out[2] == rgb.tobytes()
-
-    plte = np.array(
-        [[rng.randrange(256) for _ in range(3)] for _ in range(16)], np.uint8
-    )
-    idx = np.array([[rng.randrange(16) for _ in range(w)] for _ in range(h)], np.uint8)
-    out = decode_png(_png_build(w, h, 4, 3, 0, _png_rows(idx, 4), plte))
-    assert out is not None and out[2] == plte[idx].tobytes()
-
-    for d in (1, 2, 4):
-        g = np.array(
-            [[rng.randrange(1 << d) for _ in range(w)] for _ in range(h)], np.uint8
-        )
-        out = decode_png(_png_build(w, h, d, 0, 0, _png_rows(g, d)))
-        want = np.repeat(
-            (g * (255 // ((1 << d) - 1))).astype(np.uint8)[:, :, None], 3, axis=2
-        )
-        assert out is not None and out[2] == want.tobytes(), d
-
-    ga = np.array(
-        [[[rng.randrange(256), rng.randrange(256)] for _ in range(w)] for _ in range(h)],
-        np.uint8,
-    )
-    out = decode_png(_png_build(w, h, 8, 4, 0, _png_rows(ga.reshape(h, w * 2), 8)))
-    assert out is not None and out[2] == np.repeat(ga[:, :, :1], 3, axis=2).tobytes()
-
-
-def test_png_adam7_interlace_exact():
-    import random
-
-    from openie_spark.functions.imagecodec import decode_png
-
-    rng = random.Random(2)
-    for w, h in ((13, 9), (1, 1), (8, 8), (16, 5), (3, 17)):
-        img = np.array(
-            [[[rng.randrange(256) for _ in range(3)] for _ in range(w)] for _ in range(h)],
-            np.uint8,
-        )
-        out = decode_png(_png_build(w, h, 8, 2, 1, _png_adam7_raster(img, 8, 3)))
-        assert out is not None and out[:2] == (w, h) and out[2] == img.tobytes(), (w, h)
-    plte = np.array([[10, 20, 30], [200, 100, 0], [0, 0, 255], [255, 255, 255]], np.uint8)
-    idx = np.array([[rng.randrange(4) for _ in range(11)] for _ in range(7)], np.uint8)
-    out = decode_png(
-        _png_build(11, 7, 2, 3, 1, _png_adam7_raster(idx[:, :, None], 2, 1), plte)
-    )
-    assert out is not None and out[2] == plte[idx].tobytes()
-
-
 def test_png_refusals_and_fuzz_safety():
     """Palette stream without PLTE, index past the palette end, bad
-    interlace mode → None; truncations and random bit flips of the new
-    flavors must refuse or decode, never raise."""
+    interlace mode → None; truncations and random bit flips of the synth
+    flavor and of refused flavors must refuse or decode, never raise."""
     import random
 
-    from openie_spark.functions.imagecodec import decode_png
+    from openie_spark.functions.imagecodec import decode_png, encode_png
 
     rng = random.Random(3)
     z4 = np.zeros((4, 4), np.uint8)
@@ -491,7 +367,8 @@ def test_png_refusals_and_fuzz_safety():
         np.uint8,
     )
     payloads = [
-        _png_build(9, 7, 8, 2, 1, _png_adam7_raster(img, 8, 3)),
+        encode_png(9, 7, img.tobytes()),
+        _png_build(9, 7, 8, 2, 1, _png_rows(img.reshape(7, 27), 8)),
         _png_build(9, 7, 16, 2, 0, _png_rows(img.reshape(7, 27), 16)),
     ]
     for buf in payloads:
@@ -501,54 +378,3 @@ def test_png_refusals_and_fuzz_safety():
             b = bytearray(buf)
             b[rng.randrange(len(b))] = rng.randrange(256)
             decode_png(bytes(b))  # must not raise
-
-
-def test_bmp_32bpp_and_8bpp_palette():
-    """Widened BMP decode (round 5): 32 bpp BGRX (padding byte dropped)
-    and 8 bpp palette via the BGRX color table, both bottom-up and
-    top-down; palette-index overflow refuses."""
-    import random
-    import struct
-
-    from openie_spark.functions.imagecodec import decode_bmp
-
-    rng = random.Random(4)
-    w, h = 5, 3
-
-    def bmp(bpp, pixel_rows, h_field, table=b""):
-        stride = ((bpp // 8) * w + 3) & ~3
-        body = b"".join(r + b"\x00" * (stride - len(r)) for r in pixel_rows)
-        off = 14 + 40 + len(table)
-        hdr = b"BM" + struct.pack("<IHHI", off + len(body), 0, 0, off)
-        dib = struct.pack(
-            "<IiiHHIIiiII", 40, w, h_field, 1, bpp, 0, len(body), 0, 0,
-            len(table) // 4, 0
-        )
-        return hdr + dib + table + body
-
-    rgb = np.array(
-        [[[rng.randrange(256) for _ in range(3)] for _ in range(w)] for _ in range(h)],
-        np.uint8,
-    )
-    # 32 bpp top-down: BGRX quads
-    rows32 = [
-        b"".join(bytes([int(p[2]), int(p[1]), int(p[0]), 0xAA]) for p in row)
-        for row in rgb
-    ]
-    out = decode_bmp(bmp(32, rows32, -h))
-    assert out is not None and out[:2] == (w, h) and out[2] == rgb.tobytes()
-    # 32 bpp bottom-up: rows stored last-first
-    out = decode_bmp(bmp(32, rows32[::-1], h))
-    assert out is not None and out[2] == rgb.tobytes()
-    # 8 bpp palette, bottom-up
-    palette = np.array(
-        [[rng.randrange(256) for _ in range(3)] for _ in range(7)], np.uint8
-    )
-    table = b"".join(bytes([int(c[2]), int(c[1]), int(c[0]), 0]) for c in palette)
-    idx = np.array([[rng.randrange(7) for _ in range(w)] for _ in range(h)], np.uint8)
-    rows8 = [r.tobytes() for r in idx[::-1]]
-    out = decode_bmp(bmp(8, rows8, h, table))
-    assert out is not None and out[2] == palette[idx].tobytes()
-    # palette-index overflow refused
-    bad = np.full((h, w), 9, np.uint8)
-    assert decode_bmp(bmp(8, [r.tobytes() for r in bad], -h, table)) is None

@@ -1,17 +1,12 @@
 """JPEG codec (functions/jpegcodec.py): baseline round-trip error bounds,
-hand-computable flat blocks, progressive (SOF2) decode pinned
-bit-identical to baseline, marker/unsupported-flavor refusals, and the
+hand-computable flat blocks, marker/unsupported-flavor refusals, and the
 decode_image dispatch."""
 
 from __future__ import annotations
 
 import numpy as np
 
-from openie_spark.functions.jpegcodec import (
-    decode_jpeg,
-    encode_jpeg,
-    encode_jpeg_progressive,
-)
+from openie_spark.functions.jpegcodec import decode_jpeg, encode_jpeg
 
 
 def _rt(w, h, rgb: bytes):
@@ -75,18 +70,19 @@ def test_refusals():
     assert decode_jpeg(b"") is None
     assert decode_jpeg(b"\x00\x01") is None
     buf = encode_jpeg(8, 8, bytes(8 * 8 * 3))
-    # a baseline stream relabeled SOF2 is MALFORMED progressive (its one
-    # scan spans Ss=0..Se=63; progressive DC scans must have Se=0) — the
-    # decoder supports real SOF2 but must refuse this scan script
+    # progressive (SOF2) frames are outside the decode scope
     assert decode_jpeg(buf.replace(b"\xff\xc0", b"\xff\xc2", 1)) is None
     # truncated entropy data refused
     assert decode_jpeg(buf[: len(buf) // 2]) is None
-    # relabeling a 4:4:4 stream's luma as 2x2-sampled makes the entropy
-    # data too short for the claimed MCU structure (6 blocks/MCU vs the 3
-    # that were coded) — must refuse, not mis-decode
+    # chroma subsampling is outside the decode scope: a 2x2 luma
+    # sampling byte refuses (4:2:0 / 4:2:2 streams carry it)
     sof = buf.find(b"\xff\xc0")
     patched = bytearray(buf)
     patched[sof + 11] = 0x22  # component 1 h/v factors
+    assert decode_jpeg(bytes(patched)) is None
+    # single-component (greyscale) frames are outside the decode scope
+    patched = bytearray(buf)
+    patched[sof + 9] = 1  # SOF component count
     assert decode_jpeg(bytes(patched)) is None
 
 
@@ -124,50 +120,6 @@ def test_zrl_long_zero_run_round_trip():
     assert np.abs(got - want).max() <= 40  # late-spectrum quant is coarser
 
 
-def test_grayscale_single_component_decode():
-    # Our encoder always writes 3 components; craft a minimal 1-component
-    # baseline stream by hand from the module's own tables to exercise the
-    # decoder's ncomp==1 branch (Y replicated to RGB).
-    import struct as _struct
-
-    from openie_spark.functions import jpegcodec as J
-
-    level = 77
-    block = np.full((8, 8), float(level)) - 128.0
-    zz = J._quantize(J._fdct(block)).reshape(64)[J._ZIGZAG]
-    w = J._BitWriter()
-    size = J._size_cat(int(zz[0]))
-    code, length = J._DC_ENC[size]
-    w.write(code, length)
-    if size:
-        v = int(zz[0])
-        w.write(v if v >= 0 else v + (1 << size) - 1, size)
-    code, length = J._AC_ENC[0x00]  # flat block: EOB immediately
-    w.write(code, length)
-    entropy = w.flush()
-    qzz = bytes(int(J._QTABLE.reshape(64)[z]) for z in J._ZIGZAG)
-    buf = b"".join(
-        [
-            b"\xff\xd8",
-            _struct.pack(">HH", 0xFFDB, 67) + b"\x00" + qzz,
-            _struct.pack(">HHBHHB", 0xFFC0, 11, 8, 8, 8, 1)
-            + bytes([1, 0x11, 0]),
-            J._dht_segment(0, 0, J._DC_BITS, J._DC_SYMBOLS),
-            J._dht_segment(1, 0, J._AC_BITS, J._AC_SYMBOLS),
-            _struct.pack(">HHB", 0xFFDA, 8, 1) + bytes([1, 0x00, 0, 63, 0]),
-            entropy,
-            b"\xff\xd9",
-        ]
-    )
-    out = decode_jpeg(buf)
-    assert out is not None
-    dw, dh, rgb = out
-    assert (dw, dh) == (8, 8)
-    px = np.frombuffer(rgb, np.uint8).reshape(8, 8, 3)
-    assert np.abs(px.astype(np.int64) - level).max() <= 1
-    assert (px[..., 0] == px[..., 1]).all() and (px[..., 0] == px[..., 2]).all()
-
-
 def test_refusals_dri_and_16bit_dqt():
     import struct as _struct
 
@@ -184,14 +136,12 @@ def test_refusals_dri_and_16bit_dqt():
 
 
 def test_refusals_all_unsupported_sof_flavors():
-    """Every frame marker outside SOF0/SOF2 — extended sequential,
-    lossless, differential, and all arithmetic-coded flavors — must
-    refuse (None), never raise: refused images fall back to the labeled
-    stub in the media pipeline.  (0xC2 progressive is now SUPPORTED and
-    covered by the round-trip tests; a baseline stream relabeled 0xC2
-    still refuses as a malformed scan script — see test_refusals.)"""
+    """Every frame marker outside SOF0 — extended sequential,
+    progressive, lossless, differential, and all arithmetic-coded
+    flavors — must refuse (None), never raise: refused images fall back
+    to the labeled stub in the media pipeline."""
     buf = encode_jpeg(8, 8, bytes([90, 100, 110]) * 64)
-    for sof in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
+    for sof in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
                 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
         assert decode_jpeg(buf.replace(b"\xff\xc0", bytes([0xFF, sof]), 1)) is None, hex(sof)
 
@@ -227,264 +177,53 @@ def test_refusals_structured_malformations_refuse_not_raise():
 
 
 def test_refused_jpeg_falls_back_to_labeled_stub_in_media_chain():
-    """A REFUSED JPEG (here: a malformed progressive scan script) through
-    the one-homed per-row decode chain (decode_media_row) must land on
-    the deterministic stub dims + stub feature — the honest capability
-    boundary — instead of raising; a REAL progressive JPEG must decode
-    for real, identically to its baseline twin."""
+    """A REFUSED JPEG (here: the synth stream relabeled progressive)
+    through the one-homed per-row decode chain (decode_media_row) must
+    land on the deterministic stub dims + stub feature — the honest
+    capability boundary — instead of raising."""
     from openie_spark.operators.multimodal import (
         FEATURE_DIM,
         _decode_image_stub,
+        _feature_stub,
         decode_media_row,
     )
 
     buf = encode_jpeg(8, 8, bytes([10, 20, 30]) * 64)
-    malformed = buf.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    width, height, duration, feature = decode_media_row("image", malformed)
-    assert (width, height) == _decode_image_stub(malformed)
-    assert duration is None and len(feature) == FEATURE_DIM
+    refused = buf.replace(b"\xff\xc0", b"\xff\xc2", 1)
+    width, height, duration, feature = decode_media_row("image", refused)
+    assert (width, height) == _decode_image_stub(refused)
+    assert duration is None and feature == _feature_stub(refused)
+    assert len(feature) == FEATURE_DIM
     # the baseline original really decodes (8x8, real feature)
     w2, h2, _, f2 = decode_media_row("image", buf)
     assert (w2, h2) == (8, 8) and f2 != feature
-    # and a REAL progressive stream decodes to the SAME real feature
-    prog = encode_jpeg_progressive(8, 8, bytes([10, 20, 30]) * 64)
-    w3, h3, _, f3 = decode_media_row("image", prog)
-    assert (w3, h3) == (8, 8) and f3 == f2
-
-
-def test_progressive_roundtrip_bit_identical_to_baseline():
-    """encode_jpeg_progressive carries the same quantized coefficients as
-    encode_jpeg, so decoding its 8-scan script (DC first/refine at Al=1,
-    per-component AC first/refine with cross-block EOB runs) must be
-    BIT-IDENTICAL to decoding the baseline stream — across noise (dense
-    coefficients, ZRLs), flat (long EOB runs spanning blocks), gradients,
-    and stripes, at sizes that are and are not multiples of 8."""
-    import random
-
-    rng = random.Random(11)
-    for trial in range(16):
-        w, h = rng.randint(1, 48), rng.randint(1, 48)
-        kind = trial % 4
-        if kind == 0:
-            rgb = bytes(rng.randrange(256) for _ in range(w * h * 3))
-        elif kind == 1:
-            rgb = bytes([rng.randrange(256)] * 3) * (w * h)
-        elif kind == 2:
-            a = np.fromfunction(lambda y, x, c: (x * 7 + y * 5 + c * 40) % 256, (h, w, 3))
-            rgb = a.astype(np.uint8).tobytes()
-        else:
-            a = np.zeros((h, w, 3), np.uint8)
-            a[::2] = 255
-            rgb = a.tobytes()
-        base = decode_jpeg(encode_jpeg(w, h, rgb))
-        prog = decode_jpeg(encode_jpeg_progressive(w, h, rgb))
-        assert base is not None and prog == base, (trial, w, h, kind)
 
 
 def test_progressive_scan_script_refusals():
-    """Spec-invalid progressive scan scripts must refuse, not raise:
-    DC scans with Se != 0, AC scans naming more than one component, and
-    refinement symbols coding magnitudes beyond 1."""
+    """Progressive scan scripts are outside the decode scope: a SOF2
+    frame refuses whatever its scans look like — a DC-first scan
+    (Ss=Se=0, Al=1), a single-component AC scan, or a full-band one —
+    and so does a baseline frame carrying a progressive scan header."""
     import struct as _struct
 
-    buf = encode_jpeg_progressive(8, 8, bytes([50, 60, 70]) * 64)
-    # patch the first AC scan's header (Ss=1) to name 2 components: the
-    # scan headers are unique byte strings we can locate directly
-    one_comp_sos = _struct.pack(">HH", 0xFFDA, 2 + 1 + 2 + 3) + bytes(
-        [1, 1, 0x00, 1, 63, 0x01]
+    buf = encode_jpeg(8, 8, bytes([50, 60, 70]) * 64)
+    sos = _struct.pack(">HHB", 0xFFDA, 12, 3) + bytes(
+        [1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]
     )
-    assert one_comp_sos in buf
-    two_comp_sos = _struct.pack(">HH", 0xFFDA, 2 + 1 + 4 + 3) + bytes(
-        [2, 1, 0x00, 2, 0x01, 1, 63, 0x01]
-    )
-    patched = buf.replace(one_comp_sos, two_comp_sos, 1)
-    assert decode_jpeg(patched) is None
-    # DC scan with Se=63 (the relabeled-baseline case, pinned directly)
-    dc_sos = _struct.pack(">HH", 0xFFDA, 2 + 1 + 6 + 3) + bytes(
-        [3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 0, 0x01]
-    )
-    assert dc_sos in buf
-    bad_dc = dc_sos[:-3] + bytes([0, 63, 0x01])
-    assert decode_jpeg(buf.replace(dc_sos, bad_dc, 1)) is None
-
-
-def test_420_flat_color_round_trips_exactly():
-    """4:2:0: flat color survives the box-mean downsample + nearest
-    replicate upsample exactly; only quantization (sub-LSB here) remains."""
-    from openie_spark.functions.jpegcodec import encode_jpeg_420
-
-    for color in ((128, 128, 128), (200, 30, 90), (0, 255, 0)):
-        rgb = bytes(color) * (24 * 24)
-        out = decode_jpeg(encode_jpeg_420(24, 24, rgb))
-        assert out is not None and out[:2] == (24, 24)
-        got = np.frombuffer(out[2], np.uint8).astype(int)
-        want = np.frombuffer(rgb, np.uint8).astype(int)
-        assert np.abs(got - want).max() <= 1, color
-
-
-def test_420_mcu_ordering_via_quadrants():
-    """Four flat 16x16 quadrants = one color per MCU: any error in the
-    Y00/Y01/Y10/Y11/Cb/Cr interleave order or the chroma block placement
-    scrambles a quadrant — interiors must decode near-exact in place."""
-    from openie_spark.functions.jpegcodec import encode_jpeg_420
-
-    q = np.zeros((32, 32, 3), np.uint8)
-    q[:16, :16] = (255, 0, 0)
-    q[:16, 16:] = (0, 255, 0)
-    q[16:, :16] = (0, 0, 255)
-    q[16:, 16:] = (255, 255, 0)
-    out = decode_jpeg(encode_jpeg_420(32, 32, q.tobytes()))
-    assert out is not None
-    d = np.frombuffer(out[2], np.uint8).reshape(32, 32, 3).astype(int)
-    quads = (
-        (slice(2, 14), slice(2, 14), (255, 0, 0)),
-        (slice(2, 14), slice(18, 30), (0, 255, 0)),
-        (slice(18, 30), slice(2, 14), (0, 0, 255)),
-        (slice(18, 30), slice(18, 30), (255, 255, 0)),
-    )
-    for ys, xs, c in quads:
-        assert np.abs(d[ys, xs] - np.array(c)).max() <= 1, c
-
-
-def test_420_luma_gradient_constant_chroma_near_exact():
-    from openie_spark.functions.jpegcodec import encode_jpeg_420
-
-    a = np.zeros((32, 32, 3), np.uint8)
-    for y in range(32):
-        a[y, :, :] = y * 8
-    out = decode_jpeg(encode_jpeg_420(32, 32, a.tobytes()))
-    got = np.frombuffer(out[2], np.uint8).astype(int)
-    assert np.abs(got - a.astype(int).ravel()).max() <= 1
-
-
-def test_420_odd_sizes_round_trip():
-    """Dims that are not MCU (16) multiples — incl. 1x1 — must pad,
-    code, and crop back to the exact requested size."""
-    import random
-
-    from openie_spark.functions.jpegcodec import encode_jpeg_420
-
-    rng = random.Random(9)
-    for w, h in ((17, 9), (1, 1), (16, 16), (15, 31), (33, 2)):
-        rgb = bytes(rng.randrange(256) for _ in range(w * h * 3))
-        out = decode_jpeg(encode_jpeg_420(w, h, rgb))
-        assert out is not None and out[:2] == (w, h), (w, h)
+    assert sos in buf
+    dc_first = sos[:-3] + bytes([0, 0, 0x01])
+    one_comp_ac = _struct.pack(">HHB", 0xFFDA, 8, 1) + bytes([1, 0x00, 1, 63, 0x01])
+    prog = buf.replace(b"\xff\xc0", b"\xff\xc2", 1)
+    for scan in (sos, dc_first, one_comp_ac):
+        assert decode_jpeg(prog.replace(sos, scan, 1)) is None
+        if scan != sos:
+            assert decode_jpeg(buf.replace(sos, scan, 1)) is None
 
 
 def test_sampling_factors_above_two_still_refused():
-    from openie_spark.functions.jpegcodec import encode_jpeg_420
-
-    buf = encode_jpeg_420(16, 16, bytes([70, 80, 90]) * 256)
+    buf = encode_jpeg(16, 16, bytes([70, 80, 90]) * 256)
     sof = buf.find(b"\xff\xc0")
-    patched = bytearray(buf)
-    patched[sof + 11] = 0x41  # luma h=4: beyond the supported 1-2 range
-    assert decode_jpeg(bytes(patched)) is None
-    # progressive + subsampling is refused (baseline-only support)
-    assert decode_jpeg(buf.replace(b"\xff\xc0", b"\xff\xc2", 1)) is None
-
-
-def test_progressive_dht_redefined_between_scans():
-    """Real-world optimized progressive JPEGs re-emit DHT segments
-    reusing table ids 0/1 before each scan; every scan must decode with
-    the table state at ITS header, not the file's final state.  Built by
-    re-sectioning the module's own progressive stream: each AC scan's
-    tables are moved to JUST BEFORE it, and the LUMA scans are re-coded
-    with a reversed-symbol table that id 0 later redefines."""
-    import struct as _struct
-
-    from openie_spark.functions import jpegcodec as J
-
-    w, h = 16, 16
-    rng = np.random.default_rng(21)
-    rgb = rng.integers(0, 256, w * h * 3, dtype=np.uint8).tobytes()
-    base = decode_jpeg(encode_jpeg(w, h, rgb))
-    coefs = J._quantize_image(w, h, rgb)
-
-    # two DIFFERENT spellings of the progressive AC table under id 0
-    alt_syms = list(reversed(J._AC_SYMBOLS_P))
-    alt_enc = J._canonical_codes(J._AC_BITS_P, alt_syms)
-
-    out = [
-        b"\xff\xd8",
-        _struct.pack(">HH", 0xFFDB, 67) + b"\x00"
-        + bytes(int(J._QTABLE.reshape(64)[z]) for z in J._ZIGZAG),
-        _struct.pack(">HHBHHB", 0xFFC2, 17, 8, h, w, 3)
-        + bytes([1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0]),
-        J._dht_segment(0, 0, J._DC_BITS, J._DC_SYMBOLS),
-    ]
-    # scan 1+2: interleaved DC first (Al=1) + refinement
-    bw_ = J._BitWriter()
-    prev = [0, 0, 0]
-    for by in range(2):
-        for bx in range(2):
-            for comp in range(3):
-                dc = int(coefs[comp, by, bx, 0]) >> 1
-                diff = dc - prev[comp]
-                prev[comp] = dc
-                size = J._size_cat(diff)
-                J._write_magnitude(bw_, J._DC_ENC, size, diff, size)
-    out += [J._sos_segment([(1, 0x00), (2, 0x00), (3, 0x00)], 0, 0, 0, 1), bw_.flush()]
-    bw_ = J._BitWriter()
-    for by in range(2):
-        for bx in range(2):
-            for comp in range(3):
-                bw_.write(int(coefs[comp, by, bx, 0]) & 1, 1)
-    out += [J._sos_segment([(1, 0x00), (2, 0x00), (3, 0x00)], 0, 0, 1, 0), bw_.flush()]
-    # AC scans: luma coded with the ALT table, chroma with the standard
-    # one — BOTH defined under id 0, redefined right before each scan
-    for phase in ("first", "refine"):
-        for comp, cid in ((0, 1), (1, 2), (2, 3)):
-            enc = alt_enc if comp == 0 else J._AC_ENC_P
-            syms = alt_syms if comp == 0 else J._AC_SYMBOLS_P
-            out.append(J._dht_segment(1, 0, J._AC_BITS_P, syms))
-            bw_ = J._BitWriter()
-            if phase == "first":
-                J._encode_ac_first(coefs[comp], bw_, enc, 1, 63, 1)
-                out += [J._sos_segment([(cid, 0x00)], 1, 63, 0, 1), bw_.flush()]
-            else:
-                J._encode_ac_refine(coefs[comp], bw_, enc, 1, 63, 1, 0)
-                out += [J._sos_segment([(cid, 0x00)], 1, 63, 1, 0), bw_.flush()]
-    out.append(b"\xff\xd9")
-    got = decode_jpeg(b"".join(out))
-    assert got is not None and got == base
-
-
-def test_grayscale_with_declared_2x2_sampling_decodes_unscrambled():
-    """T.81 A.2: a single-component scan is NON-interleaved — the
-    declared sampling factors must not shape the block raster.  Encoders
-    commonly keep luma's 2x2 factors when dropping chroma; before the
-    round-5 fix this decoded spatially scrambled for 16-multiple dims."""
-    import struct as _struct
-
-    from openie_spark.functions import jpegcodec as J
-
-    w = h = 32  # 4x4 blocks — divisible by 16, the silent-scramble case
-    levels = [[16 * (4 * by + bx) % 256 for bx in range(4)] for by in range(4)]
-    bw_ = J._BitWriter()
-    prev = 0
-    for by in range(4):
-        for bx in range(4):  # spec order: plain raster
-            block = np.full((8, 8), float(levels[by][bx])) - 128.0
-            zz = J._quantize(J._fdct(block)).reshape(64)[J._ZIGZAG]
-            prev = J._encode_block_entropy(bw_, zz, prev)
-    qzz = bytes(int(J._QTABLE.reshape(64)[z]) for z in J._ZIGZAG)
-    buf = b"".join(
-        [
-            b"\xff\xd8",
-            _struct.pack(">HH", 0xFFDB, 67) + b"\x00" + qzz,
-            _struct.pack(">HHBHHB", 0xFFC0, 11, 8, h, w, 1)
-            + bytes([1, 0x22, 0]),  # single comp DECLARED 2x2
-            J._dht_segment(0, 0, J._DC_BITS, J._DC_SYMBOLS),
-            J._dht_segment(1, 0, J._AC_BITS, J._AC_SYMBOLS),
-            _struct.pack(">HHB", 0xFFDA, 8, 1) + bytes([1, 0x00, 0, 63, 0]),
-            bw_.flush(),
-            b"\xff\xd9",
-        ]
-    )
-    out = decode_jpeg(buf)
-    assert out is not None and out[:2] == (w, h)
-    px = np.frombuffer(out[2], np.uint8).reshape(h, w, 3)
-    for by in range(4):
-        for bx in range(4):
-            blk = px[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8, 0].astype(int)
-            assert np.abs(blk - levels[by][bx]).max() <= 1, (by, bx)
+    for comp, factors in ((0, 0x41), (0, 0x22), (0, 0x21), (1, 0x22), (2, 0x12)):
+        patched = bytearray(buf)
+        patched[sof + 11 + 3 * comp] = factors
+        assert decode_jpeg(bytes(patched)) is None, (comp, hex(factors))

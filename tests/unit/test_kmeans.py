@@ -12,7 +12,7 @@ import hashlib
 
 import pytest
 
-from openie_spark.operators.kmeans import _trunc_div, kmeans_int8
+from openie_spark.operators.kmeans import KMEANS_TIE_SCALE, _trunc_div, kmeans_int8
 
 
 def _h60(s: str) -> int:
@@ -117,6 +117,17 @@ def test_too_few_rows_raises(spark):
     )
     with pytest.raises(ValueError, match="needs >= 3"):
         kmeans_int8(df, k=3, iters=1)
+
+
+def test_k_at_tie_scale_raises(spark):
+    """The oracle fuses (dist, cid) as dist·TIE_SCALE + cid, which is the
+    Spark struct-min only while cid < TIE_SCALE: k = TIE_SCALE must
+    refuse loudly instead of silently diverging."""
+    df = spark.createDataFrame(
+        [(1, [0.5, 0.5])], "vec_id bigint, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match=f"needs k < {KMEANS_TIE_SCALE}"):
+        kmeans_int8(df, k=KMEANS_TIE_SCALE, iters=1)
 
 
 def test_adaptive_k_bounds_cluster_size():

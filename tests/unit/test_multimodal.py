@@ -1,8 +1,9 @@
 """L1 unit tests for the multimodal plumbing (operators/multimodal.py).
 
-Decode kernels are deterministic stubs (no codecs in the container); what
-these tests pin down is the real Spark surface: posexplode provenance,
-mapInPandas schema/batch shape, nullability by kind, determinism."""
+Pinned here: the real Spark surface (posexplode provenance, mapInPandas
+schema/batch shape, nullability by kind, determinism), and the codec
+scope premise — every payload the synthetic fetch emits decodes for real,
+and every other flavor reaches the labeled stubs without raising."""
 
 from __future__ import annotations
 
@@ -107,3 +108,87 @@ def test_sample_frames(spark, docs):
         for f in frames:
             assert f["ts_ms"] == f["frame_idx"] * 500
             assert len(f["feature"]) == 16
+
+
+def test_every_synth_payload_decodes_for_real(monkeypatch):
+    """The codecs decode exactly the flavors ``synth_media_bytes`` emits,
+    so no payload it produces may reach a stub: over the sf0.01 fixture
+    corpus's media refs plus seeded refs, decode_media_row must take the
+    real path for every row (the stubs are patched to fail loudly), and
+    all seven containers must occur."""
+    from openie_spark.fixtures.gen_media_twin import _media_items
+    from openie_spark.operators import multimodal as mm
+    from openie_spark.plans.registry import ORACLE_SF_DIR
+
+    def stub_reached(*_a, **_k):
+        raise AssertionError("a synth payload fell back to a stub")
+
+    for name in ("_feature_stub", "_decode_image_stub", "_duration_stub"):
+        monkeypatch.setattr(mm, name, stub_reached)
+    items = [(kind, content) for *_, kind, _, content in _media_items(ORACLE_SF_DIR)]
+    for i in range(3000):
+        kind = ("image", "audio", "video")[i % 3]
+        ref = f"media://seeded{i:05d}/{i % 7}"
+        items.append((kind, mm.synth_media_bytes(kind, ref)))
+    magics = (b"P6", b"BM", b"\x89PNG", b"GIF8", b"\xff\xd8", b"RIFF", b"YUV4MPEG2")
+    seen = set()
+    for kind, content in items:
+        width, height, duration, feature = mm.decode_media_row(kind, content)
+        assert len(feature) == FEATURE_DIM
+        assert (duration is None) == (kind == "image")
+        assert (width is None) == (kind == "audio")
+        seen.update(m for m in magics if content.startswith(m))
+    assert seen == set(magics)
+
+
+def test_unsupported_flavors_reach_labeled_stubs():
+    """One header-patched synth payload per flavor outside the codec
+    scope, plus compressed containers the codecs never decoded (MP3,
+    ADTS AAC, H.264): each must land on the labeled stubs, never raise."""
+    import struct
+
+    import numpy as np
+
+    from openie_spark.functions.audiocodec import encode_wav
+    from openie_spark.functions.imagecodec import encode_bmp, encode_png
+    from openie_spark.functions.jpegcodec import encode_jpeg
+    from openie_spark.operators.multimodal import (
+        _decode_image_stub,
+        _duration_stub,
+        _feature_stub,
+        decode_media_row,
+    )
+
+    def patch(buf: bytes, at: int, value: bytes) -> bytes:
+        return buf[:at] + value + buf[at + len(value) :]
+
+    rgb = bytes(range(48)) * 4  # 8x8
+    jpg = encode_jpeg(8, 8, rgb)
+    sof = jpg.find(b"\xff\xc0")
+    png = encode_png(8, 8, rgb)
+    wav = encode_wav(8000, np.arange(64, dtype=np.int16))
+    images = [  # progressive JPEG: test_jpegcodec's media-chain test
+        patch(jpg, sof + 11, b"\x22"),  # 4:2:0 luma sampling
+        patch(jpg, sof + 9, b"\x01"),  # greyscale
+        patch(png, 24, b"\x10"),  # 16-bit
+        patch(png, 25, b"\x03"),  # palette
+        patch(png, 28, b"\x01"),  # Adam7
+        patch(encode_bmp(8, 8, rgb), 28, b"\x20"),  # 32 bpp
+    ]
+    for content in images:
+        assert decode_media_row("image", content) == (
+            *_decode_image_stub(content), None, _feature_stub(content)
+        )
+    audio = [
+        patch(wav, 34, struct.pack("<H", 24)),  # 24-bit
+        patch(wav, 20, struct.pack("<H", 3)),  # IEEE float
+        patch(wav, 20, struct.pack("<H", 0xFFFE)),  # EXTENSIBLE
+        b"\xff\xfb\x90\x00" * 200,  # MP3 frame headers
+        b"\xff\xf1\x50\x80\x02\x1f\xfc" * 50,  # ADTS headers
+    ]
+    video = [b"\x00\x00\x00\x01\x67\x42\x00\x1e" * 20]  # H.264 SPS NAL
+    for kind, payloads in (("audio", audio), ("video", video)):
+        for content in payloads:
+            assert decode_media_row(kind, content) == (
+                None, None, _duration_stub(content), _feature_stub(content)
+            )
