@@ -1,4 +1,4 @@
-.PHONY: dist test bench bench-smoke scaling round clean
+.PHONY: dist test bench bench-smoke bench-ab scaling round clean
 
 # Round close-out: host probe (refuses on degraded host), full driver-
 # replica correctness sweep at sf0.01, then bench.py — artifacts written
@@ -21,6 +21,15 @@ bench:
 # every benchmark metric checked at toy size (perfbench/README.md)
 bench-smoke:
 	python3 perfbench/run.py --smoke
+
+# interleaved parent/change A/B of one workload:
+#   make bench-ab PARENT=<parent checkout> [CHANGE=.] [WORKLOAD=kg_build] [PAIRS=10] [SEED=401]
+CHANGE ?= .
+WORKLOAD ?= kg_build
+PAIRS ?= 10
+SEED ?= 401
+bench-ab:
+	python3 jobs/ab_perfbench.py $(PARENT) $(CHANGE) --workload $(WORKLOAD) --pairs $(PAIRS) --first-seed $(SEED)
 
 scaling:
 	python jobs/bench_scaling.py

@@ -11,10 +11,13 @@ Round shape (all edges kept canonically src<dst between rounds, OP-40):
   large-star: connect every strictly-larger neighbor of u to
               m(u) = min(Γ(u) ∪ {u})
   small-star: connect every neighbor ≤ u (and u itself) to m(u)
-Convergence when the edge multiset stops changing (checked by count +
-xor-style aggregate hash — one cheap action per round).  Each round ends in
-localCheckpoint(eager) to truncate lineage (SURVEY.md §4.2-E) — without it
-plan analysis time doubles every round.
+Convergence (OP-43) is tested BEFORE each round with one action: the edge
+set is a star forest — no node is both a src and a dst, and every dst has
+exactly one src.  With src<dst each star is centred on its component's
+minimum, which is the state the rounds converge to and a fixed point of
+both operations, so no confirming round is needed.  Each round's output
+is a lineage cut (SURVEY.md §4.2-E) — without it plan analysis time
+doubles every round.
 """
 
 from __future__ import annotations
@@ -53,48 +56,55 @@ def _with_min(nbrs: DataFrame) -> DataFrame:
     return nbrs.join(mins, "u")
 
 
-def large_star(edges: DataFrame) -> DataFrame:
-    n = _with_min(_neighbors(edges))
+def _star(edges: DataFrame, emit_v) -> DataFrame:
+    """Connect u, and v where `emit_v` holds, to m(u) for every (u, v).
+
+    One explode over the joined rows: a union of two projections of the
+    join is pruned differently per branch, so Spark cannot reuse the
+    exchange and runs the join and the groupBy twice."""
+    ends = F.when(emit_v, F.array("u", "v")).otherwise(F.array("u"))
+    # m(u) ≤ u and m(u) ≤ every neighbour v, so (m, end) is already src<dst
     return (
-        n.where(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("src"), F.col("m").alias("dst"))
-        .unionByName(n.select(F.col("u").alias("src"), F.col("m").alias("dst")))
+        _with_min(_neighbors(edges))
+        .select(F.col("m").alias("src"), F.explode(ends).alias("dst"))
         .where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-        )
         .distinct()
     )
+
+
+def large_star(edges: DataFrame) -> DataFrame:
+    return _star(edges, F.col("v") > F.col("u"))
 
 
 def small_star(edges: DataFrame) -> DataFrame:
-    n = _with_min(_neighbors(edges))
-    return (
-        n.where(F.col("v") <= F.col("u"))
-        .select(F.col("v").alias("src"), F.col("m").alias("dst"))
-        .unionByName(n.select(F.col("u").alias("src"), F.col("m").alias("dst")))
-        .where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
+    return _star(edges, F.col("v") <= F.col("u"))
+
+
+def is_star_forest(edges: DataFrame) -> bool:
+    """True iff no node is both a src and a dst and every dst has exactly
+    one src — i.e. every node that is a dst has degree 1.  One action."""
+    ends = edges.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("src").alias("n"), F.lit(0).alias("is_dst")),
+                F.struct(F.col("dst").alias("n"), F.lit(1).alias("is_dst")),
+            )
         )
-        .distinct()
     )
-
-
-def _edge_digest(edges: DataFrame) -> tuple:
-    # decimal sum: exact and overflow-proof under ANSI mode (Spark 4 default)
-    row = edges.agg(
-        F.count("*").alias("n"),
-        F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
-    return (row["n"], row["h"])
+    bad = (
+        ends.groupBy("n")
+        .agg(F.max("is_dst").alias("is_dst"), F.count("*").alias("deg"))
+        .where((F.col("is_dst") == 1) & (F.col("deg") > 1))
+    )
+    return bad.count() == 0
 
 
 def connected_components(edges: DataFrame) -> DataFrame:
     """edges(src,dst) → assignments(id, rep) with rep = min(component).
 
-    OP-43: driver-side loop, one digest action per round, localCheckpoint to
-    truncate lineage.  Isolated nodes must arrive as self-loops."""
+    OP-43: driver-side loop; before each round one action tests whether the
+    edges already form a star forest (the converged state), and each round's
+    output is a lineage cut.  Isolated nodes must arrive as self-loops."""
     # remember the full vertex universe before dropping self-loops
     vertices = (
         edges.select(F.col("src").alias("id"))
@@ -104,20 +114,15 @@ def connected_components(edges: DataFrame) -> DataFrame:
     vertices = cut_lineage(vertices, eager=True)
 
     cur = canonical_edges(edges).where(F.col("src") != F.col("dst"))
-    # lazy cut + digest action: the digest aggregate is the FIRST action on
-    # the cut dataset, so it materializes the checkpoint blocks AND returns
-    # the convergence digest in ONE job — eager+digest costs two jobs per
-    # round, and at vocab-bounded edge counts the loop is pure fixed
-    # overhead (measured ~35% of canonicalize wall)
+    # lazy cuts: the star-forest test is the FIRST action on each cut
+    # dataset, so one job both materializes the checkpoint blocks and
+    # decides convergence — at vocab-bounded edge counts the loop is pure
+    # fixed per-job overhead
     cur = cut_lineage(cur)
-    digest = _edge_digest(cur)
     for _ in range(MAX_ROUNDS):
-        nxt = cut_lineage(small_star(large_star(cur)))
-        nd = _edge_digest(nxt)
-        cur = nxt
-        if nd == digest:
+        if is_star_forest(cur):
             break
-        digest = nd
+        cur = cut_lineage(small_star(large_star(cur)))
     else:  # pragma: no cover
         raise RuntimeError(f"connected components did not converge in {MAX_ROUNDS} rounds")
 

@@ -168,11 +168,16 @@ def run_pipeline(
                 triples = extract_stage(balanced.drop("partition_id")).withColumn(
                     "partition_id", pid_expr
                 )
-                # cluster rows by bucket before the partitioned write: without
-                # this every write task touches every partition dir and the
-                # file count explodes with core count (tasks × buckets tiny
-                # files — worse at higher parallelism AND at 1000 executors)
-                triples_out = triples.repartition(cfg.n_buckets, "partition_id")
+                # cluster rows by bucket before the partitioned write: each
+                # bucket lands in exactly one task, so each partition dir
+                # gets one file (unclustered, every task would touch every
+                # dir: tasks × buckets tiny files).  Never more tasks than
+                # the session's parallelism — below n_buckets a task writes
+                # several whole buckets, and the write stage's fixed
+                # per-task cost does not scale with n_buckets.
+                triples_out = triples.repartition(
+                    min(nparts, cfg.n_buckets), "partition_id"
+                )
             cat.write_table(triples_out, "triples", partition_by=["partition_id"])
             # per-partition metrics from the WRITTEN table — recomputing
             # `triples` here would re-run the whole extraction UDF a second
@@ -306,7 +311,7 @@ def run_pipeline(
             cc = cut_lineage(cc, eager=True)
             cat.write_table(cc, "cc_assign")
     if cfg.collect_counts:
-        out["n_components"] = cc.select("rep").distinct().count()
+        out["n_components"] = cc.where(F.col("id") == F.col("rep")).count()
     if not canon_done:
         ckpt.record_stage_done(
             cat,

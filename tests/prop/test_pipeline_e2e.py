@@ -559,3 +559,41 @@ def test_incremental_empty_input_refuses_to_purge(
             PipelineConfig(run_id="e", stages=("extract",)),
         )
     assert cat.load_table("triples").count() == before
+
+
+def test_triples_one_file_per_bucket_below_n_buckets_parallelism(
+    spark, golden_docs_path, alias_dict_path, tmp_path
+):
+    """With fewer shuffle partitions than buckets, the unclustered extract
+    write still puts each bucket in exactly one task: every triples
+    partition dir holds one parquet file, after a fresh build and after a
+    delta re-run that rewrites some buckets."""
+    from pathlib import Path
+
+    cat = ParquetCatalog(spark, str(tmp_path / "kg"))
+    docs_all = load_docs(spark, golden_docs_path)
+    aliases = load_alias_dict(spark, alias_dict_path)
+    pid = F.pmod(F.xxhash64("doc_id"), F.lit(64)).cast("int")
+    cfg = PipelineConfig(
+        run_id="files", n_buckets=64, cluster_before_extract=False,
+        stages=("extract",),
+    )
+
+    def files_per_bucket():
+        dirs = sorted(Path(cat.root, "triples").glob("partition_id=*"))
+        assert dirs
+        return {d.name: len(list(d.glob("*.parquet"))) for d in dirs}
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        run_pipeline(spark, docs_all.where(pid >= 3), aliases, cat, cfg)
+        fresh = files_per_bucket()
+        assert set(fresh.values()) == {1}
+        r2 = run_pipeline(spark, docs_all, aliases, cat, cfg)
+        assert r2["extract_pending_docs"] > 0
+        delta = files_per_bucket()
+        assert set(delta.values()) == {1} and len(delta) > len(fresh)
+    finally:
+        spark.conf.set(key, saved)

@@ -6,7 +6,8 @@ from __future__ import annotations
 import pytest
 
 from openie_spark.fixtures.gen_graphs import all_graphs, chain, cliques, star
-from openie_spark.operators.components import connected_components
+from openie_spark.operators import components
+from openie_spark.operators.components import connected_components, is_star_forest
 
 
 def _run(spark, edges):
@@ -40,3 +41,45 @@ def test_idempotence(spark):
     )
     got = {r.id: r.rep for r in again.collect()}
     assert got == expected
+
+
+@pytest.mark.parametrize(
+    "edges, want",
+    [
+        ([], True),
+        ([(1, 2), (1, 3), (4, 5)], True),  # two stars, centres 1 and 4
+        ([(1, 2), (2, 3)], False),  # 2 is both a dst and a src
+        ([(1, 3), (2, 3)], False),  # dst 3 has two srcs (c1 < c2 < v)
+        ([(1, 2), (1, 3), (3, 4)], False),  # a leaf carries its own star
+    ],
+)
+def test_star_forest_truth_table(spark, edges, want):
+    """The convergence test: true exactly on the state a round leaves
+    unchanged.  The two-src case is not converged — a round rewires
+    (2, 3) to (1, 2) — so the test must say false there."""
+    df = spark.createDataFrame(edges, "src long, dst long")
+    assert is_star_forest(df) is want
+
+
+@pytest.mark.parametrize(
+    "maker, rounds",
+    [
+        (lambda: star(1000), 0),  # already the converged star forest
+        (lambda: chain(200), None),
+        (lambda: cliques(10, 10), None),
+    ],
+)
+def test_round_count(spark, monkeypatch, maker, rounds):
+    """A star-forest input runs no round; other shapes still converge to
+    the expected map with rounds counted through `large_star`."""
+    calls = []
+    real = components.large_star
+    monkeypatch.setattr(
+        components, "large_star", lambda e: calls.append(1) or real(e)
+    )
+    edges, expected = maker()
+    assert _run(spark, edges) == expected
+    if rounds is None:
+        assert 0 < len(calls) < components.MAX_ROUNDS
+    else:
+        assert len(calls) == rounds
