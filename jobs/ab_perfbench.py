@@ -12,7 +12,8 @@ each side's per-run values, median and quartiles
 (`statistics.quantiles(n=4)`), the pairs the change wins (ties count for
 neither side), and whether the gap between the medians exceeds the
 parent's interquartile range.  A run whose output check fails is
-reported and left out of its pair.  `--json PATH` also writes every run.
+reported and left out of its pair; a run that outlasts `RUN_TIMEOUT_S`
+is stopped and reported the same way.
 """
 
 from __future__ import annotations
@@ -25,13 +26,15 @@ import sys
 import time
 from pathlib import Path
 
+RUN_TIMEOUT_S = 600
 
-def run_side(tree: Path, workload: str, seed: int, timeout: float) -> dict:
+
+def run_side(tree: Path, workload: str, seed: int) -> dict:
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", "1", "--trace", "0"]
     t = time.perf_counter()
     try:
-        proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True, timeout=timeout)
+        proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True, timeout=RUN_TIMEOUT_S)
     except subprocess.TimeoutExpired:
         return {"seed": seed, "exit": "timeout", "run_s": round(time.perf_counter() - t, 1)}
     lines = proc.stdout.strip().splitlines()
@@ -90,8 +93,6 @@ def main() -> int:
     ap.add_argument("--workload", required=True, choices=("kg_build", "kg_query"))
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--first-seed", type=int, default=401)
-    ap.add_argument("--timeout", type=float, default=600, help="seconds per run")
-    ap.add_argument("--json", type=Path, help="also write every run here")
     args = ap.parse_args()
     trees = {"parent": args.parent_tree.resolve(), "change": args.change_tree.resolve()}
     metrics = json.loads((trees["parent"] / "BENCHMARK.json").read_text())["end_to_end"]
@@ -102,15 +103,12 @@ def main() -> int:
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         pair = {"seed": seed, "first": order[0]}
         for side in order:
-            pair[side] = run_side(trees[side], args.workload, seed, args.timeout)
+            pair[side] = run_side(trees[side], args.workload, seed)
             m = pair[side].get("metrics", {})
             print(f"pair {i + 1}/{args.pairs} seed {seed} {side}: "
                   f"wall_s={m.get('wall_s')} correct={pair[side].get('correct')} "
                   f"({pair[side]['run_s']} s)", flush=True)
         pairs.append(pair)
-        if args.json:
-            args.json.write_text(json.dumps({"workload": args.workload, "trees": {
-                k: str(v) for k, v in trees.items()}, "pairs": pairs}, indent=1))
     print("\n".join(summarize(pairs, metrics)))
     return 0
 

@@ -17,7 +17,8 @@ doubles per iteration).  The eager cut doubles as the convergence probe:
 an empty frontier terminates the loop before k.
 
 No driver-side state beyond the loop counter and the per-round frontier
-count (a single long), mirroring components.py's digest discipline.
+count (a single long), like components.py's one-action-per-round
+star-forest convergence test.
 """
 
 from __future__ import annotations

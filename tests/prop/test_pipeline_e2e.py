@@ -564,12 +564,14 @@ def test_incremental_empty_input_refuses_to_purge(
 def test_triples_one_file_per_bucket_below_n_buckets_parallelism(
     spark, golden_docs_path, alias_dict_path, tmp_path
 ):
-    """With fewer shuffle partitions than buckets, the unclustered extract
-    write still puts each bucket in exactly one task: every triples
-    partition dir holds one parquet file, after a fresh build and after a
-    delta re-run that rewrites some buckets."""
+    """With fewer shuffle partitions than buckets (the shared session's 8
+    against 64), the unclustered extract write still puts each bucket in
+    exactly one task: every triples partition dir holds one parquet file,
+    after a fresh build and after a delta re-run that rewrites some
+    buckets."""
     from pathlib import Path
 
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) < 64
     cat = ParquetCatalog(spark, str(tmp_path / "kg"))
     docs_all = load_docs(spark, golden_docs_path)
     aliases = load_alias_dict(spark, alias_dict_path)
@@ -584,16 +586,10 @@ def test_triples_one_file_per_bucket_below_n_buckets_parallelism(
         assert dirs
         return {d.name: len(list(d.glob("*.parquet"))) for d in dirs}
 
-    key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, "4")
-    try:
-        run_pipeline(spark, docs_all.where(pid >= 3), aliases, cat, cfg)
-        fresh = files_per_bucket()
-        assert set(fresh.values()) == {1}
-        r2 = run_pipeline(spark, docs_all, aliases, cat, cfg)
-        assert r2["extract_pending_docs"] > 0
-        delta = files_per_bucket()
-        assert set(delta.values()) == {1} and len(delta) > len(fresh)
-    finally:
-        spark.conf.set(key, saved)
+    run_pipeline(spark, docs_all.where(pid >= 3), aliases, cat, cfg)
+    fresh = files_per_bucket()
+    assert set(fresh.values()) == {1}
+    r2 = run_pipeline(spark, docs_all, aliases, cat, cfg)
+    assert r2["extract_pending_docs"] > 0
+    delta = files_per_bucket()
+    assert set(delta.values()) == {1} and len(delta) > len(fresh)

@@ -16,12 +16,28 @@ def _run(spark, edges):
 
 
 @pytest.mark.parametrize(
-    "maker", [lambda: chain(200), lambda: cliques(10, 10), lambda: star(1000)]
+    "maker",
+    [
+        lambda: (*chain(200), None),
+        lambda: (*cliques(10, 10), None),
+        lambda: (*star(1000), 0),  # already the converged star forest
+    ],
 )
-def test_known_shapes(spark, maker):
-    edges, expected = maker()
+def test_known_shapes(spark, monkeypatch, maker):
+    """Known shapes give the expected map; rounds are counted through
+    `large_star`, and a star-forest input runs none."""
+    calls = []
+    real = components.large_star
+    monkeypatch.setattr(
+        components, "large_star", lambda e: calls.append(1) or real(e)
+    )
+    edges, expected, rounds = maker()
     got = _run(spark, edges)
     assert got == expected
+    if rounds is None:
+        assert 0 < len(calls) < components.MAX_ROUNDS
+    else:
+        assert len(calls) == rounds
 
 
 def test_all_graphs_mixed(spark):
@@ -59,27 +75,3 @@ def test_star_forest_truth_table(spark, edges, want):
     (2, 3) to (1, 2) — so the test must say false there."""
     df = spark.createDataFrame(edges, "src long, dst long")
     assert is_star_forest(df) is want
-
-
-@pytest.mark.parametrize(
-    "maker, rounds",
-    [
-        (lambda: star(1000), 0),  # already the converged star forest
-        (lambda: chain(200), None),
-        (lambda: cliques(10, 10), None),
-    ],
-)
-def test_round_count(spark, monkeypatch, maker, rounds):
-    """A star-forest input runs no round; other shapes still converge to
-    the expected map with rounds counted through `large_star`."""
-    calls = []
-    real = components.large_star
-    monkeypatch.setattr(
-        components, "large_star", lambda e: calls.append(1) or real(e)
-    )
-    edges, expected = maker()
-    assert _run(spark, edges) == expected
-    if rounds is None:
-        assert 0 < len(calls) < components.MAX_ROUNDS
-    else:
-        assert len(calls) == rounds
