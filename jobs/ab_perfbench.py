@@ -11,7 +11,10 @@ every end-to-end metric in the parent tree's BENCHMARK.json it prints
 each side's per-run values, median and quartiles
 (`statistics.quantiles(n=4)`), the pairs the change wins (ties count for
 neither side), and whether the gap between the medians exceeds the
-parent's interquartile range.  A run whose output check fails is
+parent's interquartile range.  Each run's value is printed as
+`value@steal%`: the host's CPU steal over that run, read from the run's
+`perfbench_context` line (`stamps.steal_pct`), since the spread between
+runs tracks steal.  A run whose output check fails is
 reported and left out of its pair; a run that outlasts `RUN_TIMEOUT_S`
 is stopped and reported the same way.
 """
@@ -44,6 +47,10 @@ def run_side(tree: Path, workload: str, seed: int) -> dict:
         return out
     res = json.loads(lines[-1])
     out["correct"] = res["correct"] and not res["failed"]
+    ctx = next((json.loads(x)["perfbench_context"] for x in lines
+                if x.startswith('{"perfbench_context"')), {})
+    steal = ctx.get("stamps", {}).get("steal_pct")
+    out["steal_pct"] = None if steal is None else round(steal, 1)
     out["metrics"] = {k: v["value"] for k, v in res["metrics"].items()}
     return out
 
@@ -53,6 +60,10 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
         return (xs[0], xs[0], xs[0]) if xs else (float("nan"),) * 3
     q1, q2, q3 = statistics.quantiles(xs, n=4)
     return q1, q2, q3
+
+
+def with_steal(xs: list[float], steal: list) -> str:
+    return " ".join(f"{x:.4g}@{'?' if s is None else f'{s:.1f}'}%" for x, s in zip(xs, steal))
 
 
 def summarize(pairs: list[dict], metrics: list[dict]) -> list[str]:
@@ -67,6 +78,7 @@ def summarize(pairs: list[dict], metrics: list[dict]) -> list[str]:
         name, lower = m["name"], m["better"] == "lower"
         a = [p["parent"]["metrics"][name] for p in ok]
         b = [p["change"]["metrics"][name] for p in ok]
+        steal = {side: [p[side]["steal_pct"] for p in ok] for side in ("parent", "change")}
         if not a:
             continue
         wins = sum((y < x) if lower else (y > x) for x, y in zip(a, b))
@@ -75,8 +87,8 @@ def summarize(pairs: list[dict], metrics: list[dict]) -> list[str]:
         gap = (qa[1] - qb[1]) if lower else (qb[1] - qa[1])
         lines += [
             f"{name} ({m['unit']}, {m['better']} is better, bound {m['bound']})",
-            f"  parent: {' '.join(f'{x:.4g}' for x in a)}",
-            f"  change: {' '.join(f'{x:.4g}' for x in b)}",
+            f"  parent: {with_steal(a, steal['parent'])}",
+            f"  change: {with_steal(b, steal['change'])}",
             f"  parent median {qa[1]:.4g} (Q1-Q3 {qa[0]:.4g}-{qa[2]:.4g})",
             f"  change median {qb[1]:.4g} (Q1-Q3 {qb[0]:.4g}-{qb[2]:.4g})",
             f"  change wins {wins}/{len(ok)} pairs, loses {losses}; median gain "
@@ -106,7 +118,8 @@ def main() -> int:
             pair[side] = run_side(trees[side], args.workload, seed)
             m = pair[side].get("metrics", {})
             print(f"pair {i + 1}/{args.pairs} seed {seed} {side}: "
-                  f"wall_s={m.get('wall_s')} correct={pair[side].get('correct')} "
+                  f"wall_s={m.get('wall_s')} steal={pair[side].get('steal_pct')}% "
+                  f"correct={pair[side].get('correct')} "
                   f"({pair[side]['run_s']} s)", flush=True)
         pairs.append(pair)
     print("\n".join(summarize(pairs, metrics)))

@@ -24,7 +24,9 @@ Supported shapes (all tested):
 
 Scale shape (100 TB posture).  Each pattern is one scan of the edge
 table with its constant terms pushed down (pred/head/tail equality
-filters reach the parquet scan), then binary hash equi-joins on the
+filters reach the edge table's scan; for the registry's star KG that is
+the materialized edge frame of ``star_kg_edges``, so they filter its
+checkpointed rows, not a parquet scan), then binary hash equi-joins on the
 shared-variable keys, left-to-right in caller order.  Catalyst + AQE
 handle the physical strategy: selective patterns (constant pred on a
 small relation) become broadcast sides, and AQE's skew-join splitting

@@ -34,6 +34,7 @@ from pyspark.sql.window import Window
 # canonical home: functions/hashing.py (re-exported here for existing
 # imports; the scheme must stay in ONE place so its DuckDB twin can't fork)
 from openie_spark.functions.hashing import portable_hash60 as portable_hash60
+from openie_spark.functions.lineage import cut_lineage
 
 
 def negative_samples(
@@ -59,21 +60,21 @@ def negative_samples(
     # explode, filtered-setting anti-join) and the caller's relation may
     # be a composed plan (the registry feeds a distinct over lineitem) —
     # without the cut each consumer re-runs it (rules.py precedent).
-    e = edges.select(
-        F.col(head_col).alias("head"), F.col(tail_col).alias("tail")
-    ).localCheckpoint()
+    e = cut_lineage(
+        edges.select(F.col(head_col).alias("head"), F.col(tail_col).alias("tail")),
+        eager=True,
+    )
 
     # Vocabulary index: tail entities, densely numbered by a total order.
     # The global-sort window runs over the ENTITY vocabulary only (same
     # bounded-side argument as the IVF centroid collect, similarity.py).
     # Also materialized: consumed by the count() below AND the join.
-    vocab = (
-        e.select("tail").distinct()
-        .select(
+    vocab = cut_lineage(
+        e.select("tail").distinct().select(
             (F.row_number().over(Window.orderBy("tail")) - 1).alias("neg_idx"),
             F.col("tail").alias("neg_tail"),
-        )
-        .localCheckpoint()
+        ),
+        eager=True,
     )
     n_vocab = vocab.count()  # one vocab-bounded job; reused as a plain literal
 

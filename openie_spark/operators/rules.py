@@ -24,7 +24,7 @@ the residual is the one 18M-row (h,t) exchange + exact dedup — the
 dedup factor is 1.06, so map-side partial dedup cannot shrink it, and
 exact body counting admits no smaller shuffle):
 
-  - the edge set is **materialized once** (localCheckpoint) — it feeds
+  - the edge set is **materialized once** (the cut_lineage seam) — it feeds
     five consumers (two degree aggs, e1, e2, heads) and Spark has no
     common-subexpression reuse across differently-partitioned self-join
     branches, so the union+DISTINCT subtree would otherwise recompute
@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from openie_spark.functions.lineage import cut_lineage
 
 MIN_SUPPORT = 25
 MAX_MID_DEGREE = 512
@@ -72,24 +74,22 @@ def rule_support(
     """edges(pred, head, tail) → (r1, r2, r3, support, body_count,
     conf_micro), compositions through hot mid entities excluded.
 
-    NOTE: eagerly materializes the (pred-encoded) edge set via
-    localCheckpoint at call time — see module docstring for why."""
+    NOTE: eagerly materializes the (pred-encoded) edge set through the
+    cut_lineage seam at call time — see module docstring for why."""
     # deterministic predicate dictionary (vocabulary-bounded, broadcast).
     # Materialized once: it has FOUR consumers (the encode join + three
     # decode joins) and without the cut each one re-derives the dict from
     # scratch — a full scan of the raw `edges` relation (which may itself
     # be a composed multi-join plan) per consumer, plus the
     # single-partition ranking window each time.
-    preds = (
+    preds = cut_lineage(
         edges.select("pred")
         .distinct()
-        .withColumn("pid", F.row_number().over(Window.orderBy("pred")).cast("int"))
-        .localCheckpoint()
+        .withColumn("pid", F.row_number().over(Window.orderBy("pred")).cast("int")),
+        eager=True,
     )
-    enc = (
-        edges.join(F.broadcast(preds), "pred")
-        .select("pid", "head", "tail")
-        .localCheckpoint()
+    enc = cut_lineage(
+        edges.join(F.broadcast(preds), "pred").select("pid", "head", "tail"), eager=True
     )
     hot = hot_mid_entities(enc, max_mid_degree)
     e1 = enc.select(

@@ -24,7 +24,7 @@ table: per-step cost is one edge-table scan plus a min-aggregate keyed
 on walk_id that partial-aggregates MAP-SIDE — no edge shuffle, and hub
 skew is a non-issue because a hub's million candidate rows collapse to
 one partial-min row per walk per task before any exchange.  The
-symmetrized edge set is materialized once (localCheckpoint) since it
+symmetrized edge set is materialized once (the cut_lineage seam) since it
 feeds walk_len scans.  For the walks-from-EVERY-node regime
 (n_walks ≈ n_nodes, the full DeepWalk corpus) the broadcast no longer
 fits: ``broadcast_frontier=False`` shuffle-joins frontier ⋈ edges on
@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from openie_spark.functions.hashing import portable_hash60, portable_hash60_sql
+from openie_spark.functions.lineage import cut_lineage
 from openie_spark.operators.skew import hot_keys, salted_join
 
 WALK_LEN = 3
@@ -88,7 +89,7 @@ def random_walks(
     never sees physical planning, so both plans are bit-identical
     (tests/unit/test_walks.py gates it).
     """
-    sym = symmetrize(edges).localCheckpoint()
+    sym = cut_lineage(symmetrize(edges), eager=True)
     hot = [] if broadcast_frontier else hot_keys(sym, "head")
     frontier = seeds.select(
         "id", F.explode(F.sequence(F.lit(0), F.lit(walks_per_seed - 1))).alias("j")
@@ -130,13 +131,16 @@ def random_walks(
         # common-subexpression reuse — without the cut the final action
         # recomputes step s inside steps s+1..L (O(L^2) edge scans;
         # measured 67 s -> ~8 s at sf0.1).  The frame is n_walks rows, so
-        # the eager localCheckpoint is driver-cheap and data-size-free.
-        step_rows = pick.select(
-            "walk_id",
-            F.lit(s).alias("step"),
-            F.col("m.pred").alias("pred"),
-            F.col("m.node").alias("node"),
-        ).localCheckpoint()
+        # the eager cut is driver-cheap and data-size-free.
+        step_rows = cut_lineage(
+            pick.select(
+                "walk_id",
+                F.lit(s).alias("step"),
+                F.col("m.pred").alias("pred"),
+                F.col("m.node").alias("node"),
+            ),
+            eager=True,
+        )
         out = out.unionByName(step_rows)
         frontier = step_rows.select("walk_id", "node")
     return out

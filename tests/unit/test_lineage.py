@@ -65,3 +65,43 @@ def test_reliable_mode_survives_cc_iteration(spark, tmp_path):
     finally:
         spark.conf.unset(CONF_KEY)
         spark.conf.unset(CKPT_DIR_KEY)
+
+
+def test_kg_operators_cut_through_seam_under_reliable(spark, tmp_path, monkeypatch):
+    """rule_support, random_walks and negative_samples materialize their
+    intermediates through the seam: under ``reliable`` none of them may
+    fall back to a bare localCheckpoint (non-replicated blocks), and each
+    must return exactly its ``local`` result."""
+    from conftest import SF0001
+
+    from openie_spark.operators.kg_sampling import negative_samples
+    from openie_spark.operators.rules import rule_support
+    from openie_spark.operators.walks import random_walks
+    from openie_spark.plans.registry import star_kg_edges
+
+    edges = star_kg_edges(spark, SF0001)
+    seeds = edges.select(F.col("head").alias("id")).distinct().orderBy("id").limit(20)
+
+    def run():
+        return (
+            sorted(rule_support(edges, min_support=1).collect()),
+            sorted(random_walks(edges, seeds).collect()),
+            sorted(negative_samples(edges).collect()),
+        )
+
+    local = run()
+    assert all(local)
+    saved = {k: spark.conf.get(k, None) for k in (CONF_KEY, CKPT_DIR_KEY)}
+    spark.conf.set(CONF_KEY, "reliable")
+    spark.conf.set(CKPT_DIR_KEY, str(tmp_path / "kg_ck"))
+
+    def no_local_cut(self, *a, **kw):
+        raise AssertionError("bare localCheckpoint under lineageCut=reliable")
+
+    monkeypatch.setattr(type(edges), "localCheckpoint", no_local_cut)
+    try:
+        assert run() == local
+    finally:
+        monkeypatch.undo()
+        for k, v in saved.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
