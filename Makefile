@@ -23,12 +23,15 @@ bench-smoke:
 	python3 perfbench/run.py --smoke
 
 # interleaved parent/change A/B of one workload:
-#   make bench-ab PARENT=<parent checkout> [CHANGE=.] [WORKLOAD=kg_build] [PAIRS=10] [SEED=401]
-CHANGE ?= .
+#   make bench-ab PARENT=<tree> CHANGE=<tree> [WORKLOAD=kg_build] [PAIRS=10] [SEED=401]
+# Export both trees the same way into fresh directories side by side, e.g.
+#   git archive <commit> | tar -x -C <dir>
+# so neither side runs from the working checkout.
 WORKLOAD ?= kg_build
 PAIRS ?= 10
 SEED ?= 401
 bench-ab:
+	@test -n "$(PARENT)" -a -n "$(CHANGE)" || { echo "bench-ab needs PARENT=<tree> CHANGE=<tree> (both exported with git archive)"; exit 2; }
 	python3 jobs/ab_perfbench.py $(PARENT) $(CHANGE) --workload $(WORKLOAD) --pairs $(PAIRS) --first-seed $(SEED)
 
 scaling:

@@ -10,8 +10,7 @@ Cluster usage (the north rule's launch shape):
         --alias-dict /data/alias_dict.parquet \
         --output /data/kg \
         --run-id prod-2026-08-16 \
-        --stage all            # or extract|link|canonicalize|materialize
-        [--resume]             # EP-3: skip checkpointed-done partitions
+        --stage all            # or a prefix: extract | extract,link | ...
         [--n-buckets 4096] [--salt 16] [--parallelism 2048]
 
 Sandbox smoke:
@@ -37,11 +36,9 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from openie_spark.catalog import ParquetCatalog
-from openie_spark.plans.pipeline import PipelineConfig, run_pipeline
+from openie_spark.plans.pipeline import STAGES, PipelineConfig, run_pipeline
 from openie_spark.session import get_spark
 from openie_spark.sources.tables import load_alias_dict, load_docs
-
-STAGES = ("extract", "link", "canonicalize", "materialize")
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -50,8 +47,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--alias-dict", required=True, help="alias dict parquet path")
     ap.add_argument("--output", required=True, help="output catalog root")
     ap.add_argument("--run-id", required=True)
-    ap.add_argument("--stage", default="all", help="all or comma list of stages")
-    ap.add_argument("--resume", action="store_true", help="(resume is the default behavior: done partitions are skipped; flag kept for cluster-script parity)")
+    ap.add_argument("--stage", default="all",
+                    help="all, or a comma list that is a prefix of " + ",".join(STAGES))
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--salt", type=int, default=8)
     ap.add_argument("--parallelism", type=int, default=None)
@@ -69,21 +66,13 @@ def main(argv: list[str] | None = None) -> int:
                          "(spark.openie.lineageCut); 'reliable' checkpoints "
                          "to <output>/_checkpoints for multi-executor fault "
                          "tolerance")
-    ap.add_argument("--cluster-extract", default="auto",
-                    choices=("auto", "on", "off"),
-                    help="extract-stage salt width: 'on' = bounded salt "
-                         "refining partition_id (one corpus shuffle, no "
-                         "triples re-shuffle — the big-input plan), 'off' = "
-                         "full-width salt + triples repartition (small "
-                         "inputs), 'auto' (default) switches at >=1000 "
-                         "docs per sub-bucket")
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
     stages = STAGES if args.stage == "all" else tuple(args.stage.split(","))
-    for s in stages:
-        if s not in STAGES:
-            ap.error(f"unknown stage {s!r}; valid: {STAGES}")
+    if stages != STAGES[: len(stages)]:
+        # the pipeline stops at the first stage not listed
+        ap.error(f"--stage must be a prefix of {','.join(STAGES)}, got {args.stage!r}")
 
     spark = get_spark(app=f"kg-{args.run_id}", master=args.master)
     try:
@@ -105,9 +94,6 @@ def main(argv: list[str] | None = None) -> int:
             collect_counts=not args.no_counts,
             check_invariant=not args.no_invariant,
             broadcast_canon=not args.no_broadcast_canon,
-            cluster_before_extract={"auto": None, "on": True, "off": False}[
-                args.cluster_extract
-            ],
         )
         res = run_pipeline(spark, docs, aliases, ParquetCatalog(spark, args.output), cfg)
         print(json.dumps(res, default=str))

@@ -37,17 +37,19 @@ def cut_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
         return df
     if mode == "reliable":
         sc = spark.sparkContext
-        if not sc._jsc.sc().getCheckpointDir().isDefined():
-            try:
-                ckdir = spark.conf.get(CKPT_DIR_KEY, "")
-            except Exception:
-                ckdir = ""
-            if not ckdir:
-                raise RuntimeError(
-                    f"{CONF_KEY}=reliable requires {CKPT_DIR_KEY} (a shared "
-                    "checkpoint directory) or a prior setCheckpointDir call"
-                )
-            sc.setCheckpointDir(ckdir)
+        in_use = sc._jsc.sc().getCheckpointDir()  # <dir>/<uuid> once set
+        ckdir = spark.conf.get(CKPT_DIR_KEY, "")
+        if ckdir:
+            # a dir configured after an earlier cut takes effect as well
+            want = sc._jvm.org.apache.hadoop.fs.Path(ckdir)
+            want = want.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(want)
+            if not in_use.isDefined() or in_use.get().rsplit("/", 1)[0] != str(want):
+                sc.setCheckpointDir(ckdir)
+        elif not in_use.isDefined():
+            raise RuntimeError(
+                f"{CONF_KEY}=reliable requires {CKPT_DIR_KEY} (a shared "
+                "checkpoint directory) or a prior setCheckpointDir call"
+            )
         # Reliable checkpoints have Spark's classic double-computation: the
         # checkpoint write is a SECOND job that recomputes the RDD from
         # scratch unless it is cached.  Persist around an eager checkpoint
@@ -62,3 +64,4 @@ def cut_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
             df.unpersist()
         return out
     return df.localCheckpoint(eager=eager)
+

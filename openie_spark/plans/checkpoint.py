@@ -182,16 +182,15 @@ def record_stage_done(
     run_id: str,
     stage: str,
     fingerprint: str,
-    n_in: int,
     n_out: int,
     wall_ms: int,
 ) -> None:
     """Append the single stage-level 'done' row (partition_id sentinel).
-    ``n_in``/``n_out`` of -1 mean 'not counted' (collect_counts=False
-    runs skip informational count actions)."""
-    spark = cat.spark
-    stats = spark.createDataFrame(
-        [(STAGE_SENTINEL_PID, int(n_in), int(n_out))],
+    A global stage's input is not counted, so ``n_in`` is -1; ``n_out`` of
+    -1 means 'not counted' (collect_counts=False runs skip informational
+    count actions)."""
+    stats = cat.spark.createDataFrame(
+        [(STAGE_SENTINEL_PID, -1, int(n_out))],
         "partition_id int, n_in long, n_triples long",
     )
     record_done(cat, run_id, stage, fingerprint, stats, wall_ms)

@@ -17,7 +17,7 @@ one canonical_id = min(component).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +32,34 @@ from openie_spark.operators.skew import hot_keys, salted_join, salted_repartitio
 from openie_spark.plans import checkpoint as ckpt
 from openie_spark.schemas import EDGES_SCHEMA, VERTICES_SCHEMA, assert_schema
 
+STAGES = ("extract", "link", "canonicalize", "materialize")
+
+# Key share above which materialize salts a key (salted shuffle joins only).
+HOT_SHARE = 0.02
+# Per-mille deterministic doc sample for the in-run invariant gate
+# (1000 = exhaustive).  The gate Arrow-roundtrips + reshuffles its input —
+# at 100 TB an exhaustive in-run check doubles corpus I/O for a canary, so
+# it probes a hash-stable 5% slice (the same docs every run); the
+# EXHAUSTIVE per-row gate lives in pytest L3a and the corruption-detection
+# tests target the checker directly.
+INVARIANT_SAMPLE_PM = 50
+# Extract-stage physical plan.  Both plans salt-repartition on doc_id:
+#   salted:    full-width salt → perfectly uniform extraction, but the
+#              triples must be re-shuffled onto partition_id before the
+#              partitioned write — a second shuffle of the LARGER side
+#              (triples + deps outweigh the raw docs ~2:1);
+#   clustered: bounded salt pmod(xxhash64(doc_id), gran), gran a multiple
+#              of n_buckets — the salt REFINES partition_id, so the UDF
+#              output is already clustered and the triples shuffle goes;
+#              gran ≥ 16 × shuffle partitions keeps extraction balanced.
+# Clustered runs iff the gran sub-buckets hold ≥ CLUSTER_MIN_DOCS_PER_BUCKET
+# pending docs each — relative, so it self-scales with parallelism.
+# Measured interleaved A/B on one host: 195-doc sub-buckets (200 k docs)
+# clustered LOSES, 9.8 s vs 5.8 s (1024 tiny files + 256 tiny UDF tasks);
+# 3.9 k-doc sub-buckets (2 M docs) it WINS, 29.6 s vs 35.4 s.  On a
+# 1000-executor cluster (nparts ~16 k) it engages from ~256 M pending docs.
+CLUSTER_MIN_DOCS_PER_BUCKET = 1000
+
 
 @dataclass
 class PipelineConfig:
@@ -39,7 +67,6 @@ class PipelineConfig:
     n_buckets: int = 64
     repartition: int | None = None  # default: spark.sql.shuffle.partitions
     salt: int = 8
-    hot_share: float = 0.02
     use_manual_salt: bool = True
     # broadcast the vocab-bounded mention→canonical map into the two
     # triples joins: a broadcast hash join never shuffles the (huge)
@@ -47,42 +74,9 @@ class PipelineConfig:
     # off when the distinct-mention vocabulary outgrows the broadcast
     # budget (1e9+ mentions) — the salted shuffle path then takes over.
     broadcast_canon: bool = True
-    # Extract-stage physical plan.  Both variants are salted repartitions
-    # on doc_id (the north rule's driver); they differ in what the salt IS:
-    #   False: full-width salt (xxhash64) → perfectly uniform extraction,
-    #          but the triples output must be re-shuffled onto partition_id
-    #          before the partitioned write — a second shuffle of the
-    #          LARGER side (triples + deps outweigh the raw docs ~2:1).
-    #   True:  bounded salt pmod(xxhash64(doc_id), gran) where gran is a
-    #          multiple of n_buckets — the salt REFINES partition_id, so
-    #          the UDF output is already clustered for the write and the
-    #          triples shuffle disappears.  gran ≥ 16×shuffle-partitions
-    #          sub-buckets keep extraction balanced.
-    #   None (default): auto — clustered iff every sub-bucket holds ≥
-    #          cluster_min_docs_per_bucket docs.  The threshold is RELATIVE
-    #          (docs per sub-bucket, not total docs) so it self-scales with
-    #          parallelism: measured interleaved A/B on this host — 200 k
-    #          docs / 195-doc sub-buckets: clustered LOSES (≈9.8 s vs
-    #          5.8 s; 1024 tiny files + 256 tiny UDF tasks dominate); 2 M
-    #          docs / 3.9 k-doc sub-buckets: clustered WINS (29.6 s vs
-    #          35.4 s), and at real network-shuffle scale the win grows
-    #          with the triples-side volume (triples + deps outweigh the
-    #          raw docs).  On a 1000-executor cluster (nparts ~16 k) the
-    #          switch engages from ~256 M pending docs — the 10^12-doc
-    #          regime the north star targets.
-    cluster_before_extract: bool | None = None
-    cluster_min_docs_per_bucket: int = 1000
     collect_counts: bool = True  # False: skip informational count() actions
     check_invariant: bool = True  # in-run span-sequence gate (OP-25)
-    # Per-mille deterministic doc sample for the in-run invariant gate
-    # (1000 = exhaustive).  The gate Arrow-roundtrips + reshuffles its
-    # input — at 100 TB an exhaustive in-run check doubles corpus I/O for
-    # a canary, so the default probes a hash-stable 5% slice (the same
-    # docs every run); the EXHAUSTIVE per-row gate lives in pytest L3a
-    # and the corruption-detection tests target the checker directly.
-    invariant_sample_pm: int = 50
-    stages: tuple = ("extract", "link", "canonicalize", "materialize")
-    metrics: dict = field(default_factory=dict)
+    stages: tuple = STAGES  # a prefix of STAGES: the run stops at the first absent
 
 
 def run_pipeline(
@@ -144,9 +138,7 @@ def run_pipeline(
                 cat.drop_partitions("triples", "partition_id", recompute)
             factor = max(1, -(-16 * nparts // cfg.n_buckets))
             gran = cfg.n_buckets * factor
-            clustered = cfg.cluster_before_extract
-            if clustered is None:
-                clustered = pending >= gran * cfg.cluster_min_docs_per_bucket
+            clustered = pending >= gran * CLUSTER_MIN_DOCS_PER_BUCKET
             # partition_id is a pure function of doc_id — recompute, don't join
             pid_expr = F.pmod(F.xxhash64("doc_id"), F.lit(cfg.n_buckets)).cast(
                 "int"
@@ -160,14 +152,12 @@ def run_pipeline(
                 # sub-bucket-granularity imbalance.
                 sub = F.pmod(F.xxhash64("doc_id"), F.lit(gran)).cast("int")
                 balanced = todo.drop("partition_id").repartition(4 * nparts, sub)
-                triples_out = extract_stage(balanced).withColumn(
-                    "partition_id", pid_expr
-                )
             else:
-                balanced = salted_repartition(todo, nparts, "doc_id")
-                triples = extract_stage(balanced.drop("partition_id")).withColumn(
-                    "partition_id", pid_expr
+                balanced = salted_repartition(todo, nparts, "doc_id").drop(
+                    "partition_id"
                 )
+            triples_out = extract_stage(balanced).withColumn("partition_id", pid_expr)
+            if not clustered:
                 # cluster rows by bucket before the partitioned write: each
                 # bucket lands in exactly one task, so each partition dir
                 # gets one file (unclustered, every task would touch every
@@ -175,7 +165,7 @@ def run_pipeline(
                 # the session's parallelism — below n_buckets a task writes
                 # several whole buckets, and the write stage's fixed
                 # per-task cost does not scale with n_buckets.
-                triples_out = triples.repartition(
+                triples_out = triples_out.repartition(
                     min(nparts, cfg.n_buckets), "partition_id"
                 )
             cat.write_table(triples_out, "triples", partition_by=["partition_id"])
@@ -238,11 +228,9 @@ def run_pipeline(
     # different computations.  Two extra full scans; operators running
     # fixed-cost-sensitive jobs may disable it.
     if cfg.check_invariant:
-        probe = docs
-        if cfg.invariant_sample_pm < 1000:
-            probe = docs.where(
-                F.pmod(F.xxhash64("doc_id"), F.lit(1000)) < cfg.invariant_sample_pm
-            )
+        probe = docs.where(
+            F.pmod(F.xxhash64("doc_id"), F.lit(1000)) < INVARIANT_SAMPLE_PM
+        )
         inv = check_span_invariant(probe, arrow_roundtrip(probe))
         out["span_invariant"] = inv
         if not inv["ok"]:
@@ -260,10 +248,10 @@ def run_pipeline(
     alias_fp = ckpt.table_fingerprint(alias_dict)
     link_fp = f"{fingerprint}+{alias_fp}"
 
-    # ---- link stage (stage-level checkpointed, resumable) -----------------
-    link_done = ckpt.STAGE_SENTINEL_PID in ckpt.done_pids(
-        ck_state, "link", link_fp
-    ) and cat.exists("links")
+    # ---- link → canonicalize → materialize: one shape per stage -----------
+    # _stage_done gate, timed compute-or-load, result count, _finish_stage.
+    # perfbench/tracer.py names a count() by its line in this body.
+    link_done = _stage_done(ck_state, cat, "link", link_fp, "links")
     with ckpt.StageTimer() as t_link:
         mentions = mentions_from_triples(triples)
         if link_done:
@@ -273,185 +261,163 @@ def run_pipeline(
             cat.write_table(links, "links")
     if cfg.collect_counts:
         out["n_links"] = links.count()
-    if not link_done:
-        ckpt.record_stage_done(
-            cat,
-            cfg.run_id,
-            "link",
-            link_fp,
-            -1,
-            out.get("n_links", -1),
-            t_link.wall_ms,
-        )
-    out["link_wall_ms"] = t_link.wall_ms
-    out["link_skipped"] = link_done
+    _finish_stage(cat, cfg.run_id, out, "link", link_fp, link_done, t_link, "n_links")
     if "canonicalize" not in cfg.stages:
         return out
 
-    # ---- canonicalize (stage-level checkpointed, resumable) ---------------
-    canon_done = ckpt.STAGE_SENTINEL_PID in ckpt.done_pids(
-        ck_state, "canonicalize", link_fp
-    ) and cat.exists("cc_assign")
+    canon_done = _stage_done(ck_state, cat, "canonicalize", link_fp, "cc_assign")
     with ckpt.StageTimer() as t_canon:
         if canon_done:
             cc = cat.load_table("cc_assign")
         else:
-            mention_nodes = links.select(
-                F.xxhash64("mention_norm").alias("src"),
-                F.col("entity_id").alias("dst"),
-                "method",
-            )
-            sameas = mention_nodes.where(F.col("method") != "minted").select(
-                "src", "dst"
-            )
-            self_loops = mention_nodes.where(F.col("method") == "minted").select(
-                F.col("dst").alias("src"), F.col("dst").alias("dst")
-            )
-            cc = connected_components(sameas.unionByName(self_loops))
-            cc = cut_lineage(cc, eager=True)
+            cc = cut_lineage(connected_components(_sameas_edges(links)), eager=True)
             cat.write_table(cc, "cc_assign")
     if cfg.collect_counts:
         out["n_components"] = cc.where(F.col("id") == F.col("rep")).count()
-    if not canon_done:
-        ckpt.record_stage_done(
-            cat,
-            cfg.run_id,
-            "canonicalize",
-            link_fp,
-            -1,
-            out.get("n_components", -1),
-            t_canon.wall_ms,
-        )
-    out["canonicalize_wall_ms"] = t_canon.wall_ms
-    out["canonicalize_skipped"] = canon_done
+    _finish_stage(
+        cat, cfg.run_id, out, "canonicalize", link_fp, canon_done, t_canon,
+        "n_components",
+    )
     if "materialize" not in cfg.stages:
         return out
 
-    # ---- materialize vertices + edges (stage-level checkpointed) ----------
-    mat_done = (
-        ckpt.STAGE_SENTINEL_PID in ckpt.done_pids(ck_state, "materialize", link_fp)
-        and cat.exists("vertices")
-        and cat.exists("edges")
-    )
-    if mat_done:
-        with ckpt.StageTimer() as t_mat:
-            hot = []
-        if cfg.collect_counts:
-            out["n_vertices"] = cat.load_table("vertices").count()
-            out["n_edges"] = cat.load_table("edges").count()
-        out["n_hot_keys"] = 0
-        out["materialize_wall_ms"] = t_mat.wall_ms
-        out["materialize_skipped"] = True
-        return out
+    mat_done = _stage_done(ck_state, cat, "materialize", link_fp, "vertices", "edges")
     with ckpt.StageTimer() as t_mat:
-        # node table: mention nodes + dict entity nodes
-        mention_counts = mentions.groupBy("mention_norm").agg(
-            F.count("*").alias("n_mentions")
+        hot = [] if mat_done else _materialize(
+            cat, cfg, triples, mentions, links, cc, alias_dict
         )
-        mention_vertices = (
-            links.join(mention_counts, "mention_norm", "left")
-            .select(
-                F.xxhash64("mention_norm").alias("entity_id"),
-                F.col("mention_norm").alias("name"),
-                F.coalesce("n_mentions", F.lit(0)).alias("n_mentions"),
-            )
-        )
-        dict_vertices = (
-            links.where(F.col("method") != "minted")
-            .join(
-                alias_dict.select("entity_id", "entity_name").dropDuplicates(
-                    ["entity_id"]
-                ),
-                "entity_id",
-            )
-            .select(
-                "entity_id",
-                F.col("entity_name").alias("name"),
-                F.lit(0).cast("long").alias("n_mentions"),
-            )
-            .dropDuplicates(["entity_id"])
-        )
-        nodes = mention_vertices.unionByName(dict_vertices).dropDuplicates(
-            ["entity_id"]
-        )
-        vertices = (
-            nodes.join(cc, nodes.entity_id == cc.id, "left")
-            .select(
-                "entity_id",
-                F.coalesce("rep", F.col("entity_id")).alias("canonical_id"),
-                "name",
-                "n_mentions",
-            )
-        )
-        assert_schema(vertices, VERTICES_SCHEMA, "vertices")
-
-        # triples → canonical edges; mention_norm → node id → canonical id
-        norm_to_canon = links.select(
-            "mention_norm", F.xxhash64("mention_norm").alias("node_id")
-        ).join(cc, F.col("node_id") == cc.id, "left").select(
-            "mention_norm",
-            F.coalesce("rep", F.col("node_id")).alias("canonical_id"),
-        )
-        # one explode-projection scan of triples (not a 2x union of
-        # projections): subj_norm and arg_norm rows come out of the same
-        # pass, and hot_keys itself derives its total from the grouped
-        # counts — triples is read exactly once for hot-key detection.
-        # Skipped entirely when the canonical map is broadcast: a
-        # broadcast hash join never shuffles the big side, so the hot
-        # list would be dead diagnostics bought with a full triples scan.
-        hot = (
-            hot_keys(
-                triples.select(
-                    F.explode(F.array("subj_norm", "arg_norm")).alias("k")
-                ),
-                "k",
-                cfg.hot_share,
-            )
-            if cfg.use_manual_salt and not cfg.broadcast_canon
-            else []
-        )
-        t1 = salted_join(
-            triples.withColumnRenamed("subj_norm", "mention_norm"),
-            norm_to_canon.withColumnRenamed("canonical_id", "subj_canonical"),
-            "mention_norm",
-            hot,
-            cfg.salt,
-            salt_src=["doc_id", "sent_idx", "arg"],
-            broadcast_small=cfg.broadcast_canon,
-        ).drop("mention_norm")
-        t2 = salted_join(
-            t1.withColumnRenamed("arg_norm", "mention_norm"),
-            norm_to_canon.withColumnRenamed("canonical_id", "obj_canonical"),
-            "mention_norm",
-            hot,
-            cfg.salt,
-            salt_src=["doc_id", "sent_idx", "subj"],
-            broadcast_small=cfg.broadcast_canon,
-        ).drop("mention_norm")
-        edges = t2.select(
-            "subj_canonical",
-            F.col("rel").alias("pred"),
-            "obj_canonical",
-            "doc_id",
-            "sent_idx",
-            "conf",
-        )
-        assert_schema(edges, EDGES_SCHEMA, "edges")
-        cat.write_table(vertices, "vertices")
-        cat.write_table(edges, "edges")
     if cfg.collect_counts:
         out["n_vertices"] = cat.load_table("vertices").count()
         out["n_edges"] = cat.load_table("edges").count()
-    ckpt.record_stage_done(
-        cat,
-        cfg.run_id,
-        "materialize",
-        link_fp,
-        -1,
-        out.get("n_edges", -1),
-        t_mat.wall_ms,
-    )
     out["n_hot_keys"] = len(hot)
-    out["materialize_wall_ms"] = t_mat.wall_ms
-    out["materialize_skipped"] = False
+    _finish_stage(
+        cat, cfg.run_id, out, "materialize", link_fp, mat_done, t_mat, "n_edges"
+    )
     return out
+
+
+def _stage_done(
+    ck_state: set[tuple], cat: ParquetCatalog, stage: str, fp: str, *tables: str
+) -> bool:
+    """A global stage is done when its sentinel checkpoint row matches
+    ``fp`` AND every table it writes exists: a crash mid-write, or between
+    the write and the row, leaves the stage to recompute."""
+    return ckpt.STAGE_SENTINEL_PID in ckpt.done_pids(ck_state, stage, fp) and all(
+        cat.exists(t) for t in tables
+    )
+
+
+def _finish_stage(
+    cat: ParquetCatalog, run_id: str, out: dict, stage: str, fp: str,
+    skipped: bool, timer: ckpt.StageTimer, n_key: str,
+) -> None:
+    """Append the stage's sentinel row unless it was skipped (it already
+    has one), then report its wall time and skip flag.  The row's count
+    is ``out[n_key]``, -1 when counts are off."""
+    if not skipped:
+        n_out = out.get(n_key, -1)
+        ckpt.record_stage_done(cat, run_id, stage, fp, n_out, timer.wall_ms)
+    out[f"{stage}_wall_ms"] = timer.wall_ms
+    out[f"{stage}_skipped"] = skipped
+
+
+def _sameas_edges(links: DataFrame) -> DataFrame:
+    """Component-graph edges: mention node → linked dict entity for every
+    non-minted link; a minted mention is a self-loop on its minted id, so
+    it survives as an isolated vertex."""
+    nodes = links.select(
+        F.xxhash64("mention_norm").alias("src"),
+        F.col("entity_id").alias("dst"),
+        "method",
+    )
+    sameas = nodes.where(F.col("method") != "minted").select("src", "dst")
+    self_loops = nodes.where(F.col("method") == "minted").select(
+        F.col("dst").alias("src"), F.col("dst").alias("dst")
+    )
+    return sameas.unionByName(self_loops)
+
+
+def _materialize(
+    cat: ParquetCatalog, cfg: PipelineConfig, triples: DataFrame,
+    mentions: DataFrame, links: DataFrame, cc: DataFrame, alias_dict: DataFrame,
+) -> list:
+    """Write the vertices and edges tables; returns the hot keys the
+    salted joins split (none on the broadcast path)."""
+    # node table: mention nodes + dict entity nodes
+    mention_counts = mentions.groupBy("mention_norm").agg(
+        F.count("*").alias("n_mentions")
+    )
+    mention_vertices = links.join(mention_counts, "mention_norm", "left").select(
+        F.xxhash64("mention_norm").alias("entity_id"),
+        F.col("mention_norm").alias("name"),
+        F.coalesce("n_mentions", F.lit(0)).alias("n_mentions"),
+    )
+    dict_vertices = (
+        links.where(F.col("method") != "minted")
+        .join(
+            alias_dict.select("entity_id", "entity_name").dropDuplicates(["entity_id"]),
+            "entity_id",
+        )
+        .select(
+            "entity_id",
+            F.col("entity_name").alias("name"),
+            F.lit(0).cast("long").alias("n_mentions"),
+        )
+        .dropDuplicates(["entity_id"])
+    )
+    nodes = mention_vertices.unionByName(dict_vertices).dropDuplicates(["entity_id"])
+    vertices = nodes.join(cc, nodes.entity_id == cc.id, "left").select(
+        "entity_id",
+        F.coalesce("rep", F.col("entity_id")).alias("canonical_id"),
+        "name",
+        "n_mentions",
+    )
+    assert_schema(vertices, VERTICES_SCHEMA, "vertices")
+
+    # triples → canonical edges; mention_norm → node id → canonical id
+    norm_to_canon = links.select(
+        "mention_norm", F.xxhash64("mention_norm").alias("node_id")
+    ).join(cc, F.col("node_id") == cc.id, "left").select(
+        "mention_norm",
+        F.coalesce("rep", F.col("node_id")).alias("canonical_id"),
+    )
+    # one explode-projection scan of triples (not a 2x union of
+    # projections): subj_norm and arg_norm rows come out of the same
+    # pass, and hot_keys itself derives its total from the grouped
+    # counts — triples is read exactly once for hot-key detection.
+    # Skipped entirely when the canonical map is broadcast: a
+    # broadcast hash join never shuffles the big side, so the hot
+    # list would be dead diagnostics bought with a full triples scan.
+    hot = (
+        hot_keys(
+            triples.select(F.explode(F.array("subj_norm", "arg_norm")).alias("k")),
+            "k",
+            HOT_SHARE,
+        )
+        if cfg.use_manual_salt and not cfg.broadcast_canon
+        else []
+    )
+
+    def canon_join(df: DataFrame, norm: str, canon: str, salt_src: list) -> DataFrame:
+        return salted_join(
+            df.withColumnRenamed(norm, "mention_norm"),
+            norm_to_canon.withColumnRenamed("canonical_id", canon),
+            "mention_norm",
+            hot,
+            cfg.salt,
+            salt_src=salt_src,
+            broadcast_small=cfg.broadcast_canon,
+        ).drop("mention_norm")
+
+    t1 = canon_join(
+        triples, "subj_norm", "subj_canonical", ["doc_id", "sent_idx", "arg"]
+    )
+    t2 = canon_join(t1, "arg_norm", "obj_canonical", ["doc_id", "sent_idx", "subj"])
+    edges = t2.select(
+        "subj_canonical", F.col("rel").alias("pred"), "obj_canonical",
+        "doc_id", "sent_idx", "conf",
+    )
+    assert_schema(edges, EDGES_SCHEMA, "edges")
+    cat.write_table(vertices, "vertices")
+    cat.write_table(edges, "edges")
+    return hot

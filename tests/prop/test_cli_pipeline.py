@@ -74,3 +74,29 @@ def test_cli_delta_append_recomputes_only_delta(
     # incremental end state == from-scratch: the golden corpus's pinned
     # RULESET v3 triple count (tests/spec/test_ruleset_v3.py)
     assert r2["n_triples"] == 2687
+
+
+def test_cli_rejects_stage_list_that_is_not_a_prefix(tmp_path, capsys):
+    """The pipeline stops at the first stage missing from its list, so a
+    list that skips one (``materialize`` alone, ``extract,materialize``)
+    would silently run a prefix: the CLI refuses it before Spark starts."""
+    import importlib.util
+
+    import pytest
+
+    spec = importlib.util.spec_from_file_location(
+        "run_pipeline_cli", REPO / "jobs" / "run_pipeline.py"
+    )
+    cli = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(cli)
+    for stages in ("materialize", "extract,materialize"):
+        with pytest.raises(SystemExit) as exc:
+            cli.main([
+                "--input", str(tmp_path / "docs.parquet"),
+                "--alias-dict", str(tmp_path / "alias.parquet"),
+                "--output", str(tmp_path / "kg"),
+                "--run-id", "bad-stage",
+                "--stage", stages,
+            ])
+        assert exc.value.code == 2
+        assert "prefix" in capsys.readouterr().err

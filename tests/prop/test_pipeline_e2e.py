@@ -167,11 +167,17 @@ def test_stage_resume_kill_after_link(
     assert sorted(map(tuple, cat_kill.load_table("vertices").collect())) == v_full
     assert sorted(map(tuple, cat_kill.load_table("edges").collect())) == e_full
 
-    # a fully-completed run resumes as a no-op on every stage
+    # a fully-completed run resumes as a no-op on every stage: same counts
+    # as the run that computed them, and no checkpoint row appended
+    n_ck = cat_kill.load_table("checkpoint").count()
     r3 = run_pipeline(spark, docs, aliases, cat_kill, PipelineConfig(run_id="w"))
     assert r3["extract_pending_docs"] == 0
     assert r3["link_skipped"] and r3["canonicalize_skipped"]
     assert r3["materialize_skipped"]
+    for k in ("n_links", "n_components", "n_vertices", "n_edges"):
+        assert r3[k] == r2[k], k
+    assert r3["n_hot_keys"] == 0
+    assert cat_kill.load_table("checkpoint").count() == n_ck
     assert sorted(map(tuple, cat_kill.load_table("vertices").collect())) == v_full
 
     # changed alias dict → link fingerprint mismatch → link + downstream
@@ -359,46 +365,40 @@ def test_chaos_mid_materialize_partial_write_converges(
 
 
 def test_clustered_extract_plan_bit_identical(
-    spark, golden_docs_path, alias_dict_path, tmp_path
+    spark, golden_docs_path, alias_dict_path, tmp_path, monkeypatch
 ):
     """The one-shuffle clustered extract plan (bounded doc_id salt refining
     partition_id — no triples re-shuffle before the partitioned write) must
     produce the exact same triples TABLE (content AND partition_id layout)
-    as the two-shuffle salted plan, and the auto switch must pick it for
-    large inputs only."""
+    as the two-shuffle salted plan.  The golden corpus (~hundreds of docs)
+    stays on the salted plan by default; a zero per-sub-bucket threshold
+    switches it to the clustered plan."""
+    from openie_spark.plans import pipeline as pl
+
     docs = load_docs(spark, golden_docs_path)
     aliases = load_alias_dict(spark, alias_dict_path)
+    salted_calls = []
+    salted_repartition = pl.salted_repartition
 
-    cat_salted = ParquetCatalog(spark, str(tmp_path / "salted"))
-    cat_clustered = ParquetCatalog(spark, str(tmp_path / "clustered"))
-    run_pipeline(
-        spark, docs, aliases, cat_salted,
-        PipelineConfig(
-            run_id="ps", stages=("extract",), cluster_before_extract=False
-        ),
-    )
-    run_pipeline(
-        spark, docs, aliases, cat_clustered,
-        PipelineConfig(
-            run_id="pc", stages=("extract",), cluster_before_extract=True
-        ),
-    )
-    a = sorted(map(tuple, cat_salted.load_table("triples").collect()))
-    b = sorted(map(tuple, cat_clustered.load_table("triples").collect()))
+    def spy(*a, **k):
+        salted_calls.append(a)
+        return salted_repartition(*a, **k)
+
+    monkeypatch.setattr(pl, "salted_repartition", spy)
+
+    def extract(name):
+        salted_calls.clear()
+        cat = ParquetCatalog(spark, str(tmp_path / name))
+        cfg = PipelineConfig(run_id=name, stages=("extract",))
+        run_pipeline(spark, docs, aliases, cat, cfg)
+        return sorted(map(tuple, cat.load_table("triples").collect())), salted_calls[:]
+
+    a, calls = extract("salted")
+    assert calls, "default config did not take the salted plan"
+    monkeypatch.setattr(pl, "CLUSTER_MIN_DOCS_PER_BUCKET", 0)
+    b, calls = extract("clustered")
+    assert not calls, "zero threshold did not take the clustered plan"
     assert a == b and len(a) > 1000
-
-    # auto mode: golden corpus (~hundreds of docs) stays on the salted plan;
-    # a tiny per-sub-bucket threshold forces the clustered plan — both under
-    # the default config surface users actually touch
-    cat_auto = ParquetCatalog(spark, str(tmp_path / "auto"))
-    run_pipeline(
-        spark, docs, aliases, cat_auto,
-        PipelineConfig(
-            run_id="pa", stages=("extract",), cluster_min_docs_per_bucket=0
-        ),
-    )
-    c = sorted(map(tuple, cat_auto.load_table("triples").collect()))
-    assert c == a
 
 
 def test_incremental_delta_append_recomputes_only_touched_buckets(
@@ -576,10 +576,7 @@ def test_triples_one_file_per_bucket_below_n_buckets_parallelism(
     docs_all = load_docs(spark, golden_docs_path)
     aliases = load_alias_dict(spark, alias_dict_path)
     pid = F.pmod(F.xxhash64("doc_id"), F.lit(64)).cast("int")
-    cfg = PipelineConfig(
-        run_id="files", n_buckets=64, cluster_before_extract=False,
-        stages=("extract",),
-    )
+    cfg = PipelineConfig(run_id="files", n_buckets=64, stages=("extract",))
 
     def files_per_bucket():
         dirs = sorted(Path(cat.root, "triples").glob("partition_id=*"))

@@ -105,3 +105,27 @@ def test_kg_operators_cut_through_seam_under_reliable(spark, tmp_path, monkeypat
         monkeypatch.undo()
         for k, v in saved.items():
             spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+
+
+def test_reliable_mode_follows_checkpoint_dir_conf_change(spark, tmp_path):
+    """A checkpointDir conf set after the session's first reliable cut must
+    take effect: the next cut writes its files under the new dir."""
+    from pathlib import Path
+
+    saved = {k: spark.conf.get(k, None) for k in (CONF_KEY, CKPT_DIR_KEY)}
+    dir_a, dir_b = tmp_path / "a", tmp_path / "b"
+
+    def files(d: Path) -> list:
+        return [p for p in d.rglob("*") if p.is_file()] if d.exists() else []
+
+    spark.conf.set(CONF_KEY, "reliable")
+    try:
+        spark.conf.set(CKPT_DIR_KEY, str(dir_a))
+        assert cut_lineage(spark.range(10), eager=True).count() == 10
+        assert files(dir_a)
+        spark.conf.set(CKPT_DIR_KEY, str(dir_b))
+        assert cut_lineage(spark.range(20), eager=True).count() == 20
+        assert files(dir_b)
+    finally:
+        for k, v in saved.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
