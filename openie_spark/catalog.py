@@ -5,17 +5,19 @@ jar and no network, so all pipeline code talks to this seam and never to a
 concrete format.  Two implementations:
 
   - ParquetCatalog (default here): plain parquet directories under a root,
-    with dynamic partition-overwrite for idempotent re-writes and an
-    append + read-side latest-wins emulation of MERGE for the checkpoint
-    table.
+    with dynamic partition-overwrite for idempotent re-writes.
   - IcebergCatalog (documented, unexercised in-sandbox): on a real cluster
     add
         --packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<ver>
         --conf spark.sql.catalog.kg=org.apache.iceberg.spark.SparkCatalog
         --conf spark.sql.catalog.kg.type=hive   (or hadoop/rest)
     and tables resolve as ``kg.db.<name>``; write_table uses
-    ``df.writeTo(name).overwritePartitions()`` and merge_table a real
-    ``MERGE INTO`` keyed on (run_id, stage, partition_id).
+    ``df.writeTo(name).overwritePartitions()``.
+
+Both expose the same six calls the pipeline and checkpoint code make:
+exists, load_table, write_table, append_table, list_partitions and
+drop_partitions.  Checkpoint rows go through append_table on both, with
+latest-wins resolved on read (plans/checkpoint.py).
 """
 
 from __future__ import annotations
@@ -34,36 +36,11 @@ class ParquetCatalog:
     def _path(self, name: str) -> str:
         return str(Path(self.root) / name)
 
-    def _recover_compact(self, name: str) -> None:
-        """Crash recovery for compact()'s two-rename swap: a crash between
-        ``src.rename(old)`` and ``tmp.rename(src)`` leaves the table path
-        absent with the original data stranded under ``<name>__precompact``.
-        Every read-path entry point calls this first — if the table is gone
-        but the precompact generation exists, restore it (the staged
-        ``__compacting`` copy is discarded; it may be complete, but the
-        original is the provably consistent generation).  A leftover
-        ``__precompact`` NEXT TO a live table (crash after the second
-        rename, before cleanup) is stale and removed."""
-        import shutil
-
-        src = Path(self._path(name))
-        old = src.with_name(src.name + "__precompact")
-        tmp = src.with_name(src.name + "__compacting")
-        if src.exists():
-            if old.exists():  # swap completed; cleanup didn't
-                shutil.rmtree(old, ignore_errors=True)
-            return
-        if old.exists():
-            old.rename(src)
-            shutil.rmtree(tmp, ignore_errors=True)
-
     def exists(self, name: str) -> bool:
-        self._recover_compact(name)
         p = Path(self._path(name))
         return p.exists() and any(p.glob("**/*.parquet"))
 
     def load_table(self, name: str, schema: StructType | None = None) -> DataFrame:
-        self._recover_compact(name)
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)
@@ -82,107 +59,6 @@ class ParquetCatalog:
 
     def append_table(self, df: DataFrame, name: str) -> None:
         df.write.mode("append").parquet(self._path(name))
-
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        name: str,
-        bucket_by: list[str],
-        n_buckets: int,
-    ) -> None:
-        """Bucketed (hash-clustered + per-bucket sorted) external table —
-        the co-located-join strategy: two tables bucketed by the same keys
-        into the same bucket count join WITHOUT a shuffle on either side
-        (plan-gated in tests/unit/test_bucketing.py).  At the 100 TB
-        posture this is how repeatedly-joined tables (triples ⋈ links,
-        edges ⋈ vertices) amortize their shuffle across every downstream
-        consumer.  Bucket metadata lives in the session catalog
-        (`spark.table(name)`); the parquet files live under the catalog
-        root like every other table."""
-        (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(n_buckets, *bucket_by)
-            .sortBy(*bucket_by)
-            .option("path", self._path(name))
-            .saveAsTable(name)
-        )
-
-    def load_bucketed(self, name: str) -> DataFrame:
-        """Read a bucketed table THROUGH the catalog (a plain
-        read.parquet(path) would drop the bucket metadata and reintroduce
-        the shuffle)."""
-        return self.spark.table(name)
-
-    def table_bytes(self, name: str) -> int:
-        """On-disk parquet bytes (driver-side listing — O(#files), the
-        same cost any table-maintenance planner pays)."""
-        return sum(
-            f.stat().st_size for f in Path(self._path(name)).glob("**/*.parquet")
-        )
-
-    def compact(self, name: str, target_file_bytes: int = 128 * 1024 * 1024) -> int:
-        """Small-file compaction: rewrite the table into
-        ceil(bytes / target) files of ~target size.  The 100 TB
-        operational reality this addresses: a 10k-task job writing per
-        partition-value produces millions of KB-sized files, and every
-        downstream scan then pays per-file open/footer cost that dwarfs
-        the read itself (the classic small-files problem).
-
-        Plain parquet has no atomic rewrite, and Spark cannot safely
-        overwrite a path it is reading — so this stages the compacted
-        copy under a sibling path and swaps via two renames (Iceberg's
-        rewrite_data_files does this transactionally — see
-        IcebergCatalog.compact).  Returns the new file count.
-
-        Refusals (each protects an invariant a blind rewrite would
-        silently destroy): bucketed layouts (detected from the on-disk
-        `_NNNNN.cNNN` bucket-file naming — session-catalog state is
-        neither necessary nor sufficient), hive-partitioned layouts
-        (partition pruning), and a concurrent append landing between the
-        staging read and the swap (lost-update; detected by re-listing
-        the source files before the rename pair and aborting with the
-        original table untouched)."""
-        import math
-        import re
-        import shutil
-
-        self._recover_compact(name)
-        src = Path(self._path(name))
-        if not src.exists():
-            raise ValueError(f"compact: no such table {name!r} under {self.root}")
-        if any("=" in d.name for d in src.iterdir() if d.is_dir()):
-            raise ValueError(
-                f"compact: {name!r} is hive-partitioned; a blind rewrite "
-                "would flatten the partition layout (and its pruning) — "
-                "compact each partition directory, or rewrite via "
-                "write_table(partition_by=...)"
-            )
-        bucket_pat = re.compile(r"_\d{5}\.c\d{3}")
-        before = sorted(p.name for p in src.glob("**/*.parquet"))
-        if any(bucket_pat.search(f) for f in before):
-            raise ValueError(
-                f"compact: {name!r} has a bucketed file layout; rewrite it "
-                "with write_bucketed to preserve the bucket/sort clustering"
-            )
-        n_files = max(1, math.ceil(self.table_bytes(name) / target_file_bytes))
-        tmp = src.with_name(src.name + "__compacting")
-        old = src.with_name(src.name + "__precompact")
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        self.load_table(name).repartition(n_files).write.mode("overwrite").parquet(
-            str(tmp)
-        )
-        if sorted(p.name for p in src.glob("**/*.parquet")) != before:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise RuntimeError(
-                f"compact: {name!r} changed during compaction (concurrent "
-                "append?); aborted with the original table untouched"
-            )
-        src.rename(old)
-        tmp.rename(src)
-        shutil.rmtree(old, ignore_errors=True)
-        return len(list(src.glob("**/*.parquet")))
 
     def list_partitions(self, name: str, part_col: str) -> list[int]:
         """Partition values currently ON DISK (``<col>=<val>`` dir names)
@@ -210,20 +86,6 @@ class ParquetCatalog:
         root = Path(self._path(name))
         for v in values:
             shutil.rmtree(root / f"{part_col}={v}", ignore_errors=True)
-
-    def drop_table(self, name: str) -> None:
-        import shutil
-
-        if any(t.name == name for t in self.spark.catalog.listTables()):
-            self.spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-        shutil.rmtree(self._path(name), ignore_errors=True)
-        # Also remove compact()'s staging siblings: a stranded
-        # <name>__precompact would otherwise be "restored" by
-        # _recover_compact on the next exists()/load_table(), resurrecting
-        # a table the caller just deleted.
-        shutil.rmtree(self._path(name) + "__precompact", ignore_errors=True)
-        shutil.rmtree(self._path(name) + "__compacting", ignore_errors=True)
-
 
 class IcebergCatalog:
     """Config-documented Iceberg implementation; requires the runtime jar
@@ -272,26 +134,4 @@ class IcebergCatalog:
         vals = ", ".join(str(int(v)) for v in values)
         self.spark.sql(
             f"DELETE FROM {self._tbl(name)} WHERE {part_col} IN ({vals})"
-        )
-
-    def merge_checkpoint(self, df: DataFrame, name: str) -> None:
-        df.createOrReplaceTempView("_ckpt_updates")
-        self.spark.sql(
-            f"""MERGE INTO {self._tbl(name)} t USING _ckpt_updates s
-                ON t.run_id = s.run_id AND t.stage = s.stage
-                   AND t.partition_id = s.partition_id
-                WHEN MATCHED THEN UPDATE SET *
-                WHEN NOT MATCHED THEN INSERT *"""
-        )
-
-    def compact(self, name: str, target_file_bytes: int = 128 * 1024 * 1024) -> None:
-        """Transactional small-file rewrite via the Iceberg maintenance
-        procedure (snapshot-isolated; readers never see a partial
-        state — the property ParquetCatalog.compact can only
-        approximate with its rename swap)."""
-        self.spark.sql(
-            f"""CALL {self.namespace.split('.')[0]}.system.rewrite_data_files(
-                  table => '{self._tbl(name)}',
-                  options => map('target-file-size-bytes',
-                                 '{int(target_file_bytes)}'))"""
         )

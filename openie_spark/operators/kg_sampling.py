@@ -16,12 +16,10 @@ plans/registry.py, extended from threshold-compare to index arithmetic).
 
 Scale shape (100 TB posture): the tail vocabulary is ENTITY-bounded, not
 corpus-bounded — indexed once with a vocabulary-local row_number and met by
-the hashed index either via broadcast (default; vocabularies up to ~100M ids
-broadcast fine as a two-column long table) or, for extreme vocabularies, a
-plain equi-shuffle join on `neg_idx` (broadcast=False).  Everything else is
-map-side column arithmetic on the positives; the optional filtered-setting
-anti-join shuffles on the (head, tail) key the positives are already
-grouped by.
+the hashed index via broadcast (vocabularies up to ~100M ids broadcast fine
+as a two-column long table).  Everything else is map-side column arithmetic
+on the positives; the filtered-setting anti-join shuffles on the (head,
+tail) key the positives are already grouped by.
 """
 
 from __future__ import annotations
@@ -42,16 +40,14 @@ def negative_samples(
     head_col: str = "head",
     tail_col: str = "tail",
     n_neg: int = 2,
-    filtered: bool = True,
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Corrupted-tail negatives: for each positive edge and j in [0, n_neg),
     neg_tail = vocab[ H(head, tail, j) % |vocab| ].
 
-    `filtered=True` drops negatives that happen to be true edges (the
-    "filtered setting" of KG-embedding evaluation) via a left-anti join —
-    so the emitted count can be < n_neg per positive; the hash argument `j`
-    keeps the survivors reproducible.  Self-corruptions (neg == original
+    Negatives that happen to be true edges are dropped (the "filtered
+    setting" of KG-embedding evaluation) via a left-anti join — so the
+    emitted count can be < n_neg per positive; the hash argument `j` keeps
+    the survivors reproducible.  Self-corruptions (neg == original
     tail) are a subset of that filter.
 
     Output: (head, tail, neg_rank, neg_tail) with neg_rank = j.
@@ -89,12 +85,12 @@ def negative_samples(
             portable_hash60("head", "tail", "neg_rank") % F.lit(n_vocab),
         )
     )
-    v = F.broadcast(vocab) if broadcast_vocab else vocab
-    out = cand.join(v, "neg_idx").select("head", "tail", "neg_rank", "neg_tail")
-    if filtered:
-        out = out.join(
+    return (
+        cand.join(F.broadcast(vocab), "neg_idx")
+        .join(
             e.select(F.col("head"), F.col("tail").alias("neg_tail")),
             ["head", "neg_tail"],
             "left_anti",
         )
-    return out.select("head", "tail", "neg_rank", "neg_tail")
+        .select("head", "tail", "neg_rank", "neg_tail")
+    )

@@ -48,86 +48,47 @@ def _weighted_edges(edges: DataFrame) -> DataFrame:
 
 
 def pagerank_mass(
-    edges: DataFrame, iters: int = 5, total_mass: int = 1_000_000
+    edges: DataFrame,
+    iters: int = 5,
+    total_mass: int = 1_000_000,
+    seeds: DataFrame | None = None,
 ) -> DataFrame:
     """edges(src, dst) directed → (id, mass) after ``iters`` exact-integer
     PageRank iterations.  Nodes without in-edges settle at the base mass;
     nodes without out-edges leak their mass (standard no-sink-handling
-    variant, frozen)."""
+    variant, frozen).
+
+    ``seeds(id)`` given: Personalized PageRank (topic-sensitive PageRank,
+    Haveliwala WWW 2002) — the initial and re-base mass land ONLY on the
+    seed set, non-seeds start at 0 and receive exclusively propagated
+    mass, so the result ranks nodes by proximity to the seeds.  The seed
+    flag joins in broadcast once, up front; the loop is the same."""
     base = total_mass * 15 // 100
     nodes = (
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
         .distinct()
     )
-    nodes = cut_lineage(nodes, eager=True)
-    e_w = _weighted_edges(edges)
-    ranks = nodes.withColumn("mass", F.lit(int(total_mass)).cast("long"))
-    for _ in range(iters):
-        contrib = (
-            e_w.join(ranks, e_w.src == ranks.id)
-            .select(
-                F.col("dst").alias("id"),
-                F.expr("(mass * 17) div (20 * d)").alias("c"),
-            )
-            .groupBy("id")
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        ranks = nodes.join(contrib, "id", "left").select(
-            "id",
-            (F.lit(base) + F.coalesce("in_mass", F.lit(0))).cast("long").alias(
-                "mass"
-            ),
-        )
-        ranks = cut_lineage(ranks)
-    return ranks
-
-
-def ppr_mass(
-    edges: DataFrame,
-    seeds: DataFrame,
-    iters: int = 5,
-    total_mass: int = 1_000_000,
-) -> DataFrame:
-    """Personalized PageRank (topic-sensitive PageRank, Haveliwala WWW
-    2002): identical integer-mass propagation to ``pagerank_mass``, but
-    the teleport/re-base mass lands ONLY on the ``seeds(id)`` set —
-    non-seeds start at 0 and receive exclusively propagated mass, so the
-    result ranks nodes by proximity to the seed set.
-
-    Same frozen arithmetic as the global variant: each iteration a node
-    sends ``(mass * 17) div (20 * outdeg)`` along every out-edge and
-    seeds re-base with ``total_mass * 15 // 100``; dangling mass leaks.
-    Plan shape per iteration mirrors pagerank_mass (equi-joins on the
-    node id + map-side-combinable sum + node-universe left join, lineage
-    cut per round); the seed flag joins in broadcast once up front."""
-    base = total_mass * 15 // 100
-    s = seeds.select(F.col("id")).distinct().withColumn("_sb1", F.lit(1))
-    # carry the seed FLAG, not a derived sb>0 proxy: base is an integer
-    # floor of total_mass and can be 0 (total_mass < 7), in which case a
-    # proxy would zero every node's initial mass
-    nodes = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .join(F.broadcast(s), "id", "left")
-        .select(
+    if seeds is None:
+        init, rebase = F.lit(int(total_mass)), F.lit(base)
+    else:
+        s = seeds.select(F.col("id")).distinct().withColumn("_sb1", F.lit(1))
+        # carry the seed FLAG, not a derived sb>0 proxy: base is an integer
+        # floor of total_mass and can be 0 (total_mass < 7), in which case a
+        # proxy would zero every node's initial mass
+        nodes = nodes.join(F.broadcast(s), "id", "left").select(
             "id",
             F.when(F.col("_sb1").isNotNull(), F.lit(1))
             .otherwise(F.lit(0))
             .cast("int")
             .alias("seed"),
         )
-    )
+        is_seed = F.col("seed") == 1
+        init = F.when(is_seed, F.lit(int(total_mass))).otherwise(F.lit(0))
+        rebase = F.when(is_seed, F.lit(base)).otherwise(F.lit(0))
     nodes = cut_lineage(nodes, eager=True)
     e_w = _weighted_edges(edges)
-    ranks = nodes.select(
-        "id",
-        F.when(F.col("seed") == 1, F.lit(int(total_mass)))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("mass"),
-    )
+    ranks = nodes.select("id", init.cast("long").alias("mass"))
     for _ in range(iters):
         contrib = (
             e_w.join(ranks, e_w.src == ranks.id)
@@ -139,13 +100,7 @@ def ppr_mass(
             .agg(F.sum("c").alias("in_mass"))
         )
         ranks = nodes.join(contrib, "id", "left").select(
-            "id",
-            (
-                F.when(F.col("seed") == 1, F.lit(int(base))).otherwise(F.lit(0))
-                + F.coalesce("in_mass", F.lit(0))
-            )
-            .cast("long")
-            .alias("mass"),
+            "id", (rebase + F.coalesce("in_mass", F.lit(0))).cast("long").alias("mass")
         )
         ranks = cut_lineage(ranks)
     return ranks

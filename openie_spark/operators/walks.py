@@ -25,12 +25,7 @@ on walk_id that partial-aggregates MAP-SIDE — no edge shuffle, and hub
 skew is a non-issue because a hub's million candidate rows collapse to
 one partial-min row per walk per task before any exchange.  The
 symmetrized edge set is materialized once (the cut_lineage seam) since it
-feeds walk_len scans.  For the walks-from-EVERY-node regime
-(n_walks ≈ n_nodes, the full DeepWalk corpus) the broadcast no longer
-fits: ``broadcast_frontier=False`` shuffle-joins frontier ⋈ edges on
-the node, salting hub heads (operators/skew.py) — the hash selection
-is oblivious to physical planning, so both plans are bit-identical
-(gated in tests/unit/test_walks.py).
+feeds walk_len scans.
 """
 
 from __future__ import annotations
@@ -40,7 +35,6 @@ from pyspark.sql import functions as F
 
 from openie_spark.functions.hashing import portable_hash60, portable_hash60_sql
 from openie_spark.functions.lineage import cut_lineage
-from openie_spark.operators.skew import hot_keys, salted_join
 
 WALK_LEN = 3
 WALKS_PER_SEED = 2
@@ -65,8 +59,6 @@ def random_walks(
     seeds: DataFrame,
     walk_len: int = WALK_LEN,
     walks_per_seed: int = WALKS_PER_SEED,
-    broadcast_frontier: bool = True,
-    n_salt: int = 16,
 ) -> DataFrame:
     """Hash-deterministic walks over the symmetrized ``edges``.
 
@@ -77,20 +69,8 @@ def random_walks(
     Returns (walk_id bigint, step int, pred string, node bigint) — one
     row per visited node; pred is the arc label used to arrive (the
     literal 'seed' at step 0, so the column is never NULL).
-
-    ``broadcast_frontier=False`` is the walks-from-EVERY-node plan: the
-    frontier no longer fits a broadcast, so each step shuffle-joins
-    frontier ⋈ edges on the node, salting hub heads (skew.salted_join;
-    hot heads detected ONCE on the symmetrized table — graph-static, so
-    the scan is not per-step).  Hub skew matters here in a way it cannot
-    in the broadcast plan: a sort-merge join lands all of a hub's
-    (out-degree × walks-standing-on-it) candidate rows in one partition
-    before the walk_id partial-min can shrink them.  The hash selection
-    never sees physical planning, so both plans are bit-identical
-    (tests/unit/test_walks.py gates it).
     """
     sym = cut_lineage(symmetrize(edges), eager=True)
-    hot = [] if broadcast_frontier else hot_keys(sym, "head")
     frontier = seeds.select(
         "id", F.explode(F.sequence(F.lit(0), F.lit(walks_per_seed - 1))).alias("j")
     ).select(
@@ -104,17 +84,7 @@ def random_walks(
         "node",
     )
     for s in range(1, walk_len + 1):
-        if broadcast_frontier:
-            cand = sym.join(F.broadcast(frontier), sym["head"] == frontier["node"])
-        else:
-            cand = salted_join(
-                sym,
-                frontier.withColumnRenamed("node", "head"),
-                "head",
-                hot,
-                n_salt=n_salt,
-                salt_src=["tail", "pred"],
-            )
+        cand = sym.join(F.broadcast(frontier), sym["head"] == frontier["node"])
         pick = cand.groupBy("walk_id").agg(
             F.min(
                 F.struct(

@@ -12,9 +12,9 @@ Design (format-agnostic through the catalog seam):
     never duplicates it (exactly-once materialization);
   - after a successful stage write, one checkpoint row per partition is
     appended: (run_id, stage, partition_id, status, n_in, n_triples,
-    input_fingerprint, ruleset, wall_ms, ts).  Parquet mode emulates MERGE
-    with append + read-side latest-wins (row_number over ts desc); Iceberg
-    mode uses a real MERGE INTO (catalog.py);
+    input_fingerprint, ruleset, wall_ms, ts).  Both catalogs take the
+    rows through append_table, and reads resolve latest-wins (row_number
+    over ts desc), so no catalog needs an upsert;
   - resume (OP-06) drops partitions already 'done' for this (run_id,
     stage, ruleset) whose LATEST row's fingerprint equals the partition's
     OWN current fingerprint (partition_fingerprints) — INCREMENTAL: a
@@ -114,8 +114,8 @@ def table_fingerprint(df: DataFrame, cols: list[str] | None = None) -> str:
 
 
 def latest_checkpoint(cat: ParquetCatalog) -> DataFrame | None:
-    """Read-side latest-wins dedup on (run_id, stage, partition_id) — the
-    parquet-mode emulation of Iceberg MERGE (OP-05)."""
+    """Read-side latest-wins dedup on (run_id, stage, partition_id) — what
+    stands in for a MERGE upsert on every catalog (OP-05)."""
     if not cat.exists(CHECKPOINT_TABLE):
         return None
     ck = cat.load_table(CHECKPOINT_TABLE)

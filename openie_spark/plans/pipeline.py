@@ -67,7 +67,6 @@ class PipelineConfig:
     n_buckets: int = 64
     repartition: int | None = None  # default: spark.sql.shuffle.partitions
     salt: int = 8
-    use_manual_salt: bool = True
     # broadcast the vocab-bounded mention→canonical map into the two
     # triples joins: a broadcast hash join never shuffles the (huge)
     # triples table, so materialize drops its two biggest shuffles.  Turn
@@ -394,7 +393,7 @@ def _materialize(
             "k",
             HOT_SHARE,
         )
-        if cfg.use_manual_salt and not cfg.broadcast_canon
+        if not cfg.broadcast_canon
         else []
     )
 

@@ -3367,9 +3367,9 @@ def q_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = li.select(
         F.col("l_orderkey").alias("head"), F.col("l_partkey").alias("tail")
     ).distinct()
-    return negative_samples(
-        edges, "head", "tail", n_neg=NEG_SAMPLES_N, filtered=True
-    ).orderBy("head", "tail", "neg_rank")
+    return negative_samples(edges, "head", "tail", n_neg=NEG_SAMPLES_N).orderBy(
+        "head", "tail", "neg_rank"
+    )
 
 
 def _negative_samples_sql() -> str:
@@ -3486,9 +3486,22 @@ ORDER BY revenue_micro DESC, n_name
 
 
 # kg_walks seed rule: every 10th customer (deterministic, engine-portable
-# modulus on the raw key) — a bounded sample so the frontier broadcasts;
-# see operators/walks.py for the walks-from-every-node regime.
+# modulus on the raw key) — a bounded sample so the frontier broadcasts
+# (operators/walks.py).
 KG_WALKS_SEED_MOD = 10
+
+
+def _kg_walk_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Star-KG node ids of the kg_walks seed customers."""
+    return (
+        load(spark, sf_dir, "customer")
+        .where(F.col("c_custkey") % KG_WALKS_SEED_MOD == 0)
+        .select(
+            (
+                F.col("c_custkey").cast("long") * 8 + ENTITY_TYPE_CODES["customer"]
+            ).alias("id")
+        )
+    )
 
 
 def q_kg_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3500,17 +3513,9 @@ def q_kg_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable min agg; no edge shuffle (frontier broadcasts)."""
     from openie_spark.operators.walks import random_walks
 
-    edges = star_kg_edges(spark, sf_dir)
-    seeds = (
-        load(spark, sf_dir, "customer")
-        .where(F.col("c_custkey") % KG_WALKS_SEED_MOD == 0)
-        .select(
-            (
-                F.col("c_custkey").cast("long") * 8 + ENTITY_TYPE_CODES["customer"]
-            ).alias("id")
-        )
-    )
-    return random_walks(edges, seeds).orderBy("walk_id", "step")
+    return random_walks(
+        star_kg_edges(spark, sf_dir), _kg_walk_seeds(spark, sf_dir)
+    ).orderBy("walk_id", "step")
 
 
 def _kg_walks_sql() -> str:
@@ -3531,17 +3536,8 @@ def q_kg_skipgrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized step frames instead of re-running the walk loop."""
     from openie_spark.operators.walks import random_walks, skipgram_pairs
 
-    edges = star_kg_edges(spark, sf_dir)
-    seeds = (
-        load(spark, sf_dir, "customer")
-        .where(F.col("c_custkey") % KG_WALKS_SEED_MOD == 0)
-        .select(
-            (
-                F.col("c_custkey").cast("long") * 8 + ENTITY_TYPE_CODES["customer"]
-            ).alias("id")
-        )
-    )
-    return skipgram_pairs(random_walks(edges, seeds)).orderBy("src", "dst")
+    walks = random_walks(star_kg_edges(spark, sf_dir), _kg_walk_seeds(spark, sf_dir))
+    return skipgram_pairs(walks).orderBy("src", "dst")
 
 
 def _kg_skipgrams_sql() -> str:
@@ -4277,7 +4273,8 @@ PPR_TOTAL_MASS = 1_000_000
 
 
 def q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Personalized PageRank (operators/pagerank.py:ppr_mass) over the
+    """Personalized PageRank (operators/pagerank.py:pagerank_mass with
+    ``seeds``) over the
     directed fixture graph: teleport mass lands only on the deterministic
     seed set (id % PPR_SEED_MOD == 0), ranking nodes by seed proximity.
     Exact integer mass; the DuckDB oracle unrolls the fixed iteration
@@ -4285,16 +4282,16 @@ def q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-degree nodes alive, which the recursive pagerank oracle's
     aggregate-in-step formulation cannot)."""
     from openie_spark.fixtures.gen_graphs import digraph
-    from openie_spark.operators.pagerank import ppr_mass
+    from openie_spark.operators.pagerank import pagerank_mass
 
     e = spark.createDataFrame(digraph(), "src bigint, dst bigint")
     nodes = e.select(F.col("src").alias("id")).unionByName(
         e.select(F.col("dst").alias("id"))
     )
     seeds = nodes.where(F.col("id") % PPR_SEED_MOD == 0).distinct()
-    return ppr_mass(e, seeds, iters=PPR_ITERS, total_mass=PPR_TOTAL_MASS).orderBy(
-        "id"
-    )
+    return pagerank_mass(
+        e, iters=PPR_ITERS, total_mass=PPR_TOTAL_MASS, seeds=seeds
+    ).orderBy("id")
 
 
 def _unrolled_mass_cte(edges_sql: str, seed_pred: str | None, iters: int, total: int) -> str:

@@ -68,7 +68,9 @@ def get_spark(
 
 def _core_count(master: str) -> int:
     if master.startswith("local["):
-        inner = master[len("local[") : -1]
+        # local[N] or local[N,maxFailures]: the cores are the part before
+        # the comma
+        inner = master[len("local[") : -1].split(",")[0].strip()
         if inner == "*":
             return os.cpu_count() or 4
         try:

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from openie_spark.catalog import ParquetCatalog
 from openie_spark.operators.skew import hot_keys, salted_join
+from openie_spark.plans import pipeline
 from openie_spark.plans.pipeline import PipelineConfig, run_pipeline
 from openie_spark.sources.tables import load_alias_dict, load_docs
 
@@ -49,11 +50,10 @@ def skewed_corpus_path() -> str:
     return ensure_scale_corpus(10_000, n_chunks=8)
 
 
-def _run(spark, docs, aliases, tmp, salt_on, broadcast=False):
+def _run(spark, docs, aliases, tmp, broadcast=False):
     cat = ParquetCatalog(spark, str(tmp))
     cfg = PipelineConfig(
         run_id="salteq",
-        use_manual_salt=salt_on,
         broadcast_canon=broadcast,  # False → the salted SHUFFLE path runs
         collect_counts=False,
         check_invariant=False,
@@ -65,20 +65,20 @@ def _run(spark, docs, aliases, tmp, salt_on, broadcast=False):
 
 
 def test_pipeline_edges_identical_salted_plain_broadcast(
-    spark, skewed_corpus_path, alias_dict_path, tmp_path
+    spark, skewed_corpus_path, alias_dict_path, tmp_path, monkeypatch
 ):
     """The zipf(1.2) scale corpus's top entity carries >10% of mentions, so
     manual salting genuinely engages; the edge and vertex tables must be
     byte-identical across all three physical strategies for the
-    triples⋈canonical joins: salted shuffle, plain shuffle, and broadcast
+    triples⋈canonical joins: salted shuffle, plain shuffle (a hot-key
+    share no key can reach, so the hot list is empty), and broadcast
     (AQE on throughout)."""
     docs = load_docs(spark, skewed_corpus_path)
     aliases = load_alias_dict(spark, alias_dict_path)
-    res_on, e_on, v_on = _run(spark, docs, aliases, tmp_path / "on", True)
-    res_off, e_off, v_off = _run(spark, docs, aliases, tmp_path / "off", False)
-    res_bc, e_bc, v_bc = _run(
-        spark, docs, aliases, tmp_path / "bc", True, broadcast=True
-    )
+    res_on, e_on, v_on = _run(spark, docs, aliases, tmp_path / "on")
+    res_bc, e_bc, v_bc = _run(spark, docs, aliases, tmp_path / "bc", broadcast=True)
+    monkeypatch.setattr(pipeline, "HOT_SHARE", 1.01)
+    res_off, e_off, v_off = _run(spark, docs, aliases, tmp_path / "off")
     assert res_on["n_hot_keys"] >= 1  # salting actually exercised
     assert res_off["n_hot_keys"] == 0
     assert len(e_on) > 0

@@ -24,7 +24,7 @@ def _edges_df(spark):
 
 def test_negatives_are_vocab_members_and_not_true_edges(spark):
     e = _edges_df(spark)
-    out = negative_samples(e, n_neg=4, filtered=True).collect()
+    out = negative_samples(e, n_neg=4).collect()
     vocab = {t for _, t in EDGES}
     true_edges = set(EDGES)
     assert out, "filtered sampling on a 4-entity vocab should keep some rows"
@@ -34,18 +34,10 @@ def test_negatives_are_vocab_members_and_not_true_edges(spark):
         assert 0 <= r.neg_rank < 4
 
 
-def test_unfiltered_emits_exactly_n_neg_per_positive(spark):
-    e = _edges_df(spark)
-    out = negative_samples(e, n_neg=3, filtered=False)
-    assert out.count() == len(EDGES) * 3
-    per_pos = out.groupBy("head", "tail").count().collect()
-    assert all(r["count"] == 3 for r in per_pos)
-
-
 def test_sampling_is_deterministic_and_rank_keyed(spark):
     e = _edges_df(spark)
-    a = sorted(map(tuple, negative_samples(e, n_neg=2, filtered=False).collect()))
-    b = sorted(map(tuple, negative_samples(e, n_neg=2, filtered=False).collect()))
+    a = sorted(map(tuple, negative_samples(e, n_neg=2).collect()))
+    b = sorted(map(tuple, negative_samples(e, n_neg=2).collect()))
     assert a == b
     # distinct ranks of one positive draw independent hashes: with a
     # 4-entity vocab the planted pair (1,10) gets reproducible, rank-keyed

@@ -74,25 +74,27 @@ def _ppr_reference(
 
 
 def test_ppr_chain_hand_traced(spark):
-    from openie_spark.operators.pagerank import ppr_mass
-
     # seed -> a -> b: after 2 iters a holds the seed's damped re-base
     # send and b the first full send, both computable by hand
     edges = [(1, 2), (2, 3)]
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
     seeds = spark.createDataFrame([(1,)], "id bigint")
-    got = {r["id"]: r["mass"] for r in ppr_mass(df, seeds, iters=2).collect()}
+    got = {
+        r["id"]: r["mass"]
+        for r in pagerank_mass(df, iters=2, seeds=seeds).collect()
+    }
     assert got == {1: 150_000, 2: 127_500, 3: 722_500}
     assert got == _ppr_reference(edges, {1}, 2)
 
 
 def test_ppr_matches_python_reference(spark):
-    from openie_spark.operators.pagerank import ppr_mass
-
     edges = [(1, 2), (2, 1), (2, 3), (3, 3), (4, 1), (1, 4), (5, 5), (3, 1)]
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
     seeds = spark.createDataFrame([(1,), (5,)], "id bigint")
-    got = {r["id"]: r["mass"] for r in ppr_mass(df, seeds, iters=3).collect()}
+    got = {
+        r["id"]: r["mass"]
+        for r in pagerank_mass(df, iters=3, seeds=seeds).collect()
+    }
     assert got == _ppr_reference(edges, {1, 5}, 3)
     # non-seed nodes unreachable from any seed stay at exactly 0 —
     # here every node is reachable, so assert the seed-localized shape
@@ -102,14 +104,12 @@ def test_ppr_matches_python_reference(spark):
 def test_ppr_tiny_total_mass_keeps_seed_mass(spark):
     # base = 5*15//100 == 0: the seed FLAG (not a sb>0 proxy) must still
     # give seeds their initial mass so first-hop propagation happens
-    from openie_spark.operators.pagerank import ppr_mass
-
     edges = [(1, 2), (2, 3)]
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
     seeds = spark.createDataFrame([(1,)], "id bigint")
     got = {
         r["id"]: r["mass"]
-        for r in ppr_mass(df, seeds, iters=1, total_mass=5).collect()
+        for r in pagerank_mass(df, iters=1, total_mass=5, seeds=seeds).collect()
     }
     assert got == _ppr_reference(edges, {1}, 1, total=5)
     assert got[2] == (5 * 17) // 20  # = 4: the first hop survived

@@ -98,22 +98,6 @@ def test_deterministic_across_parallelism(spark):
     )
 
 
-def test_shuffle_plan_bit_identical_to_broadcast(spark):
-    """The walks-from-every-node plan (broadcast_frontier=False, salted
-    shuffle join on hub heads — node 9 is the hub) must produce the
-    byte-identical corpus: hash selection is physical-plan-oblivious."""
-    e = spark.createDataFrame(EDGES, "pred string, head bigint, tail bigint")
-    s = spark.createDataFrame([(x,) for x in SEEDS], "id bigint")
-
-    def corpus(**kw):
-        df = random_walks(e, s, walk_len=4, walks_per_seed=3, **kw)
-        return sorted(map(tuple, df.collect()))
-
-    assert corpus(broadcast_frontier=True) == corpus(
-        broadcast_frontier=False, n_salt=4
-    )
-
-
 def test_skipgram_pairs_matches_python_reference(spark):
     walk_len, wps, window = 3, 2, 2
     e = spark.createDataFrame(EDGES, "pred string, head bigint, tail bigint")
@@ -143,8 +127,8 @@ def test_skipgram_pairs_matches_python_reference(spark):
 
 def test_randomized_graph_matches_reference(spark):
     """Seeded random graph (dense small node space: parallel arcs under
-    different preds, self-loops, hubs arise naturally) — both physical
-    plans must equal the pure-Python replay of the hash-argmin walk."""
+    different preds, self-loops, hubs arise naturally) — the walk must
+    equal the pure-Python replay of the hash-argmin selection."""
     import random
 
     rnd = random.Random(42)
@@ -158,12 +142,6 @@ def test_randomized_graph_matches_reference(spark):
     seeds = sorted({rnd.randrange(12) for _ in range(5)})
     ref = _reference(edges, seeds, 4, 2)
     assert _run(spark, edges, seeds, walk_len=4, walks_per_seed=2) == ref
-    e = spark.createDataFrame(edges, "pred string, head bigint, tail bigint")
-    s = spark.createDataFrame([(x,) for x in seeds], "id bigint")
-    shuffled = random_walks(
-        e, s, walk_len=4, walks_per_seed=2, broadcast_frontier=False, n_salt=3
-    )
-    assert sorted(map(tuple, shuffled.collect())) == ref
 
 
 def test_symmetrize_preserves_direction_labels(spark):
