@@ -87,6 +87,7 @@ class ParquetCatalog:
         for v in values:
             shutil.rmtree(root / f"{part_col}={v}", ignore_errors=True)
 
+
 class IcebergCatalog:
     """Config-documented Iceberg implementation; requires the runtime jar
     (absent in this sandbox).  Method bodies mirror ParquetCatalog on the

@@ -4274,13 +4274,12 @@ PPR_TOTAL_MASS = 1_000_000
 
 def q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank (operators/pagerank.py:pagerank_mass with
-    ``seeds``) over the
-    directed fixture graph: teleport mass lands only on the deterministic
-    seed set (id % PPR_SEED_MOD == 0), ranking nodes by seed proximity.
-    Exact integer mass; the DuckDB oracle unrolls the fixed iteration
-    count as chained CTEs (the kmeans pattern — LEFT JOIN keeps zero-
-    in-degree nodes alive, which the recursive pagerank oracle's
-    aggregate-in-step formulation cannot)."""
+    ``seeds``) over the directed fixture graph: teleport mass lands only
+    on the deterministic seed set (id % PPR_SEED_MOD == 0), ranking nodes
+    by seed proximity.  Exact integer mass; the DuckDB oracle unrolls the
+    fixed iteration count as chained CTEs (the kmeans pattern — LEFT JOIN
+    keeps zero-in-degree nodes alive, which the recursive pagerank
+    oracle's aggregate-in-step formulation cannot)."""
     from openie_spark.fixtures.gen_graphs import digraph
     from openie_spark.operators.pagerank import pagerank_mass
 

@@ -60,7 +60,7 @@ class CatalogContract:
         cat.append_table(spark.createDataFrame([(2,)], "x int"), "t")
         assert _rows(cat.load_table("t")) == [(1,), (2,)]
 
-    def test_exists_after_write(self, spark, tmp_path):
+    def test_exists_drop_lifecycle(self, spark, tmp_path):
         cat = self.make_catalog(spark, tmp_path)
         assert not cat.exists("t")
         cat.write_table(spark.createDataFrame([(1,)], "x int"), "t")
