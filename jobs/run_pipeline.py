@@ -61,7 +61,7 @@ def main(argv: list[str] | None = None) -> int:
                          "broadcasting the mention→canonical map "
                          "(for 1e9+ distinct-mention vocabularies)")
     ap.add_argument("--lineage-cut", default=None,
-                    choices=("local", "reliable", "none"),
+                    choices=("local", "reliable"),
                     help="stage-boundary lineage policy "
                          "(spark.openie.lineageCut); 'reliable' checkpoints "
                          "to <output>/_checkpoints for multi-executor fault "

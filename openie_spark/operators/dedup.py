@@ -4,7 +4,8 @@ All variants are shuffle-shaped for the 100 TB posture: no pairwise cross
 products — every "pairs" operator goes through a blocking key (hash bucket,
 LSH band, simhash chunk) and joins within buckets only.
 
-  - exact:        content-hash groupBy (one shuffle, map-side combine)
+  - exact:        content-hash groupBy, spelled in the ``exact_dedup``
+                  query (plans/registry.py)
   - minhash-LSH:  word-shingle MinHash → banded bucket join → exact-Jaccard
                   verify (same frozen scheme as entity linking)
   - simhash:      64-bit simhash; Hamming-≤k candidate pairs via the
@@ -29,47 +30,6 @@ from openie_spark.functions import minhash as mh
 from openie_spark.functions.lineage import cut_lineage
 
 
-MAX_MEMBERS = 100  # bound on the per-group members sample (see exact_dedup)
-
-
-def exact_dedup(
-    df: DataFrame, id_col: str, text_col: str, max_members: int = MAX_MEMBERS
-) -> DataFrame:
-    """Exact duplicate groups by content hash; keeper = min id.
-
-    ``members`` is a bounded SAMPLE of the group (the ``max_members``
-    smallest ids): an unbounded ``collect_list`` is an executor-OOM hazard
-    at corpus scale — one pathological group (e.g. empty documents) can
-    hold 10^8 ids.  The bound is enforced BEFORE aggregation with a
-    window-rank filter, not by slicing the collected array (a post-hoc
-    ``slice(collect_list(...))`` still materializes the whole group in the
-    non-spillable agg buffer; the window sort, by contrast, spills).  The
-    window and the groupBy share the same key, so Catalyst reuses ONE
-    exchange — no extra shuffle.  ``group_size`` is always the exact full
-    count (a full-partition window count, computed pre-filter); consumers
-    needing every member of a giant group should anti-join the corpus
-    against keepers instead of widening the cap."""
-    from pyspark.sql.window import Window
-
-    base = df.select(
-        F.md5(F.col(text_col)).alias("content_hash"), F.col(id_col).alias("_id")
-    )
-    w_ord = Window.partitionBy("content_hash").orderBy("_id")
-    w_all = Window.partitionBy("content_hash")
-    ranked = base.withColumn("_rn", F.row_number().over(w_ord)).withColumn(
-        "_gs", F.count("*").over(w_all)
-    )
-    return (
-        ranked.where(F.col("_rn") <= max_members)
-        .groupBy("content_hash")
-        .agg(
-            F.min("_id").alias("keeper_id"),
-            F.max("_gs").alias("group_size"),
-            F.sort_array(F.collect_list("_id")).alias("members"),
-        )
-    )
-
-
 CHUNK_DEDUP_TOKENS = 8  # one home: the registry oracle interpolates this
 
 
@@ -83,7 +43,7 @@ def chunk_dedup_stats(
     chunk-level approximation of exact-substring training-data dedup
     (Lee et al. 2022, "Deduplicating Training Data Makes Language Models
     Better"): repeated boilerplate inside otherwise-distinct documents is
-    what whole-document hashing (exact_dedup) cannot see.
+    what whole-document hashing (the exact_dedup query) cannot see.
 
     Chunking is delegated to text_analysis.chunk_documents with overlap=0
     (the chunking one-home — same tokenization rule, same window math as
@@ -94,10 +54,9 @@ def chunk_dedup_stats(
 
     Plan: one sort-window over chunk_md5 marks keepers (a full window,
     not WindowGroupLimit — dropped chunks are counted too; the sort
-    spills, so a pathological hot chunk cannot OOM an executor, same
-    posture as exact_dedup's bounded members), then one groupBy(doc_id)
-    roll-up + a left join back to the doc universe.  Two shuffles + one
-    join at any corpus size; no Python anywhere."""
+    spills, so a pathological hot chunk cannot OOM an executor), then one
+    groupBy(doc_id) roll-up + a left join back to the doc universe.  Two
+    shuffles + one join at any corpus size; no Python anywhere."""
     from pyspark.sql.window import Window
 
     from openie_spark.operators.text_analysis import chunk_documents

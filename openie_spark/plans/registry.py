@@ -16,6 +16,7 @@ correctness gate is the L2 oracle-spec pytest layer.
 
 from __future__ import annotations
 
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1402,8 +1403,7 @@ def _ensure_stream_fixture(base: Path, build) -> None:
     a fresh query against that checkpoint re-processes the input as
     unseen while the old sink rows remain — up to double the rows,
     permanently poisoning the cache.  So a marker-less directory is
-    wiped before rebuilding (shared by stream_sessions / stream_counts /
-    stream_dedup)."""
+    wiped before rebuilding."""
     import shutil
 
     marker = base / "_SUCCESS"
@@ -1416,6 +1416,35 @@ def _ensure_stream_fixture(base: Path, build) -> None:
     marker.touch()
 
 
+def _stream_fixture(
+    spark: SparkSession, sf_dir: str, query: str, feed: DataFrame, start
+) -> DataFrame:
+    """Build-once run of a streaming query, read back from its sink — the
+    one drain shared by stream_sessions / stream_counts / stream_dedup.
+
+    The run lives under .fixtures/<query>_<sf>_<digest>, keyed on a
+    CONTENT fingerprint of ``feed`` (count + xxhash sum), so a regenerated
+    input — or two sf dirs sharing a basename — can never silently serve a
+    stale sink.  The build writes ``feed`` to in/, starts the query with
+    ``start(in_dir, schema, checkpoint_dir, out_dir)`` and drains it; a
+    drain that does not finish within 600 s raises rather than serving a
+    partial sink."""
+    from openie_spark.plans.checkpoint import table_fingerprint
+
+    def _build(base: Path) -> None:
+        in_dir, ck, out = str(base / "in"), str(base / "ck"), str(base / "out")
+        feed.write.mode("overwrite").parquet(in_dir)
+        q = start(in_dir, feed.schema, ck, out)
+        if not q.awaitTermination(600):
+            q.stop()
+            raise RuntimeError(f"{query} did not drain within 600s")
+
+    digest = table_fingerprint(feed).replace(":", "_").replace("-", "n")
+    base = store.FIXTURE_DIR / f"{query}_{Path(sf_dir).name}_{digest}"
+    _ensure_stream_fixture(base, _build)
+    return spark.read.parquet(str(base / "out"))
+
+
 def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator (applyInPandasWithState): per-user
     session splitting with cross-batch state AND event-time timeout (a
@@ -1424,38 +1453,13 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     events table and read back from the exactly-once parquet sink.
     Oracle-checked against the DuckDB gap-rule twin (_stream_sessions_sql);
     batch-twin equality (both timeout modes) and cross-run state carry are
-    additionally gated in tests/unit/test_streaming.py.
-
-    The stream run is a build-once cache under .fixtures keyed on a
-    CONTENT fingerprint of the events input (count + xxhash sum), so a
-    regenerated events table — or two sf dirs sharing a basename — can
-    never silently serve stale sessions; a timed-out awaitTermination
-    fails loudly rather than returning a partial sink."""
-    from openie_spark.plans.checkpoint import table_fingerprint
+    additionally gated in tests/unit/test_streaming.py.  The stream run is
+    a build-once cache (_stream_fixture)."""
     from openie_spark.streaming.stateful import stream_sessions
 
     events = load(spark, sf_dir, "events").select("user_id", "ts")
-    digest = table_fingerprint(events).replace(":", "_").replace("-", "n")
-
-    def _build(base: Path) -> None:
-        in_dir, ck, out = str(base / "in"), str(base / "ck"), str(base / "out")
-        events.write.mode("overwrite").parquet(in_dir)
-        q = stream_sessions(
-            spark,
-            in_dir,
-            events.schema,
-            ck,
-            out,
-            timeout_delay_ms=STREAM_TIMEOUT_DELAY_MS,
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("stream_sessions did not drain within 600s")
-
-    name = f"stream_sessions_{Path(sf_dir).name}_{digest}"
-    base = store.FIXTURE_DIR / name
-    _ensure_stream_fixture(base, _build)
-    return spark.read.parquet(str(base / "out")).orderBy(
+    start = partial(stream_sessions, spark, timeout_delay_ms=STREAM_TIMEOUT_DELAY_MS)
+    return _stream_fixture(spark, sf_dir, "stream_sessions", events, start).orderBy(
         "user_id", "session_start_us"
     )
 
@@ -2556,9 +2560,7 @@ ORDER BY doc_id
 def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conversion attribution (streaming/joins.py batch twin): signup →
     purchase pairs per user within the gap.  Equality key + event-time
-    range — a hash join with an in-band filter, never a BNLJ; the SAME
-    join core runs as a watermarked stream-stream join in
-    attribution_stream, gated by twin-equality tests.  Exact
+    range — a hash join with an in-band filter, never a BNLJ.  Exact
     microsecond delays, fully oracle-checked."""
     from openie_spark.streaming.joins import (
         attribution_join,
@@ -3812,31 +3814,17 @@ def q_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked streaming query after stream_sessions.  Append mode
     makes watermark semantics observable: only windows finalized by the
     final watermark (window end <= max ts − 1h, inclusive) reach the sink;
-    the DuckDB oracle states exactly that filter.  Same content-fingerprint
-    build-once cache as q_stream_sessions (self-invalidating; a timed-out
-    drain raises rather than serving a partial sink)."""
-    from openie_spark.plans.checkpoint import table_fingerprint
+    the DuckDB oracle states exactly that filter.  Same build-once cache
+    (_stream_fixture) as q_stream_sessions."""
     from openie_spark.streaming.ingest import stream_counts_to_parquet
 
     events = load(spark, sf_dir, "events").select("ts", "event_type")
-    digest = table_fingerprint(events).replace(":", "_").replace("-", "n")
-
-    def _build(base: Path) -> None:
-        in_dir, ck, out = str(base / "in"), str(base / "ck"), str(base / "out")
-        # one input file → one micro-batch, so no row can be dropped as
-        # late against a watermark raised by an earlier batch
-        events.coalesce(1).write.mode("overwrite").parquet(in_dir)
-        q = stream_counts_to_parquet(spark, in_dir, events.schema, ck, out)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("stream_counts did not drain within 600s")
-
-    name = f"stream_counts_{Path(sf_dir).name}_{digest}"
-    base = store.FIXTURE_DIR / name
-    _ensure_stream_fixture(base, _build)
-    return spark.read.parquet(str(base / "out")).orderBy(
-        "window_start_us", "event_type"
-    )
+    start = partial(stream_counts_to_parquet, spark)
+    # one input file → one micro-batch, so no row can be dropped as late
+    # against a watermark raised by an earlier batch
+    return _stream_fixture(
+        spark, sf_dir, "stream_counts", events.coalesce(1), start
+    ).orderBy("window_start_us", "event_type")
 
 
 def _stream_counts_sql() -> str:
@@ -3868,10 +3856,9 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns and their functional dependents (n_chars = f(text)) are
     deterministic, which is exactly what the aggregate reads.  Assertion
     instants derive from the temporal.py one-home; the oracle is plain
-    DISTINCT-then-GROUP BY.  Same content-fingerprint build-once cache
-    as the other stream queries."""
+    DISTINCT-then-GROUP BY.  Same build-once cache (_stream_fixture) as
+    the other stream queries."""
     from openie_spark.operators.temporal import doc_event_seconds
-    from openie_spark.plans.checkpoint import table_fingerprint
     from openie_spark.streaming.dedup import stream_dedup_to_parquet
 
     base_docs = load(spark, sf_dir, "documents").select(
@@ -3883,24 +3870,10 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = base_docs.unionByName(
         base_docs.withColumn("ts", F.col("ts") + F.expr("INTERVAL 60 SECONDS"))
     )
-    digest = table_fingerprint(feed).replace(":", "_").replace("-", "n")
-
-    def _build(base: Path) -> None:
-        in_dir, ck, out = str(base / "in"), str(base / "ck"), str(base / "out")
-        # one input file -> one micro-batch (the stream_counts rule)
-        feed.coalesce(1).write.mode("overwrite").parquet(in_dir)
-        q = stream_dedup_to_parquet(
-            spark, in_dir, feed.schema, ck, out, keys=["content_hash", "lang"]
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("stream_dedup did not drain within 600s")
-
-    name = f"stream_dedup_{Path(sf_dir).name}_{digest}"
-    base = store.FIXTURE_DIR / name
-    _ensure_stream_fixture(base, _build)
+    start = partial(stream_dedup_to_parquet, spark, keys=["content_hash", "lang"])
+    # one input file -> one micro-batch (the stream_counts rule)
     return (
-        spark.read.parquet(str(base / "out"))
+        _stream_fixture(spark, sf_dir, "stream_dedup", feed.coalesce(1), start)
         .groupBy("lang")
         .agg(
             F.count("*").alias("n_unique"),

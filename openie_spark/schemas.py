@@ -1,4 +1,4 @@
-"""Fixed StructType contracts for every inter-stage dataset (SURVEY.md §1.3).
+"""Fixed StructType contracts for the inter-stage datasets (SURVEY.md §1.3).
 
 Nothing in the pipeline proper is schema-inferred: every scan declares its
 schema, every UDF declares its return type, every sink is checked against the
@@ -14,13 +14,11 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 # --------------------------------------------------------------------------
@@ -68,16 +66,6 @@ TRIPLES_SCHEMA = StructType(
     + [StructField("ruleset", StringType(), False)]
 )
 
-MENTIONS_SCHEMA = StructType(
-    [
-        StructField("mention_norm", StringType(), False),
-        StructField("doc_id", StringType(), False),
-        StructField("sent_idx", IntegerType(), False),
-        StructField("role", StringType(), False),  # 'subj' | 'arg'
-        StructField("surface", StringType(), False),
-    ]
-)
-
 # --------------------------------------------------------------------------
 # Linking
 # --------------------------------------------------------------------------
@@ -87,41 +75,6 @@ ALIAS_DICT_SCHEMA = StructType(
         StructField("alias_norm", StringType(), False),
         StructField("entity_id", LongType(), False),
         StructField("entity_name", StringType(), False),
-    ]
-)
-
-LINK_CANDIDATES_SCHEMA = StructType(
-    [
-        StructField("mention_norm", StringType(), False),
-        StructField("entity_id", LongType(), False),
-        StructField("jaccard", DoubleType(), False),
-        StructField("method", StringType(), False),  # 'exact' | 'lsh'
-    ]
-)
-
-LINKS_SCHEMA = StructType(
-    [
-        StructField("mention_norm", StringType(), False),
-        StructField("entity_id", LongType(), False),
-        StructField("method", StringType(), False),  # 'exact' | 'lsh' | 'minted'
-    ]
-)
-
-# --------------------------------------------------------------------------
-# Canonicalization (connected components)
-# --------------------------------------------------------------------------
-
-SAMEAS_SCHEMA = StructType(
-    [
-        StructField("src", LongType(), False),
-        StructField("dst", LongType(), False),
-    ]
-)
-
-CC_ASSIGN_SCHEMA = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("rep", LongType(), False),
     ]
 )
 
@@ -146,37 +99,6 @@ EDGES_SCHEMA = StructType(
         StructField("doc_id", StringType(), False),
         StructField("sent_idx", IntegerType(), False),
         StructField("conf", DoubleType(), False),
-    ]
-)
-
-# --------------------------------------------------------------------------
-# Checkpoint / lineage (idempotent resume, BASELINE.json north_rule)
-# --------------------------------------------------------------------------
-
-CHECKPOINT_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("stage", StringType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("status", StringType(), False),  # 'done' | 'failed'
-        StructField("n_in", LongType(), False),
-        StructField("n_triples", LongType(), False),
-        StructField("input_fingerprint", StringType(), False),
-        StructField("ruleset", StringType(), False),
-        StructField("wall_ms", LongType(), False),
-        StructField("ts", TimestampType(), False),
-    ]
-)
-
-# --------------------------------------------------------------------------
-# Embeddings / similarity-search helpers
-# --------------------------------------------------------------------------
-
-EMBEDDING_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType(), False),
-        StructField("embedding", ArrayType(FloatType(), containsNull=False), False),
-        StructField("label", IntegerType(), True),
     ]
 )
 

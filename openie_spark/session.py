@@ -67,6 +67,8 @@ def get_spark(
 
 
 def _core_count(master: str) -> int:
+    if master == "local":
+        return 1  # Spark runs a bare ``local`` master with one task thread
     if master.startswith("local["):
         # local[N] or local[N,maxFailures]: the cores are the part before
         # the comma

@@ -7,53 +7,13 @@ store forever — unusable for an unbounded corpus feed.
 the event-time watermark passes its horizon, so state is bounded by the
 duplicate-arrival window instead of corpus size: exactly the contract a
 streaming training-data ingest wants ("duplicates arrive within N minutes
-of each other" — e.g. multi-crawler races), and the streaming twin of the
-batch ``exact_dedup`` operator (operators/dedup.py).
+of each other" — e.g. multi-crawler races).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-
-
-def dedup_stream(
-    docs: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    delay: str = "10 minutes",
-) -> DataFrame:
-    """documents stream → first-arrival-only stream, keyed on md5(text).
-    State per content hash is dropped once the watermark passes its
-    arrival time + ``delay``."""
-    return (
-        docs.withColumn("content_hash", F.md5(F.col(text_col)))
-        .withWatermark(ts_col, delay)
-        .dropDuplicatesWithinWatermark(["content_hash"])
-    )
-
-
-def stream_exact_dedup(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    checkpoint_dir: str,
-    output_dir: str,
-    delay: str = "10 minutes",
-):
-    """File-source incremental run (availableNow): drain the backlog,
-    emit first arrivals to an exactly-once parquet sink; dedup state
-    carries across runs on the same checkpoint."""
-    docs = spark.readStream.schema(schema).parquet(input_dir)
-    return (
-        dedup_stream(docs, delay=delay)
-        .writeStream.format("parquet")
-        .option("path", output_dir)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def stream_dedup_to_parquet(

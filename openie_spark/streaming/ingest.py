@@ -1,267 +1,22 @@
-"""Structured Streaming surface (SURVEY.md §2.12 extension).
+"""Watermarked event-count stream (SURVEY.md §2.12 extension).
 
-The north rule's job is batch (spark-submit, checkpoint resume), and the
-batch checkpoint table (plans/checkpoint.py) already gives incremental
-semantics.  This module provides the equivalent *streaming* form for
-deployments that prefer it:
-
-  - ``stream_extract``: file-source incremental ingest of the interleaved
-    documents table → the SAME fused extraction stage (stateless, so the
-    exact batch operator runs unchanged on a stream) → parquet sink with a
-    streaming checkpoint.  ``Trigger.AvailableNow`` drains everything
-    currently present then stops — the streaming twin of a resumable batch
-    run: re-running after new files land processes ONLY the new files
-    (source offsets live in the checkpoint), with exactly-once file-sink
-    semantics.
-  - ``stream_event_counts``: watermarked tumbling-window aggregation over
-    an event stream (late data bounded by the watermark).
-  - ``stream_source``: ONE seam for every upstream the streaming form can
-    ingest from (files / rate / rate-micro-batch / kafka), so deployments
-    swap sources by configuration, not code.  The kafka branch is pure
-    option plumbing on the standard ``spark-sql-kafka`` connector (absent
-    in this sandbox — documented, not fake-tested); the unbounded-source
-    behavior it shares is exercised for real through the built-in ``rate``
-    source (tests/unit/test_streaming.py), which drives the SAME
-    extraction stage through a genuinely unbounded micro-batch query.
-
-All tested paths are compared against their batch equivalents in
-tests/unit/test_streaming.py.
+The north rule's job is batch (spark-submit, checkpoint resume); the
+batch checkpoint table (plans/checkpoint.py) gives its incremental
+semantics.  This module holds the hourly tumbling-window count that the
+``stream_counts`` query runs as a stream: ``windowed_event_counts`` is
+the aggregation, and ``stream_counts_to_parquet`` drives it from a file
+source into an append-mode parquet sink.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-from openie_spark.operators.extract import extract_stage
-from openie_spark.schemas import DOC_SCHEMA
-
-# The fixed record schema the spark-sql-kafka connector's load() emits
-# (public connector contract: one row per Kafka record).  ONE home so the
-# file-backed wire twin below and any real deployment name identical
-# columns — the only thing the sandbox cannot run is the connector jar
-# itself; everything AFTER load() is this schema + decode_kafka_wire.
-KAFKA_WIRE_SCHEMA = StructType(
-    [
-        StructField("key", BinaryType(), True),
-        StructField("value", BinaryType(), True),
-        StructField("topic", StringType(), True),
-        StructField("partition", IntegerType(), True),
-        StructField("offset", LongType(), True),
-        StructField("timestamp", TimestampType(), True),
-        StructField("timestampType", IntegerType(), True),
-    ]
-)
-
-
-def decode_kafka_wire(wire: DataFrame) -> DataFrame:
-    """The ENTIRE post-``load()`` half of the kafka branch: connector
-    records (KAFKA_WIRE_SCHEMA) → value bytes as utf-8 JSON lines →
-    DOC_SCHEMA rows via ``jsonl_to_docs`` (the same wire decode the
-    socket path drives).  tests/unit/test_streaming.py runs this against
-    a file-backed mock of the wire protocol — a streaming source emitting
-    KAFKA_WIRE_SCHEMA records exactly as the connector would — so every
-    kafka-branch config except the jar-provided ``load()`` itself is
-    exercised offline."""
-    return jsonl_to_docs(
-        wire.select(F.col("value").cast("string").alias("value"))
-    )
-
-
-def stream_source(
-    spark: SparkSession,
-    kind: str,
-    *,
-    schema=None,
-    path: str | None = None,
-    options: dict[str, str] | None = None,
-) -> DataFrame:
-    """Source-agnostic streaming reader — the configuration seam between
-    a deployment's ingest bus and the (source-independent) operators.
-
-    kinds:
-      ``files``            parquet directory; requires ``schema`` + ``path``.
-                           The resumable twin of a batch scan (offsets =
-                           seen files, tracked in the sink checkpoint).
-      ``rate``             Spark's built-in unbounded source (options:
-                           ``rowsPerSecond``, ``numPartitions``…) — columns
-                           (timestamp, value).  Used by tests as the real
-                           unbounded stand-in for a message bus.
-      ``rate-micro-batch`` deterministic per-batch variant (``rowsPerBatch``).
-      ``socket``           Spark's built-in TCP line source (options:
-                           ``host``, ``port``) — one ``value: string``
-                           column per received line.  A REAL push source
-                           (exercised in tests against a live local TCP
-                           server feeding JSON-line documents through
-                           ``jsonl_to_docs``), but NOT fault-tolerant
-                           (no replayable offsets) — dev/test ingest, not
-                           production; production push ingest is kafka.
-      ``kafka``            standard connector passthrough; pass
-                           ``kafka.bootstrap.servers``, ``subscribe``, etc.
-                           Requires the spark-sql-kafka package on the
-                           cluster (not in this sandbox).  Offline
-                           coverage is precise: (a) this branch's option
-                           plumbing is the same loop every other kind
-                           runs; (b) records land as the connector's
-                           fixed schema — one-homed here as
-                           KAFKA_WIRE_SCHEMA — and the whole post-load
-                           chain (``decode_kafka_wire`` = value bytes →
-                           utf-8 → ``jsonl_to_docs``, incl. junk-line
-                           drops and span renumbering) is driven by a
-                           file-backed wire-protocol mock in
-                           tests/unit/test_streaming.py plus the LIVE
-                           socket twin for push semantics; (c) unbounded
-                           micro-batch behavior is exercised via the
-                           ``rate`` source.  The ONLY untested piece is
-                           the jar-provided ``load()`` itself (broker
-                           offsets/security configs like
-                           ``startingOffsets``, ``kafka.sasl.*`` reach
-                           the reader but no broker exists to accept
-                           them).
-
-    Every kind returns an unresolved streaming DataFrame; downstream
-    operators (extract_stage is stateless) are identical across kinds.
-    """
-    opts = dict(options or {})
-    if kind == "files":
-        if schema is None or path is None:
-            raise ValueError("files source requires schema= and path=")
-        reader = spark.readStream.schema(schema)
-        for k, v in opts.items():
-            reader = reader.option(k, v)
-        return reader.parquet(path)
-    if kind == "socket":
-        if "host" not in opts or "port" not in opts:
-            raise ValueError("socket source requires host= and port= options")
-        reader = spark.readStream.format("socket")
-        for k, v in opts.items():
-            reader = reader.option(k, v)
-        return reader.load()
-    if kind in ("rate", "rate-micro-batch", "kafka"):
-        reader = spark.readStream.format(kind)
-        for k, v in opts.items():
-            reader = reader.option(k, v)
-        return reader.load()
-    raise ValueError(f"unknown stream source kind: {kind!r}")
-
-
-def jsonl_to_docs(lines: DataFrame, column: str = "value") -> DataFrame:
-    """Decode a wire column of JSON-line documents into DOC_SCHEMA rows —
-    the ONE decode shared by the socket source (its ``value`` lines) and a
-    kafka value column (``F.col('value').cast('string')``), so the two
-    push paths cannot drift.  Malformed lines and lines missing ``doc_id``
-    are dropped (from_json yields NULL) rather than poisoning the stream;
-    span offsets are re-numbered by position so the span-sequence
-    invariant holds regardless of what the producer sent."""
-    doc = F.from_json(F.col(column), DOC_SCHEMA)
-    spans = F.transform(
-        doc["spans"],
-        lambda s, i: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            i.cast("int").alias("offset"),
-        ),
-    )
-    return (
-        lines.select(doc["doc_id"].alias("doc_id"), spans.alias("spans"))
-        .where(F.col("doc_id").isNotNull() & F.col("spans").isNotNull())
-    )
-
-
-# Deterministic value→document templates: every sentence is a RULESET-v3
-# extractable clause, so the stream demonstrably produces triples (the
-# test asserts >0 and compares per-doc against the batch twin).
-_RATE_DOC_TEMPLATES = (
-    "Alice Smith founded Acme Corp in 2001.",
-    "Bob Jones works at Initech.",
-    "Acme Corp acquired Globex.",
-    "Carol White lives in Berlin.",
-)
-
-
-def rate_to_docs(rates: DataFrame) -> DataFrame:
-    """Map a rate/rate-micro-batch stream (timestamp, value) to the
-    DOC_SCHEMA interleaved shape, fully JVM-side and deterministic in
-    ``value``: whatever prefix of the stream a test drains, each doc's
-    content is a pure function of its id, so a batch twin built from
-    ``spark.range`` is bit-comparable.  Every third doc interleaves a
-    media span ahead of the text span (the input_hint's mixed shape)."""
-    k = len(_RATE_DOC_TEMPLATES)
-    text = F.element_at(
-        F.array(*[F.lit(t) for t in _RATE_DOC_TEMPLATES]),
-        (F.col("value") % k + 1).cast("int"),
-    )
-    text_span = F.struct(
-        F.lit("text").alias("kind"),
-        text.alias("text"),
-        F.lit(None).cast("string").alias("media_ref"),
-        F.lit(0).cast("int").alias("offset"),
-    )
-    media_span = F.struct(
-        F.lit("image").alias("kind"),
-        F.lit(None).cast("string").alias("text"),
-        F.format_string("img://rate/%d.bmp", F.col("value")).alias("media_ref"),
-        F.lit(0).cast("int").alias("offset"),
-    )
-    spans = F.when(
-        F.col("value") % 3 == 0,
-        F.array(media_span, text_span),
-    ).otherwise(F.array(text_span))
-    # re-number offsets by position so the span-sequence invariant holds
-    spans = F.transform(
-        spans,
-        lambda s, i: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            i.cast("int").alias("offset"),
-        ),
-    )
-    return rates.select(
-        F.format_string("rate-%08d", F.col("value")).alias("doc_id"),
-        spans.alias("spans"),
-    )
-
-
-def stream_extract(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Incremental documents→triples ingest; returns the started query.
-
-    Caller awaits termination.  With availableNow the query drains the
-    backlog and stops; rerunning picks up only newly-landed files."""
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(input_dir)
-    triples = extract_stage(docs)
-    return (
-        triples.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def windowed_event_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Watermarked tumbling-window aggregation — works identically on a
-    stream (late rows beyond the watermark dropped) and on a batch frame
-    (the tests' equivalence oracle)."""
+    """Watermarked tumbling-window aggregation: on a stream, rows later
+    than the watermark are dropped."""
     # watermarks require TIMESTAMP (with timezone); parquet written as NTZ
     # (the driver tables are) is normalized here — session tz is UTC
     events = events.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -312,27 +67,6 @@ def stream_counts_to_parquet(
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_event_counts(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    checkpoint_dir: str,
-    query_name: str = "event_counts",
-):
-    """File-source streaming variant writing to an in-memory sink (complete
-    mode) — the smallest end-to-end watermarked-aggregation harness."""
-    events = spark.readStream.schema(schema).parquet(input_dir)
-    agg = windowed_event_counts(events)
-    return (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )

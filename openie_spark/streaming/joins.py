@@ -1,25 +1,17 @@
-"""Watermarked stream-stream interval join (§2.12 extension): conversion
-attribution — join each trigger event (e.g. signup) to the same user's
-conversion events (e.g. purchase) that follow within a bounded gap.
+"""Event-time interval join (§2.12 extension): conversion attribution —
+join each trigger event (e.g. signup) to the same user's conversion
+events (e.g. purchase) that follow within a bounded gap.
 
-The join core is ONE function used verbatim by the batch twin and the
-streaming path (the session-gap discipline: a single home for the rule,
-so the twins cannot drift).  Shape: equality key (user_id) + event-time
-range condition — Spark executes it as a plain hash join with an in-band
-range filter (no BNLJ; the equality key keeps it shuffle-bounded), and in
-streaming mode the SAME condition is what lets the state store evict:
-with both sides watermarked and the range bounded, each side's state is
-held only for (watermark delay + gap), never corpus-long.
-
-100 TB posture: state is O(events within the horizon), partitioned by
-user_id; skewed users are bounded by the gap window.  The batch twin is
-driver-oracle-checked (`attribution` query); the streaming run is gated
-by twin equality + cross-run state carry in tests/unit/test_streaming.py.
+The join core is ONE function.  Shape: equality key (user_id) +
+event-time range condition — Spark executes it as a plain hash join with
+an in-band range filter (no BNLJ; the equality key keeps it
+shuffle-bounded).  The `attribution` query runs it and is driver-oracle
+checked.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 ATTRIBUTION_GAP_MIN = 30
@@ -32,9 +24,8 @@ def split_trigger_conversion(
     trigger_type: str = TRIGGER_TYPE,
     conversion_type: str = CONVERSION_TYPE,
 ) -> tuple[DataFrame, DataFrame]:
-    """Project the two sides with disjoint column names (stream-stream
-    joins reject ambiguous columns).  Works on batch and streaming
-    DataFrames alike."""
+    """Project the two sides with disjoint column names, so the self-join
+    has no ambiguous columns."""
     # parquet NTZ → TIMESTAMP: watermarks and unix_micros require the
     # tz-aware type; value-preserving under the fixed UTC session zone
     ts = F.col("ts").cast("timestamp")
@@ -76,36 +67,4 @@ def attribution_join(
         (
             F.unix_micros(F.col("c_ts")) - F.unix_micros(F.col("t_ts"))
         ).alias("delay_us"),
-    )
-
-
-def attribution_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    checkpoint_dir: str,
-    output_dir: str,
-    gap_minutes: int = ATTRIBUTION_GAP_MIN,
-    watermark: str = "12 hours",
-):
-    """File-source incremental attribution (availableNow): drain the
-    events backlog, emit attributed pairs to an exactly-once parquet
-    sink.  Both sides carry the watermark; trigger state survives across
-    runs on the same checkpoint until the watermark passes t_ts + gap,
-    so a conversion landing in a LATER run still attributes to an
-    earlier trigger inside the horizon."""
-    events = spark.readStream.schema(schema).parquet(input_dir)
-    t, c = split_trigger_conversion(events)  # casts ts NTZ → TIMESTAMP
-    joined = attribution_join(
-        t.withWatermark("t_ts", watermark),
-        c.withWatermark("c_ts", watermark),
-        gap_minutes,
-    )
-    return (
-        joined.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
     )

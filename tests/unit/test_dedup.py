@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from openie_spark.operators.dedup import (
-    exact_dedup,
     minhash_dup_pairs,
     ngram_jaccard_pairs,
     simhash_dup_pairs,
@@ -39,27 +38,6 @@ def _shingles(text: str, n: int = 3) -> set[str]:
 def _jacc(a: str, b: str) -> float:
     sa, sb = _shingles(a), _shingles(b)
     return len(sa & sb) / len(sa | sb)
-
-
-def test_exact_dedup_groups(spark, corpus):
-    rows = {r["keeper_id"]: r for r in exact_dedup(corpus, "doc_id", "text").collect()}
-    assert rows[1]["group_size"] == 2 and rows[1]["members"] == [1, 2]
-    assert rows[3]["group_size"] == 1
-    assert rows[4]["group_size"] == 1
-
-
-def test_exact_dedup_members_bounded(spark):
-    """A planted mega-group (every doc identical) must come back with the
-    exact group_size but a members list capped at max_members — the
-    unbounded-collect_list OOM hazard the cap exists to close."""
-    n = 500
-    df = spark.createDataFrame(
-        [(i, "same text") for i in range(n)], "doc_id bigint, text string"
-    )
-    row = exact_dedup(df, "doc_id", "text", max_members=7).collect()[0]
-    assert row["group_size"] == n
-    assert row["keeper_id"] == 0
-    assert row["members"] == [0, 1, 2, 3, 4, 5, 6]  # 7 smallest ids, sorted
 
 
 def test_minhash_pairs_match_bruteforce(spark, corpus):

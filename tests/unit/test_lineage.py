@@ -1,9 +1,10 @@
-"""The lineage-cut seam must be semantics-preserving in every mode —
-``local`` (sandbox default), ``reliable`` (replicated checkpoint for
-fault-tolerant clusters), and ``none`` — so the fault-tolerance trade is
-config-only.  The reliable mode must also truncate the plan through the
-ITERATIVE connected-components loop (a persist-based mode does not — its
-plan doubles per round and analysis hangs, which is why it was removed)."""
+"""The lineage-cut seam must be semantics-preserving in both modes —
+``local`` (sandbox default) and ``reliable`` (replicated checkpoint for
+fault-tolerant clusters) — so the fault-tolerance trade is config-only,
+and any other value must be refused.  The reliable mode must also
+truncate the plan through the ITERATIVE connected-components loop (a
+persist-based mode does not — its plan doubles per round and analysis
+hangs, which is why it was removed)."""
 
 from __future__ import annotations
 
@@ -28,7 +29,7 @@ def test_reliable_mode_requires_checkpoint_dir(spark):
         spark.conf.unset(CONF_KEY)
 
 
-@pytest.mark.parametrize("mode", ["local", "reliable", "none"])
+@pytest.mark.parametrize("mode", ["local", "reliable"])
 def test_cut_lineage_modes_preserve_results(spark, mode, tmp_path):
     spark.conf.set(CONF_KEY, mode)
     spark.conf.set(CKPT_DIR_KEY, str(tmp_path / "ck"))
@@ -47,6 +48,17 @@ def test_cut_lineage_modes_preserve_results(spark, mode, tmp_path):
     finally:
         spark.conf.unset(CONF_KEY)
         spark.conf.unset(CKPT_DIR_KEY)
+
+
+def test_unknown_mode_is_refused(spark):
+    """A misspelt ``reliable`` must raise, not fall back to the
+    non-replicated local cut."""
+    spark.conf.set(CONF_KEY, "relaible")
+    try:
+        with pytest.raises(ValueError, match=f"{CONF_KEY}.*'relaible'"):
+            cut_lineage(spark.range(3), eager=True)
+    finally:
+        spark.conf.unset(CONF_KEY)
 
 
 def test_reliable_mode_survives_cc_iteration(spark, tmp_path):

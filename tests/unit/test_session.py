@@ -10,6 +10,7 @@ from openie_spark import session
 @pytest.mark.parametrize(
     "master, cores",
     [
+        ("local", 1),
         ("local[4]", 4),
         ("local[16,3]", 16),
         ("local[4,2]", 4),

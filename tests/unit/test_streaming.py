@@ -1,71 +1,12 @@
-"""Structured Streaming surface tests (streaming/ingest.py): incremental
-file ingest equals batch output; rerun processes only new files; the
-watermarked window agg equals its batch twin."""
+"""Structured Streaming tests (streaming/): the append-mode window-count
+sink's emission boundary, stateful sessionization against its batch twin,
+and watermarked dedup across runs."""
 
 from __future__ import annotations
 
-from pathlib import Path
-
-import pytest
 from pyspark.sql import functions as F
 
-from openie_spark.operators.extract import extract_stage
-from openie_spark.sources.tables import load_docs
-from openie_spark.streaming.ingest import stream_event_counts, stream_extract, windowed_event_counts
-
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def dirs(tmp_path):
-    d = {k: str(tmp_path / k) for k in ("in", "out", "ckpt", "ev_ckpt")}
-    Path(d["in"]).mkdir()
-    return d
-
-
-def _triples_key_set(df):
-    return {
-        (r["doc_id"], r["sent_idx"], r["subj"], r["rel"], r["arg"])
-        for r in df.collect()
-    }
-
-
-def test_stream_extract_matches_batch_and_is_incremental(spark, golden_docs_path, dirs):
-    docs = load_docs(spark, golden_docs_path)
-    first = docs.where(F.col("doc_id") < "g00400")
-    second = docs.where(F.col("doc_id") >= "g00400")
-
-    # land the first batch of files, drain with AvailableNow
-    first.coalesce(2).write.mode("overwrite").parquet(dirs["in"])
-    q = stream_extract(spark, dirs["in"], dirs["out"], dirs["ckpt"])
-    q.awaitTermination(120)
-    got1 = spark.read.parquet(dirs["out"])
-    want1 = extract_stage(first)
-    assert _triples_key_set(got1) == _triples_key_set(want1)
-
-    # land MORE files; rerun — only new files are processed, no duplicates
-    second.coalesce(2).write.mode("append").parquet(dirs["in"])
-    q2 = stream_extract(spark, dirs["in"], dirs["out"], dirs["ckpt"])
-    q2.awaitTermination(120)
-    got2 = spark.read.parquet(dirs["out"])
-    want2 = extract_stage(docs)
-    assert _triples_key_set(got2) == _triples_key_set(want2)
-    assert got2.count() == want2.count()  # exactly-once: no replays
-
-
-def test_windowed_counts_from_events_dir(spark, tmp_path):
-    events = spark.read.parquet(f"{SF}/events.parquet")
-    in_dir = str(tmp_path / "ev_in")
-    events.coalesce(2).write.parquet(in_dir)
-    q = stream_event_counts(
-        spark, in_dir, events.schema, str(tmp_path / "ck"), query_name="evc2"
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT * FROM evc2")
-    want = windowed_event_counts(events)
-    a = sorted(map(repr, got.collect()))
-    b = sorted(map(repr, want.collect()))
-    assert a == b and len(a) > 0
 
 
 def test_stream_counts_emission_boundary(spark, tmp_path):
@@ -213,7 +154,7 @@ def test_stream_dedup_within_watermark_across_runs(spark, tmp_path):
     passes, and the watermark bound is what makes state finite."""
     import datetime
 
-    from openie_spark.streaming.dedup import stream_exact_dedup
+    from openie_spark.streaming.dedup import stream_dedup_to_parquet
 
     base = datetime.datetime(2024, 1, 1)
 
@@ -226,7 +167,7 @@ def test_stream_dedup_within_watermark_across_runs(spark, tmp_path):
         "doc_id bigint, text string, ts timestamp",
     )
     first.coalesce(1).write.mode("overwrite").parquet(ind)
-    q = stream_exact_dedup(spark, ind, first.schema, ck, out)
+    q = stream_dedup_to_parquet(spark, ind, first.schema, ck, out)
     assert q.awaitTermination(120)
     got1 = {(r["doc_id"], r["text"]) for r in spark.read.parquet(out).collect()}
     assert {txt for _, txt in got1} == {"alpha text", "beta text"}
@@ -238,7 +179,7 @@ def test_stream_dedup_within_watermark_across_runs(spark, tmp_path):
         "doc_id bigint, text string, ts timestamp",
     )
     second.coalesce(1).write.mode("append").parquet(ind)
-    q2 = stream_exact_dedup(spark, ind, first.schema, ck, out)
+    q2 = stream_dedup_to_parquet(spark, ind, first.schema, ck, out)
     assert q2.awaitTermination(120)
     got2 = {(r["doc_id"], r["text"]) for r in spark.read.parquet(out).collect()}
     texts = sorted(txt for _, txt in got2)
@@ -330,254 +271,6 @@ def test_stateful_fn_monotone_merge_on_late_events():
     assert st.get == (nxt, nxt, 1)
 
 
-def test_stream_attribution_matches_batch_twin(spark, tmp_path):
-    """Stream-stream interval join: draining the events backlog with
-    availableNow yields EXACTLY the batch attribution_join pairs (the
-    watermark horizon covers the whole fixture, so nothing is late)."""
-    from openie_spark.sources.tables import load
-    from openie_spark.streaming.joins import (
-        attribution_join,
-        attribution_stream,
-        split_trigger_conversion,
-    )
-
-    events = load(spark, SF, "events")
-    ind, ck, out = (str(tmp_path / x) for x in ("in", "ck", "out"))
-    events.coalesce(2).write.mode("overwrite").parquet(ind)
-
-    q = attribution_stream(spark, ind, events.schema, ck, out, watermark="365 days")
-    assert q.awaitTermination(180)
-    got = {
-        (r["user_id"], r["trigger_id"], r["conversion_id"], r["delay_us"])
-        for r in spark.read.parquet(out).collect()
-    }
-    t, c = split_trigger_conversion(events)
-    want = {
-        (r["user_id"], r["trigger_id"], r["conversion_id"], r["delay_us"])
-        for r in attribution_join(t, c).collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def test_stream_attribution_state_carries_across_runs(spark, tmp_path):
-    """A conversion landing in a LATER availableNow run on the same
-    checkpoint still attributes to a trigger from the first run (join
-    state persisted inside the watermark horizon)."""
-    import datetime
-
-    from openie_spark.streaming.joins import attribution_stream
-
-    base = datetime.datetime(2024, 6, 1)
-
-    def t(mins):
-        return base + datetime.timedelta(minutes=mins)
-
-    ind, ck, out = (str(tmp_path / x) for x in ("in", "ck", "out"))
-    first = spark.createDataFrame(
-        [(1, t(0), 7, "signup", 1.0, "{}")],
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string",
-    )
-    first.coalesce(1).write.mode("overwrite").parquet(ind)
-    q = attribution_stream(spark, ind, first.schema, ck, out, watermark="2 hours")
-    assert q.awaitTermination(120)
-
-    second = spark.createDataFrame(
-        [(2, t(10), 7, "purchase", 5.0, "{}"),   # within gap -> attributed
-         (3, t(50), 7, "purchase", 5.0, "{}")],  # beyond 30-min gap -> not
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string",
-    )
-    second.coalesce(1).write.mode("append").parquet(ind)
-    q2 = attribution_stream(spark, ind, first.schema, ck, out, watermark="2 hours")
-    assert q2.awaitTermination(120)
-    got = {
-        (r["trigger_id"], r["conversion_id"], r["delay_us"])
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got == {(1, 2, 10 * 60 * 1_000_000)}
-
-
-# ---------------------------------------------------------------------------
-# Source-agnostic seam (streaming/ingest.py:stream_source) — the unbounded
-# branch is exercised for REAL via the built-in rate source: the same
-# stateless extract_stage runs inside a live micro-batch query, and every
-# drained doc's triples must equal the batch twin built from spark.range.
-# ---------------------------------------------------------------------------
-
-
-def test_rate_source_drives_extraction_like_batch(spark, tmp_path):
-    from openie_spark.streaming.ingest import rate_to_docs, stream_source
-
-    rates = stream_source(
-        spark, "rate", options={"rowsPerSecond": "500", "numPartitions": "2"}
-    )
-    assert rates.isStreaming
-    triples = extract_stage(rate_to_docs(rates))
-    q = (
-        triples.writeStream.format("memory")
-        .queryName("rate_triples")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "rate_ckpt"))
-        .start()
-    )
-    try:
-        # let the unbounded source accrue, then drain what exists
-        import time as _t
-
-        deadline = _t.time() + 60
-        while _t.time() < deadline:
-            q.processAllAvailable()
-            if spark.sql("SELECT 1 FROM rate_triples LIMIT 1").count():
-                break
-            _t.sleep(0.5)
-    finally:
-        q.stop()
-
-    got = spark.table("rate_triples")
-    n = got.count()
-    assert n > 0, "unbounded rate source produced no triples"
-
-    # batch twin over exactly the drained id range: content is a pure
-    # function of `value`, so per-doc triples must match bit-for-bit
-    max_id = int(
-        got.agg(F.max(F.split(F.col("doc_id"), "-")[1]).cast("long")).collect()[0][0]
-    )
-    twin_docs = rate_to_docs(
-        spark.range(0, max_id + 1).select(F.col("id").alias("value"))
-    )
-    want = extract_stage(twin_docs)
-    seen_ids = [r[0] for r in got.select("doc_id").distinct().collect()]
-    want = want.where(F.col("doc_id").isin(seen_ids))
-    got_sub = got.where(F.col("doc_id").isin(seen_ids))
-    a = sorted(map(repr, got_sub.collect()))
-    b = sorted(map(repr, want.collect()))
-    assert a == b
-    # every template extracts: the drained prefix covers all 4 templates
-    # once max_id >= 3, so distinct relations must be > 1
-    if max_id >= 3:
-        assert got.select("rel").distinct().count() > 1
-
-
-def test_stream_source_validates_kinds(spark):
-    from openie_spark.streaming.ingest import stream_source
-
-    with pytest.raises(ValueError, match="unknown stream source"):
-        stream_source(spark, "carrier-pigeon")
-    with pytest.raises(ValueError, match="requires schema"):
-        stream_source(spark, "files")
-    with pytest.raises(ValueError, match="requires host"):
-        stream_source(spark, "socket")
-    # kafka is pure option plumbing on the standard connector; absent the
-    # package the reader still CONSTRUCTS (load resolves lazily on start)
-    # -- the seam itself is source-agnostic.
-    df = stream_source(
-        spark,
-        "rate-micro-batch",
-        options={"rowsPerBatch": "8", "numPartitions": "2"},
-    )
-    assert df.isStreaming and set(df.columns) == {"timestamp", "value"}
-
-
-# ---------------------------------------------------------------------------
-# Push-source path (socket + jsonl_to_docs): a LIVE local TCP server feeds
-# JSON-line documents (with junk lines mixed in) through the wire decoder
-# into the same stateless extract_stage; the drained triples must equal the
-# batch twin built from the same documents.  jsonl_to_docs is also the
-# documented kafka value decode, so this exercises that path's semantics
-# without the connector package.
-# ---------------------------------------------------------------------------
-
-
-def test_socket_source_drives_extraction_like_batch(spark, tmp_path):
-    import json
-    import socket as pysock
-    import threading
-    import time as _t
-
-    from openie_spark.schemas import DOC_SCHEMA
-    from openie_spark.streaming.ingest import (
-        _RATE_DOC_TEMPLATES,
-        jsonl_to_docs,
-        stream_source,
-    )
-
-    docs = []
-    for i in range(24):
-        spans = []
-        if i % 3 == 0:
-            spans.append(
-                {"kind": "image", "text": None, "media_ref": f"img://sock/{i}.bmp", "offset": 0}
-            )
-        spans.append(
-            {
-                "kind": "text",
-                "text": _RATE_DOC_TEMPLATES[i % len(_RATE_DOC_TEMPLATES)],
-                "media_ref": None,
-                "offset": len(spans),
-            }
-        )
-        docs.append({"doc_id": f"sock-{i:04d}", "spans": spans})
-
-    lines = [json.dumps(d) for d in docs]
-    # junk the decoder must drop without poisoning the stream
-    lines.insert(5, "this is not json")
-    lines.insert(11, json.dumps({"spans": []}))  # no doc_id
-    lines.insert(17, json.dumps({"doc_id": "sock-null-spans"}))  # no spans
-    payload = ("\n".join(lines) + "\n").encode()
-
-    srv = pysock.socket(pysock.AF_INET, pysock.SOCK_STREAM)
-    srv.setsockopt(pysock.SOL_SOCKET, pysock.SO_REUSEADDR, 1)
-    srv.bind(("127.0.0.1", 0))
-    srv.listen(1)
-    port = srv.getsockname()[1]
-    done = threading.Event()
-
-    def serve():
-        conn, _ = srv.accept()
-        try:
-            conn.sendall(payload)
-            done.wait(180)  # keep the connection open while the query runs
-        finally:
-            conn.close()
-            srv.close()
-
-    t = threading.Thread(target=serve, daemon=True)
-    t.start()
-
-    twin = extract_stage(
-        spark.createDataFrame(
-            [(d["doc_id"], [tuple(s.values()) for s in d["spans"]]) for d in docs],
-            DOC_SCHEMA,
-        )
-    )
-    want = sorted(map(repr, twin.collect()))
-    assert want, "batch twin extracted nothing — templates regressed"
-
-    raw = stream_source(
-        spark, "socket", options={"host": "127.0.0.1", "port": str(port)}
-    )
-    assert raw.isStreaming
-    triples = extract_stage(jsonl_to_docs(raw))
-    q = (
-        triples.writeStream.format("memory")
-        .queryName("sock_triples")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "sock_ckpt"))
-        .start()
-    )
-    try:
-        deadline = _t.time() + 120
-        while _t.time() < deadline:
-            if spark.table("sock_triples").count() >= len(want):
-                break
-            _t.sleep(0.5)
-    finally:
-        q.stop()
-        done.set()
-
-    got = sorted(map(repr, spark.table("sock_triples").collect()))
-    assert got == want
-
-
 def test_stream_dedup_composite_key_keeps_per_lang_survivors(spark, tmp_path):
     """stream_dedup_to_parquet with a (content_hash, lang) key: the same
     text in two langs survives once PER LANG, while a same-lang duplicate
@@ -607,88 +300,3 @@ def test_stream_dedup_composite_key_keeps_per_lang_survivors(spark, tmp_path):
     )
     assert got == [("de", "same words"), ("en", "other words"), ("en", "same words")]
 
-
-def test_kafka_wire_twin_drives_extraction_like_batch(spark, tmp_path):
-    """File-backed mock of the kafka wire protocol: a streaming source
-    emitting the connector's EXACT record schema (KAFKA_WIRE_SCHEMA —
-    key/value bytes + topic/partition/offset/timestamp), decoded by
-    decode_kafka_wire (the entire post-load half of the kafka branch)
-    into the same stateless extract_stage.  Drained triples must equal
-    the batch twin; junk records must drop without poisoning the
-    stream.  Only the jar-provided load() itself stays unexercised."""
-    import datetime
-    import json
-
-    from openie_spark.schemas import DOC_SCHEMA
-    from openie_spark.streaming.ingest import (
-        _RATE_DOC_TEMPLATES,
-        KAFKA_WIRE_SCHEMA,
-        decode_kafka_wire,
-        stream_source,
-    )
-
-    docs = []
-    for i in range(24):
-        spans = []
-        if i % 4 == 0:
-            spans.append(
-                {"kind": "audio", "text": None,
-                 "media_ref": f"wav://kafka/{i}.wav", "offset": 0}
-            )
-        spans.append(
-            {
-                "kind": "text",
-                "text": _RATE_DOC_TEMPLATES[i % len(_RATE_DOC_TEMPLATES)],
-                "media_ref": None,
-                "offset": len(spans),
-            }
-        )
-        docs.append({"doc_id": f"kafka-{i:04d}", "spans": spans})
-
-    values = [json.dumps(d) for d in docs]
-    values.insert(3, "not json at all")  # junk the decoder must drop
-    values.insert(9, json.dumps({"spans": []}))  # no doc_id
-    t0 = datetime.datetime(2026, 1, 1)
-    wire_rows = [
-        (
-            f"k{i}".encode(),  # key bytes (opaque to the decode)
-            v.encode(),
-            "docs-topic",
-            i % 3,  # partition
-            i,  # offset
-            t0 + datetime.timedelta(seconds=i),
-            0,  # timestampType CreateTime
-        )
-        for i, v in enumerate(values)
-    ]
-    wire_dir = tmp_path / "wire"
-    spark.createDataFrame(wire_rows, KAFKA_WIRE_SCHEMA).write.parquet(
-        str(wire_dir)
-    )
-
-    twin = extract_stage(
-        spark.createDataFrame(
-            [(d["doc_id"], [tuple(s.values()) for s in d["spans"]]) for d in docs],
-            DOC_SCHEMA,
-        )
-    )
-    want = sorted(map(repr, twin.collect()))
-    assert want, "batch twin extracted nothing — templates regressed"
-
-    raw = stream_source(
-        spark, "files", schema=KAFKA_WIRE_SCHEMA, path=str(wire_dir)
-    )
-    assert raw.isStreaming
-    triples = extract_stage(decode_kafka_wire(raw))
-    out_dir = tmp_path / "out"
-    q = (
-        triples.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", str(out_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = sorted(map(repr, spark.read.parquet(str(out_dir)).collect()))
-    assert got == want
