@@ -1,6 +1,6 @@
 """Deterministic MinHash + LSH banding (OP-31/32/33 core, SURVEY.md §2.4).
 
-Shared by the Spark pandas UDF (operators/linking.py) and the pure-Python
+Shared by the Spark Arrow fence (operators/linking.py) and the pure-Python
 oracle link computation, so both sides produce bit-identical signatures —
 the linking P/R gate then measures only distributed-execution fidelity.
 
@@ -95,7 +95,7 @@ def band_keys_for(s: str) -> list[int]:
 # ---------------------------------------------------------------------------
 # Vectorized batch path (bit-identical to the scalar path above; the scalar
 # path stays as the oracle reference and the batch path is asserted equal in
-# tests/unit/test_minhash_batch.py).  Used by the pandas UDFs so signature
+# tests/unit/test_minhash_batch.py).  Used by the Arrow fences so signature
 # cost is numpy-vectorized across a whole Arrow batch instead of per-row
 # Python — this is the 100 TB hot path for both entity linking and
 # document-level MinHash dedup.
@@ -103,10 +103,19 @@ def band_keys_for(s: str) -> list[int]:
 
 _MASK32 = np.uint64(0xFFFFFFFF)
 _P64 = np.uint64(P)
+# Columns per (K, chunk) working array in signatures_batch: bounds every
+# temporary to K * 4 Ki * 8 B = 2 MiB however many shingles a batch holds.
+_CHUNK = 1 << 12
+_BAND_PREFIX = np.array(
+    [list(b.to_bytes(2, "big")) for b in range(BANDS)], dtype=np.uint8
+)
+_MSG = 2 + 8 * ROWS  # band index + ROWS signature values, as band_keys hashes
+_TOP_BIT = np.uint64(1 << 63)
 
 
-def _mulmod_p(a: int, x: np.ndarray) -> np.ndarray:
-    """Exact (a * x) mod p for p = 2^61-1, vectorized over uint64 x < p.
+def _mulmod_p(a, x: np.ndarray) -> np.ndarray:
+    """Exact (a * x) mod p for p = 2^61-1, vectorized over uint64 x < p
+    (``a`` an int or a uint64 array broadcastable against ``x``).
 
     Splits both operands into 32-bit halves so every partial product fits
     in uint64, then reduces with 2^61 ≡ 1 (mod p):
@@ -114,8 +123,9 @@ def _mulmod_p(a: int, x: np.ndarray) -> np.ndarray:
       hh·2^64 ≡ hh·8;  mid·2^32 ≡ (mid >> 29) + (mid & (2^29-1))·2^32;
       ll ≡ (ll >> 61) + (ll & (2^61-1)).
     """
-    a_hi = np.uint64(a >> 32)
-    a_lo = np.uint64(a & 0xFFFFFFFF)
+    a = np.asarray(a, dtype=np.uint64)
+    a_hi = a >> np.uint64(32)
+    a_lo = a & _MASK32
     x_hi = x >> np.uint64(32)
     x_lo = x & _MASK32
     hh = a_hi * x_hi                      # < 2^58
@@ -133,60 +143,75 @@ def _mulmod_p(a: int, x: np.ndarray) -> np.ndarray:
 
 def signatures_batch(shingle_lists: list[list[str]]) -> np.ndarray:
     """(n, K) uint64 signatures for a batch of shingle lists; row of p for
-    empty inputs — bit-identical to ``signature`` applied per row."""
+    empty inputs — bit-identical to ``signature`` applied per row.
+
+    Each DISTINCT shingle of the batch is hashed and permuted once (a
+    batch of names repeats a few hundred 3-grams thousands of times); the
+    per-row minimum is then one ``np.minimum.reduceat`` over the permuted
+    values gathered back into occurrence order."""
     n = len(shingle_lists)
     out = np.full((n, K), P, dtype=np.uint64)
-    cache: dict[str, int] = {}
-    hashes: list[int] = []
-    starts: list[int] = []
-    rows: list[int] = []
-    pos = 0
+    ids: dict[str, int] = {}
+    occ: list[int] = []
+    lens = np.zeros(n, dtype=np.int64)
     for r, lst in enumerate(shingle_lists):
-        if not lst:
-            continue
-        starts.append(pos)
-        rows.append(r)
+        lens[r] = len(lst)
         for sh in lst:
-            h = cache.get(sh)
-            if h is None:
-                h = _base_hash(sh) % P
-                cache[sh] = h
-            hashes.append(h)
-        pos += len(lst)
-    if not rows:
+            occ.append(ids.setdefault(sh, len(ids)))
+    if not ids:
         return out
-    x = np.array(hashes, dtype=np.uint64)
-    starts_a = np.array(starts, dtype=np.int64)
-    rows_a = np.array(rows, dtype=np.int64)
-    for i in range(K):
-        y = _mulmod_p(int(_A[i]), x) + _B[i]
-        y = np.where(y >= _P64, y - _P64, y)
-        out[rows_a, i] = np.minimum.reduceat(y, starts_a)
+    x = np.fromiter((_base_hash(sh) % P for sh in ids), dtype=np.uint64, count=len(ids))
+    perm = np.empty((K, len(x)), dtype=np.uint64)  # (permutation, distinct shingle)
+    for c in range(0, len(x), _CHUNK):
+        y = _mulmod_p(_A[:, None], x[None, c : c + _CHUNK]) + _B[:, None]
+        perm[:, c : c + _CHUNK] = np.where(y >= _P64, y - _P64, y)
+    occ_a = np.array(occ, dtype=np.intp)
+    rows = np.flatnonzero(lens)
+    starts = (np.cumsum(lens) - lens)[rows]
+    j0 = 0
+    while j0 < len(rows):
+        j1 = max(j0 + 1, int(np.searchsorted(starts, starts[j0] + _CHUNK)))
+        lo = starts[j0]
+        hi = starts[j1] if j1 < len(rows) else len(occ_a)
+        gathered = perm[:, occ_a[lo:hi]]
+        out[rows[j0:j1]] = np.minimum.reduceat(gathered, starts[j0:j1] - lo, axis=1).T
+        j0 = j1
     return out
 
 
-def band_keys_batch(sigs: np.ndarray) -> list[list[int]]:
-    """Band keys for an (n, K) signature matrix; row-wise identical to
-    ``band_keys``."""
-    prefixes = [b.to_bytes(2, "big") for b in range(BANDS)]
-    out: list[list[int]] = []
-    for row in sigs:
-        keys = []
-        for b in range(BANDS):
-            h = hashlib.blake2b(digest_size=8)
-            h.update(prefixes[b])
-            h.update(row[b * ROWS : (b + 1) * ROWS].tobytes())
-            keys.append(int.from_bytes(h.digest(), "big", signed=False) - (1 << 63))
-        out.append(keys)
-    return out
+def band_keys_batch(sigs: np.ndarray) -> np.ndarray:
+    """(n, BANDS) int64 band keys for an (n, K) signature matrix; row-wise
+    identical to ``band_keys``.  Every band message (2-byte band index +
+    the band's ROWS values in native byte order, as ``band_keys`` hashes
+    them) is laid out in one contiguous buffer and hashed in place."""
+    n = len(sigs)
+    msgs = np.empty((n, BANDS, _MSG), dtype=np.uint8)
+    msgs[:, :, :2] = _BAND_PREFIX
+    msgs[:, :, 2:] = np.ascontiguousarray(sigs).view(np.uint8).reshape(n, BANDS, _MSG - 2)
+    buf = memoryview(msgs.reshape(-1))
+    digests = b"".join(
+        hashlib.blake2b(buf[o : o + _MSG], digest_size=8).digest()
+        for o in range(0, len(buf), _MSG)
+    )
+    # unsigned digest - 2^63 (band_keys) == the digest with its top bit
+    # flipped, read as a signed int64
+    u = np.frombuffer(digests, dtype=">u8").astype(np.uint64) ^ _TOP_BIT
+    return u.view(np.int64).reshape(n, BANDS)
+
+
+def band_keys_matrix(norms: list[str | None]) -> tuple[np.ndarray, np.ndarray]:
+    """Band keys of a batch of mention strings as an (n, BANDS) int64
+    matrix, plus the mask of rows that have keys (``None`` and ``''``
+    have no shingles, hence no keys)."""
+    lists = [shingles(s) if s else [] for s in norms]
+    has_keys = np.fromiter((bool(lst) for lst in lists), dtype=bool, count=len(lists))
+    return band_keys_batch(signatures_batch(lists)), has_keys
 
 
 def band_keys_for_batch(norms: list[str | None]) -> list[list[int]]:
     """Vectorized ``band_keys_for`` over a batch of mention strings."""
-    lists = [shingles(s) if s else [] for s in norms]
-    sigs = signatures_batch(lists)
-    keys = band_keys_batch(sigs)
-    return [k if lst else [] for k, lst in zip(keys, lists)]
+    keys, has_keys = band_keys_matrix(norms)
+    return [k if ok else [] for k, ok in zip(keys.tolist(), has_keys.tolist())]
 
 
 def jaccard(a: list[str], b: list[str]) -> float:

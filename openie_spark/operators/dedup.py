@@ -103,7 +103,7 @@ def _doc_band_keys_udf(shingle_arrays: pd.Series) -> pd.Series:
     (the 100 TB dedup hot path; bit-identical to the scalar path)."""
     lists = [list(a) if a is not None else [] for a in shingle_arrays]
     sigs = mh.signatures_batch(lists)
-    keys = mh.band_keys_batch(sigs)
+    keys = mh.band_keys_batch(sigs).tolist()
     return pd.Series(
         [k if lst else [] for k, lst in zip(keys, lists)],
         index=shingle_arrays.index,

@@ -6,7 +6,7 @@ Two paths, in order:
      star calls the "broadcast alias dictionary").
   2. OP-31..34 MinHash-LSH for the remainder: char-3-gram shingles
      (JVM-side higher-order functions — no UDF), 64-perm MinHash + 16x4
-     banding (vectorized pandas UDF over the shared frozen scheme in
+     banding (one mapInArrow fence over the shared frozen scheme in
      functions/minhash.py), candidate generation by shuffled equi-join on
      band keys, exact-Jaccard verification (array_intersect/array_union,
      JVM-side) at threshold 0.5, best match per mention by
@@ -27,11 +27,11 @@ triples→links join back, handled by AQE skew split + optional salting
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from openie_spark.functions import minhash as mh
@@ -51,12 +51,27 @@ def shingles_col(col: str):
     )
 
 
-@pandas_udf(ArrayType(LongType()))
-def band_keys_udf(norm: pd.Series) -> pd.Series:
-    """OP-32/33: MinHash signature → 16 LSH band keys (frozen scheme),
-    numpy-vectorized across the whole Arrow batch (minhash.py batch path,
+def _band_key_batches(batches):
+    """mapInArrow kernel of ``band_key_rows``: each row once per band key
+    of its first column, with the key appended as ``band_key``."""
+    for batch in batches:
+        keys, has_keys = mh.band_keys_matrix(batch.column(0).to_pylist())
+        rows = np.repeat(np.flatnonzero(has_keys), mh.BANDS)
+        yield pa.RecordBatch.from_arrays(
+            [*batch.take(pa.array(rows)).columns, pa.array(keys[has_keys].reshape(-1))],
+            names=[*batch.schema.names, "band_key"],
+        )
+
+
+def band_key_rows(df: DataFrame) -> DataFrame:
+    """OP-32/33: MinHash signature → 16 LSH band keys (frozen scheme) of
+    ``df``'s first column, exploded: one output row per (row, band key),
+    every column of ``df`` passed through and ``band_key`` appended; a
+    NULL or empty string has no shingles and emits no row.  ONE Arrow
+    fence, numpy-vectorized across the batch (minhash.py batch path,
     bit-identical to the scalar oracle path)."""
-    return pd.Series(mh.band_keys_for_batch(norm.tolist()), index=norm.index)
+    schema = StructType([*df.schema.fields, StructField("band_key", LongType(), False)])
+    return df.mapInArrow(_band_key_batches, schema)
 
 
 def exact_links(mentions_distinct: DataFrame, alias_dict: DataFrame) -> DataFrame:
@@ -85,7 +100,7 @@ def lsh_links(unlinked: DataFrame, alias_dict: DataFrame) -> DataFrame:
     # arrays are recomputed as a JVM expression on the (far fewer)
     # candidate pairs instead of being carried through the shuffle
     #
-    # explicit repartition before the MinHash UDF: `unlinked` arrives from
+    # explicit repartition before the MinHash fence: `unlinked` arrives from
     # an anti-join whose output AQE coalesces to ~1 partition at small
     # scale, which serializes the Python signature work (measured 7.9 s →
     # ~1 s at 92k mentions on 32 cores).  Partition count = cluster slots
@@ -95,14 +110,10 @@ def lsh_links(unlinked: DataFrame, alias_dict: DataFrame) -> DataFrame:
     # Arrow/worker dispatch per task.  The repartitioned data is
     # vocabulary-bounded, so this shuffle never grows with corpus size.
     n_part = unlinked.sparkSession.sparkContext.defaultParallelism
-    m_exp = unlinked.repartition(n_part, "mention_norm").select(
-        "mention_norm", F.explode(band_keys_udf("mention_norm")).alias("band_key")
+    m_exp = band_key_rows(
+        unlinked.repartition(n_part, "mention_norm").select("mention_norm")
     )
-    a_exp = alias_dict.select(
-        "alias_norm",
-        "entity_id",
-        F.explode(band_keys_udf("alias_norm")).alias("band_key"),
-    )
+    a_exp = band_key_rows(alias_dict.select("alias_norm", "entity_id"))
     cand = (
         m_exp.join(a_exp, "band_key")
         .dropDuplicates(["mention_norm", "alias_norm", "entity_id"])
@@ -193,12 +204,8 @@ def blocking_quality(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
         eager=True,
     )
     n_part = mentions.sparkSession.sparkContext.defaultParallelism
-    m_exp = rest.repartition(n_part, "mention_norm").select(
-        "mention_norm", F.explode(band_keys_udf("mention_norm")).alias("band_key")
-    )
-    a_exp = aliases.select(
-        "alias_norm", F.explode(band_keys_udf("alias_norm")).alias("band_key")
-    )
+    m_exp = band_key_rows(rest.repartition(n_part, "mention_norm").select("mention_norm"))
+    a_exp = band_key_rows(aliases.select("alias_norm"))
     cand = (
         m_exp.join(a_exp, "band_key")
         .select("mention_norm", "alias_norm")

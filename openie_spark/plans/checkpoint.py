@@ -29,8 +29,11 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from openie_spark.catalog import ParquetCatalog
@@ -48,6 +51,21 @@ CHECKPOINT_TABLE = "checkpoint"
 # ruleset) invalidation tuple.  Losing a worker mid-stage costs at most
 # that one stage's recompute from its already-materialized inputs.
 STAGE_SENTINEL_PID = -1
+
+
+def driver_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """Driver-held rows as a one-partition, JVM-side frame.
+
+    ``spark.createDataFrame(<list>)`` is a pickled Python RDD: Spark forks
+    a second Python daemon and its workers only to unpickle the rows, and
+    an append of it writes one file per ``defaultParallelism`` slice.  An
+    Arrow table becomes a JVM ``LocalRelation`` instead, which no Python
+    worker touches; one partition makes an append one file."""
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def with_partition_id(docs: DataFrame, n_buckets: int) -> DataFrame:
@@ -189,7 +207,8 @@ def record_stage_done(
     A global stage's input is not counted, so ``n_in`` is -1; ``n_out`` of
     -1 means 'not counted' (collect_counts=False runs skip informational
     count actions)."""
-    stats = cat.spark.createDataFrame(
+    stats = driver_frame(
+        cat.spark,
         [(STAGE_SENTINEL_PID, -1, int(n_out))],
         "partition_id int, n_in long, n_triples long",
     )
@@ -237,9 +256,8 @@ def record_dropped(
     (collect_run_state keeps only status='done' after latest-wins), so if
     identical content later reappears in the bucket it recomputes — its
     data partition was deleted alongside this marker."""
-    spark = cat.spark
-    rows = spark.createDataFrame(
-        [(int(p),) for p in pids], "partition_id int"
+    rows = driver_frame(
+        cat.spark, [(int(p),) for p in pids], "partition_id int"
     ).select(
         F.lit(run_id).alias("run_id"),
         F.lit(stage).alias("stage"),

@@ -168,6 +168,10 @@ def run_pipeline(
                     min(nparts, cfg.n_buckets), "partition_id"
                 )
             cat.write_table(triples_out, "triples", partition_by=["partition_id"])
+            # ONE load (one partition-directory listing) of the written
+            # table serves the stats below and every downstream stage;
+            # it is reloaded only if the stale purge below drops partitions.
+            written = cat.load_table("triples")
             # per-partition metrics from the WRITTEN table — recomputing
             # `triples` here would re-run the whole extraction UDF a second
             # time (DataFrame actions do not reuse shuffle/UDF work)
@@ -175,15 +179,14 @@ def run_pipeline(
             # each fingerprint) — rebuilding it from the corpus would be a
             # whole redundant scan at the 100 TB posture; only the written-
             # triples counts need a (cheap, output-side) aggregation.
-            base = spark.createDataFrame(
+            base = ckpt.driver_frame(
+                spark,
                 [(p, int(f.split(":")[0]), f) for p, f in sorted(pid_fps.items())],
                 "partition_id int, n_in long, input_fingerprint string",
             )
             stats = (
                 base.join(
-                    cat.load_table("triples")
-                    .groupBy("partition_id")
-                    .agg(F.count("*").alias("n_triples")),
+                    written.groupBy("partition_id").agg(F.count("*").alias("n_triples")),
                     "partition_id",
                     "left",
                 )
@@ -213,7 +216,9 @@ def run_pipeline(
             ckpt.record_dropped(cat, cfg.run_id, "extract", stale)
             cat.drop_partitions("triples", "partition_id", stale)
     out["extract_stale_partitions"] = len(stale)
-    triples = cat.load_table("triples").drop("partition_id")
+    if pending == 0 or stale:
+        written = cat.load_table("triples")
+    triples = written.drop("partition_id")
     if cfg.collect_counts:
         out["n_triples"] = triples.count()
     out["extract_wall_ms"] = t_extract.wall_ms

@@ -77,6 +77,36 @@ def test_record_dropped_neutralizes_done(spark, tmp_path):
     assert ckpt.done_pids_by_fp(state, "extract", {0: "fpA", 1: "fpA"}) == {0}
 
 
+def test_stage_and_dropped_rows_append_one_file_each(spark, tmp_path):
+    """record_stage_done and record_dropped append their rows as ONE
+    parquet file per call, whatever the session's parallelism, and the
+    latest-wins snapshot reads them as before."""
+    from openie_spark.spec.rules import RULESET_VERSION
+
+    cat = ParquetCatalog(spark, str(tmp_path))
+
+    def n_files() -> int:
+        return len(list((tmp_path / ckpt.CHECKPOINT_TABLE).rglob("*.parquet")))
+
+    _mark_done(spark, cat, "r", "extract", "fpA", [0, 1, 2])
+    time.sleep(0.01)
+    before = n_files()
+    ckpt.record_stage_done(cat, "r", "link", "fpL", 7, wall_ms=1)
+    assert n_files() == before + 1
+    ckpt.record_dropped(cat, "r", "extract", [1, 2])
+    assert n_files() == before + 2
+    assert ckpt.collect_run_state(cat, "r") == {
+        ("extract", 0, "fpA", RULESET_VERSION),
+        ("link", ckpt.STAGE_SENTINEL_PID, "fpL", RULESET_VERSION),
+    }
+    link_row = (
+        cat.load_table(ckpt.CHECKPOINT_TABLE).where("stage = 'link'").collect()
+    )
+    assert [(r.partition_id, r.n_in, r.n_triples, r.status) for r in link_row] == [
+        (ckpt.STAGE_SENTINEL_PID, -1, 7, "done")
+    ]
+
+
 def test_ensure_stream_fixture_wipes_partial_build(tmp_path):
     """A marker-less fixture dir (failed prior build: stale streaming
     checkpoint + partial sink) must be wiped before rebuilding; a marked

@@ -16,17 +16,21 @@ from openie_spark.operators.skew import hot_keys
 
 
 def test_reliable_mode_requires_checkpoint_dir(spark):
-    """Must run BEFORE any reliable-mode use: setCheckpointDir is sticky
-    for the session, so the missing-dir error is only observable while no
-    dir has ever been set."""
-    if spark.sparkContext._jsc.sc().getCheckpointDir().isDefined():
-        pytest.skip("checkpoint dir already set earlier in this session")
+    """setCheckpointDir is sticky for the SparkContext, so the missing-dir
+    error is only observable with the context's dir cleared: clear it for
+    the test and put back whatever an earlier test left."""
+    jsc = spark.sparkContext._jsc.sc()
+    jvm = spark.sparkContext._jvm
+    saved = jsc.getCheckpointDir()
+    set_dir = getattr(jsc, "checkpointDir_$eq")
+    set_dir(jvm.scala.Option.apply(None))
     spark.conf.set(CONF_KEY, "reliable")
     try:
         with pytest.raises(Exception, match="checkpointDir"):
             cut_lineage(spark.range(3), eager=True)
     finally:
         spark.conf.unset(CONF_KEY)
+        set_dir(saved)
 
 
 @pytest.mark.parametrize("mode", ["local", "reliable"])

@@ -7,7 +7,12 @@ from pyspark.sql import functions as F
 
 from openie_spark.fixtures.entities import alias_rows, entity_names
 from openie_spark.functions import minhash as mh
-from openie_spark.operators.linking import link_mentions, shingles_col
+from openie_spark.operators.linking import (
+    band_key_rows,
+    link_mentions,
+    lsh_links,
+    shingles_col,
+)
 from openie_spark.schemas import ALIAS_DICT_SCHEMA
 from openie_spark.sources.tables import load_alias_dict
 
@@ -114,3 +119,30 @@ def test_blocking_quality_matches_bruteforce(spark, alias_dict_path):
     assert row.pairs_completeness_ppm == n_found * 1_000_000 // n_true
     space = len(rest) * len(aliases)
     assert row.reduction_ratio_ppm == (space - n_cand) * 1_000_000 // space
+
+
+def test_band_key_rows_is_the_exploded_batch_kernel(spark, alias_dict_path):
+    """band_key_rows == the Python explode of band_keys_for_batch: the
+    pass-through columns survive, NULL and '' emit no row, and the LSH
+    plan holds mapInArrow fences, never an ArrowEvalPython (pandas) one."""
+    norms = [None, "", "a", "ab", "abc", "acme corp", "acme corp",
+             "ünïcode naïve", "meridian " * 40]
+    df = spark.createDataFrame(
+        [(n, 1000 + i) for i, n in enumerate(norms)], "alias_norm string, entity_id long"
+    )
+    out = band_key_rows(df)
+    assert out.columns == ["alias_norm", "entity_id", "band_key"]
+    want = sorted(
+        (n, 1000 + i, k)
+        for i, (n, keys) in enumerate(zip(norms, mh.band_keys_for_batch(norms)))
+        for k in keys
+    )
+    assert sorted(map(tuple, out.collect())) == want
+    assert {e for _, e, _ in want}.isdisjoint({1000, 1001})
+
+    unlinked = spark.createDataFrame([(n,) for n in norms[2:]], "mention_norm string")
+    links = lsh_links(unlinked, _aliases(spark, alias_dict_path))
+    links.collect()
+    plan = links._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan
+    assert "ArrowEvalPython" not in plan

@@ -52,3 +52,31 @@ def test_batch_property(strs):
     got = mh.band_keys_for_batch(strs)
     for s, keys in zip(strs, got):
         assert keys == (mh.band_keys_for(s) if s else [])
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(st.text(alphabet="ab c", min_size=0, max_size=10), min_size=0, max_size=64))
+def test_batch_property_repeated_shingles(strs):
+    """A small alphabet makes rows share shingles: the batch path permutes
+    each distinct shingle once and must still give every row its own
+    scalar signature and band keys."""
+    lists = [mh.shingles(s) for s in strs]
+    sigs = mh.signatures_batch(lists)
+    for lst, sig in zip(lists, sigs):
+        assert np.array_equal(sig, mh.signature(lst))
+    got = mh.band_keys_for_batch(strs)
+    for s, keys in zip(strs, got):
+        assert keys == (mh.band_keys_for(s) if s else [])
+
+
+def test_band_keys_batch_on_non_contiguous_signatures():
+    strings = ["acme corp", "x", "delta works", "the same", "vertex group"]
+    sigs = mh.signatures_batch([mh.shingles(s) for s in strings])
+    wide = np.zeros((len(strings) * 2, 2 * mh.K), dtype=np.uint64)
+    wide[::2, ::2] = sigs
+    view = wide[::2, ::2]
+    assert not view.flags["C_CONTIGUOUS"]
+    got = mh.band_keys_batch(view)
+    assert got.shape == (len(strings), mh.BANDS)
+    for row, sig in zip(got.tolist(), sigs):
+        assert row == mh.band_keys(sig)
