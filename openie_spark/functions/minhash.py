@@ -103,8 +103,10 @@ def band_keys_for(s: str) -> list[int]:
 
 _MASK32 = np.uint64(0xFFFFFFFF)
 _P64 = np.uint64(P)
-# Columns per (K, chunk) working array in signatures_batch: bounds every
-# temporary to K * 4 Ki * 8 B = 2 MiB however many shingles a batch holds.
+# Shingle occurrences per window in signatures_batch: every (K, window)
+# temporary is at most K * 4 Ki * 8 B = 2 MiB however many shingles a batch
+# or a row holds; what grows with the batch is 1-D (a few 8 B entries per
+# occurrence and per distinct shingle).
 _CHUNK = 1 << 12
 _BAND_PREFIX = np.array(
     [list(b.to_bytes(2, "big")) for b in range(BANDS)], dtype=np.uint8
@@ -145,10 +147,14 @@ def signatures_batch(shingle_lists: list[list[str]]) -> np.ndarray:
     """(n, K) uint64 signatures for a batch of shingle lists; row of p for
     empty inputs — bit-identical to ``signature`` applied per row.
 
-    Each DISTINCT shingle of the batch is hashed and permuted once (a
-    batch of names repeats a few hundred 3-grams thousands of times); the
-    per-row minimum is then one ``np.minimum.reduceat`` over the permuted
-    values gathered back into occurrence order."""
+    Each distinct shingle of the batch is hashed once.  The occurrences
+    are then sorted by shingle id and walked in ``_CHUNK``-wide windows.
+    A window holds a contiguous id range no wider than itself, so it
+    permutes each distinct shingle about once however often the batch
+    repeats it (a batch of names repeats a few hundred 3-grams thousands
+    of times; a batch of documents repeats few).  Each window then takes
+    its rows' minima with one ``np.minimum.reduceat`` and folds them into
+    the running per-row minimum."""
     n = len(shingle_lists)
     out = np.full((n, K), P, dtype=np.uint64)
     ids: dict[str, int] = {}
@@ -161,21 +167,21 @@ def signatures_batch(shingle_lists: list[list[str]]) -> np.ndarray:
     if not ids:
         return out
     x = np.fromiter((_base_hash(sh) % P for sh in ids), dtype=np.uint64, count=len(ids))
-    perm = np.empty((K, len(x)), dtype=np.uint64)  # (permutation, distinct shingle)
-    for c in range(0, len(x), _CHUNK):
-        y = _mulmod_p(_A[:, None], x[None, c : c + _CHUNK]) + _B[:, None]
-        perm[:, c : c + _CHUNK] = np.where(y >= _P64, y - _P64, y)
     occ_a = np.array(occ, dtype=np.intp)
-    rows = np.flatnonzero(lens)
-    starts = (np.cumsum(lens) - lens)[rows]
-    j0 = 0
-    while j0 < len(rows):
-        j1 = max(j0 + 1, int(np.searchsorted(starts, starts[j0] + _CHUNK)))
-        lo = starts[j0]
-        hi = starts[j1] if j1 < len(rows) else len(occ_a)
-        gathered = perm[:, occ_a[lo:hi]]
-        out[rows[j0:j1]] = np.minimum.reduceat(gathered, starts[j0:j1] - lo, axis=1).T
-        j0 = j1
+    order = np.argsort(occ_a, kind="stable")
+    sid = occ_a[order]
+    srow = np.repeat(np.arange(n), lens)[order]
+    for lo in range(0, len(sid), _CHUNK):
+        hi = min(lo + _CHUNK, len(sid))
+        i0 = sid[lo]
+        y = _mulmod_p(_A[:, None], x[None, i0 : sid[hi - 1] + 1]) + _B[:, None]
+        y = np.where(y >= _P64, y - _P64, y)
+        o = np.argsort(srow[lo:hi], kind="stable")
+        r = srow[lo:hi][o]
+        seg = np.flatnonzero(np.r_[True, r[1:] != r[:-1]])
+        mins = np.minimum.reduceat(y[:, sid[lo:hi][o] - i0], seg, axis=1).T
+        r = r[seg]
+        out[r] = np.minimum(out[r], mins)
     return out
 
 

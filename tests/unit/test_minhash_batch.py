@@ -80,3 +80,56 @@ def test_band_keys_batch_on_non_contiguous_signatures():
     assert got.shape == (len(strings), mh.BANDS)
     for row, sig in zip(got.tolist(), sigs):
         assert row == mh.band_keys(sig)
+
+
+def _distinct_shingle_rows(lengths: list[int]) -> list[list[str]]:
+    """Rows of shingles that never repeat, like a batch of documents'
+    word 3-grams."""
+    out, k = [], 0
+    for n in lengths:
+        out.append([f"w{i} w{i + 1} w{i + 2}" for i in range(k, k + n)])
+        k += n
+    return out
+
+
+def test_signatures_batch_spans_windows_with_distinct_shingles():
+    """More distinct shingles than one window holds, with rows that cross
+    window edges and one row longer than a whole window."""
+    lists = _distinct_shingle_rows([3000, 0, 2500, mh._CHUNK + 900, 1, 17])
+    batch = mh.signatures_batch(lists)
+    for i, lst in enumerate(lists):
+        assert np.array_equal(batch[i], mh.signature(lst)), i
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(st.text(alphabet="ab cd", min_size=0, max_size=12), min_size=0, max_size=32),
+       st.integers(min_value=1, max_value=9))
+def test_batch_property_small_windows(strs, chunk):
+    """With tiny windows, rows are split across windows and fold their
+    minima window by window; every row must still equal the scalar path."""
+    lists = [mh.shingles(s) for s in strs]
+    saved = mh._CHUNK
+    mh._CHUNK = chunk
+    try:
+        sigs = mh.signatures_batch(lists)
+    finally:
+        mh._CHUNK = saved
+    for lst, sig in zip(lists, sigs):
+        assert np.array_equal(sig, mh.signature(lst))
+
+
+def test_signatures_batch_memory_is_bounded_by_the_window():
+    """A batch of 200k distinct shingles: a (K, distinct) matrix alone
+    would be ~98 MiB.  The windowed kernel holds 2 MiB windows plus what
+    grows by one entry per shingle (the id dict, the occurrence index),
+    under 64 MiB in all."""
+    import tracemalloc
+
+    lists = _distinct_shingle_rows([2000] * 100)
+    tracemalloc.start()
+    try:
+        mh.signatures_batch(lists)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 64 << 20, peak
