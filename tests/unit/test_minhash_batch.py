@@ -55,16 +55,22 @@ def test_batch_property(strs):
 
 
 @settings(max_examples=100, deadline=None)
-@given(st.lists(st.text(alphabet="ab c", min_size=0, max_size=10), min_size=0, max_size=64))
-def test_batch_property_repeated_shingles(strs):
-    """A small alphabet makes rows share shingles: the batch path permutes
-    each distinct shingle once and must still give every row its own
-    scalar signature and band keys."""
+@given(st.lists(st.text(alphabet="ab c", min_size=0, max_size=10), min_size=0, max_size=64),
+       st.sampled_from([1, 3, 7, mh._CHUNK]))
+def test_batch_property_repeated_shingles(strs, chunk):
+    """A small alphabet makes rows share shingles, and small windows split
+    rows across windows: every row must still get its own scalar
+    signature and band keys."""
     lists = [mh.shingles(s) for s in strs]
-    sigs = mh.signatures_batch(lists)
+    saved = mh._CHUNK
+    mh._CHUNK = chunk
+    try:
+        sigs = mh.signatures_batch(lists)
+        got = mh.band_keys_for_batch(strs)
+    finally:
+        mh._CHUNK = saved
     for lst, sig in zip(lists, sigs):
         assert np.array_equal(sig, mh.signature(lst))
-    got = mh.band_keys_for_batch(strs)
     for s, keys in zip(strs, got):
         assert keys == (mh.band_keys_for(s) if s else [])
 
@@ -99,23 +105,6 @@ def test_signatures_batch_spans_windows_with_distinct_shingles():
     batch = mh.signatures_batch(lists)
     for i, lst in enumerate(lists):
         assert np.array_equal(batch[i], mh.signature(lst)), i
-
-
-@settings(max_examples=100, deadline=None)
-@given(st.lists(st.text(alphabet="ab cd", min_size=0, max_size=12), min_size=0, max_size=32),
-       st.integers(min_value=1, max_value=9))
-def test_batch_property_small_windows(strs, chunk):
-    """With tiny windows, rows are split across windows and fold their
-    minima window by window; every row must still equal the scalar path."""
-    lists = [mh.shingles(s) for s in strs]
-    saved = mh._CHUNK
-    mh._CHUNK = chunk
-    try:
-        sigs = mh.signatures_batch(lists)
-    finally:
-        mh._CHUNK = saved
-    for lst, sig in zip(lists, sigs):
-        assert np.array_equal(sig, mh.signature(lst))
 
 
 def test_signatures_batch_memory_is_bounded_by_the_window():
