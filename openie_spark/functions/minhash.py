@@ -205,18 +205,20 @@ def band_keys_batch(sigs: np.ndarray) -> np.ndarray:
     return u.view(np.int64).reshape(n, BANDS)
 
 
-def band_keys_matrix(norms: list[str | None]) -> tuple[np.ndarray, np.ndarray]:
-    """Band keys of a batch of mention strings as an (n, BANDS) int64
-    matrix, plus the mask of rows that have keys (``None`` and ``''``
-    have no shingles, hence no keys)."""
-    lists = [shingles(s) if s else [] for s in norms]
-    has_keys = np.fromiter((bool(lst) for lst in lists), dtype=bool, count=len(lists))
-    return band_keys_batch(signatures_batch(lists)), has_keys
+def band_keys_matrix(shingle_lists: list[list[str]]) -> tuple[np.ndarray, np.ndarray]:
+    """Band keys of a batch of shingle lists as an (n, BANDS) int64
+    matrix, plus the mask of rows that have keys (an empty list has
+    none)."""
+    has_keys = np.fromiter(
+        (bool(lst) for lst in shingle_lists), dtype=bool, count=len(shingle_lists)
+    )
+    return band_keys_batch(signatures_batch(shingle_lists)), has_keys
 
 
 def band_keys_for_batch(norms: list[str | None]) -> list[list[int]]:
-    """Vectorized ``band_keys_for`` over a batch of mention strings."""
-    keys, has_keys = band_keys_matrix(norms)
+    """Vectorized ``band_keys_for`` over a batch of mention strings
+    (``None`` and ``''`` have no shingles, hence no keys)."""
+    keys, has_keys = band_keys_matrix([shingles(s) if s else [] for s in norms])
     return [k if ok else [] for k, ok in zip(keys.tolist(), has_keys.tolist())]
 
 

@@ -26,8 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
-from openie_spark.functions import minhash as mh
 from openie_spark.functions.lineage import cut_lineage
+from openie_spark.operators.linking import band_key_rows
 
 
 CHUNK_DEDUP_TOKENS = 8  # one home: the registry oracle interpolates this
@@ -89,25 +89,19 @@ def chunk_dedup_stats(
 
 
 def word_shingles_col(text_col: str, n: int = 3):
-    """Word n-gram shingles, JVM-side: split → sliding windows via
-    transform(sequence(...)) → concat_ws → distinct."""
-    toks = F.split(F.lower(F.col(text_col)), r"\s+")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
+    """Word n-gram shingles, JVM-side: split once, then gram i joins the
+    i-th element of n shifted slices (zip_with) → distinct.  A NULL text
+    reads as '' (one empty gram); a text shorter than n tokens is one
+    whole-document gram (zip_with pads the short slices with NULL, which
+    concat_ws skips)."""
+    toks = F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
+    m = F.greatest(F.size(toks) - n + 1, F.lit(1))
+    grams = F.slice(toks, 1, m)
+    for k in range(1, n):
+        grams = F.zip_with(
+            grams, F.slice(toks, k + 1, m), lambda g, t: F.concat_ws(" ", g, t)
+        )
     return F.array_distinct(grams)
-
-
-@pandas_udf(ArrayType(LongType()))
-def _doc_band_keys_udf(shingle_arrays: pd.Series) -> pd.Series:
-    """Doc-level MinHash band keys, numpy-vectorized across the Arrow batch
-    (the 100 TB dedup hot path; bit-identical to the scalar path)."""
-    lists = [list(a) if a is not None else [] for a in shingle_arrays]
-    sigs = mh.signatures_batch(lists)
-    keys = mh.band_keys_batch(sigs).tolist()
-    return pd.Series(
-        [k if lst else [] for k, lst in zip(keys, lists)],
-        index=shingle_arrays.index,
-    )
 
 
 def minhash_dup_pairs(
@@ -117,13 +111,16 @@ def minhash_dup_pairs(
     → exact-Jaccard verify.  Output (id_a, id_b, jaccard), id_a < id_b."""
     base = df.select(
         F.col(id_col).alias("id"), word_shingles_col(text_col).alias("sh")
-    ).withColumn("bands", _doc_band_keys_udf("sh"))
-    base = cut_lineage(base)
-    # explode band keys WITHOUT the shingle arrays: carrying them through
-    # the 16x-replicated band join multiplies shuffle bytes by the shingle
-    # payload; candidate pairs are orders of magnitude fewer, so shingles
-    # are re-joined only for the verify step
-    exp = base.select("id", F.explode("bands").alias("band_key"))
+    )
+    # The band-key fence is cut EAGERLY right after it, so it runs once
+    # per document (a lazy cut left one copy in each side of the self-join
+    # below).  Only (id, band_key) rides the 16x-replicated band join:
+    # carrying the shingle arrays would multiply shuffle bytes by their
+    # payload, and candidate pairs are orders of magnitude fewer, so
+    # shingles are re-joined only for the verify step.
+    exp = cut_lineage(
+        band_key_rows(base.select("sh", "id")).select("id", "band_key"), eager=True
+    )
     a = exp.select(F.col("id").alias("id_a"), "band_key")
     b = exp.select(F.col("id").alias("id_b"), "band_key")
     pairs = (

@@ -1,10 +1,10 @@
 """OP-20..23 — the fused extraction operator.
 
-One vectorized pandas UDF runs segmentation → tokenization → tagging →
-triple extraction in a single Python pass per Arrow batch (SURVEY.md §4.2-B:
-one UDF fence instead of four chained ones = 4x fewer Arrow round-trips;
+One mapInArrow fence runs segmentation → tokenization → tagging → triple
+extraction in a single Python pass per Arrow batch (SURVEY.md §4.2-B: one
+fence instead of four chained ones = 4x fewer Arrow round-trips;
 rationale: CIDR 2022 "Accelerating Python UDFs in Vectorized Query
-Execution").  The UDF READS `spans` and emits a new triples column; it never
+Execution").  The fence READS `spans` and emits new triple rows; it never
 rewrites `spans` (the per-row span-sequence invariant, BASELINE.json
 input_hint).
 
@@ -17,54 +17,12 @@ BASELINE metric wants to gate.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType
-
 from pyspark.sql.types import StructType
 
-from openie_spark.schemas import TRIPLE_STRUCT, TRIPLES_SCHEMA, assert_schema
-from openie_spark.spec.rules import RULESET_VERSION, extract_document, extract_pairs
-
-
-@pandas_udf(ArrayType(TRIPLE_STRUCT))
-def extract_triples_udf(spans: pd.Series) -> pd.Series:
-    """spans: Series of list[dict] (Arrow-decoded array<struct>).
-    Returns Series of list[dict] matching TRIPLE_STRUCT."""
-    out = []
-    for doc_spans in spans:
-        if doc_spans is None:
-            out.append([])
-            continue
-        out.append([t._asdict() for t in extract_document(list(doc_spans))])
-    return pd.Series(out, dtype=object)
-
-
-def extract_stage_pandas(docs: DataFrame) -> DataFrame:
-    """Reference implementation of the stage via scalar pandas UDF +
-    explode.  Kept as the cross-check twin of the Arrow path (tests assert
-    identical output) and as the simplest-possible surface."""
-    triples = (
-        docs.select("doc_id", F.explode(extract_triples_udf("spans")).alias("t"))
-        .select(
-            "doc_id",
-            F.col("t.sent_idx").alias("sent_idx"),
-            F.col("t.subj").alias("subj"),
-            F.col("t.rel").alias("rel"),
-            F.col("t.arg").alias("arg"),
-            F.col("t.subj_norm").alias("subj_norm"),
-            F.col("t.arg_norm").alias("arg_norm"),
-            F.col("t.conf").alias("conf"),
-            F.col("t.clause_type").alias("clause_type"),
-            F.col("t.deps").alias("deps"),
-            F.col("t.conj").alias("conj"),
-        )
-        .withColumn("ruleset", F.lit(RULESET_VERSION))
-    )
-    assert_schema(triples, TRIPLES_SCHEMA, "extract_stage")
-    return triples
+from openie_spark.schemas import TRIPLES_SCHEMA, assert_schema
+from openie_spark.spec.rules import RULESET_VERSION, extract_pairs
 
 
 def _extract_record_batches(batches):

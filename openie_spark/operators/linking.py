@@ -55,7 +55,12 @@ def _band_key_batches(batches):
     """mapInArrow kernel of ``band_key_rows``: each row once per band key
     of its first column, with the key appended as ``band_key``."""
     for batch in batches:
-        keys, has_keys = mh.band_keys_matrix(batch.column(0).to_pylist())
+        col = batch.column(0)
+        if pa.types.is_list(col.type):  # shingles as given
+            lists = [lst or [] for lst in col.to_pylist()]
+        else:  # a string: its char-3-gram shingles
+            lists = [mh.shingles(s) if s else [] for s in col.to_pylist()]
+        keys, has_keys = mh.band_keys_matrix(lists)
         rows = np.repeat(np.flatnonzero(has_keys), mh.BANDS)
         yield pa.RecordBatch.from_arrays(
             [*batch.take(pa.array(rows)).columns, pa.array(keys[has_keys].reshape(-1))],
@@ -66,10 +71,13 @@ def _band_key_batches(batches):
 def band_key_rows(df: DataFrame) -> DataFrame:
     """OP-32/33: MinHash signature → 16 LSH band keys (frozen scheme) of
     ``df``'s first column, exploded: one output row per (row, band key),
-    every column of ``df`` passed through and ``band_key`` appended; a
-    NULL or empty string has no shingles and emits no row.  ONE Arrow
-    fence, numpy-vectorized across the batch (minhash.py batch path,
-    bit-identical to the scalar oracle path)."""
+    every column of ``df`` passed through and ``band_key`` appended.  A
+    string column is shingled into char 3-grams (a NULL or empty string
+    has none); an ``array<string>`` column is taken as the shingles
+    themselves (a NULL or empty array has none).  A row without shingles
+    emits no row.  ONE Arrow fence for every MinHash user (entity linking
+    and document dedup), numpy-vectorized across the batch (minhash.py
+    batch path, bit-identical to the scalar oracle path)."""
     schema = StructType([*df.schema.fields, StructField("band_key", LongType(), False)])
     return df.mapInArrow(_band_key_batches, schema)
 

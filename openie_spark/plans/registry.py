@@ -1403,17 +1403,21 @@ def _ensure_stream_fixture(base: Path, build) -> None:
     a fresh query against that checkpoint re-processes the input as
     unseen while the old sink rows remain — up to double the rows,
     permanently poisoning the cache.  So a marker-less directory is
-    wiped before rebuilding."""
+    wiped before rebuilding.  The marker holds the directory's resolved
+    path, and a cache built anywhere else is rebuilt too: the sink's
+    _spark_metadata log records absolute file paths, so a copied or
+    moved sink does not read back."""
     import shutil
 
     marker = base / "_SUCCESS"
-    if marker.exists():
+    here = str(base.resolve())
+    if marker.exists() and marker.read_text() == here:
         return
     if base.exists():
         shutil.rmtree(base)
     base.mkdir(parents=True)
     build(base)
-    marker.touch()
+    marker.write_text(here)
 
 
 def _stream_fixture(

@@ -110,7 +110,11 @@ def test_stage_and_dropped_rows_append_one_file_each(spark, tmp_path):
 def test_ensure_stream_fixture_wipes_partial_build(tmp_path):
     """A marker-less fixture dir (failed prior build: stale streaming
     checkpoint + partial sink) must be wiped before rebuilding; a marked
-    dir must be served untouched."""
+    dir must be served untouched, unless it was built somewhere else (a
+    streaming sink's metadata log records absolute paths, so a copied
+    cache does not read back)."""
+    import shutil
+
     from openie_spark.plans.registry import _ensure_stream_fixture
 
     base = tmp_path / "fx"
@@ -127,3 +131,10 @@ def test_ensure_stream_fixture_wipes_partial_build(tmp_path):
     assert calls == [base] and (base / "_SUCCESS").exists()
     _ensure_stream_fixture(base, build)  # marked: no rebuild
     assert len(calls) == 1
+    moved = tmp_path / "copy" / "fx"
+    shutil.copytree(base, moved)
+    (moved / "ck").mkdir()
+    _ensure_stream_fixture(moved, build)  # built elsewhere: rebuilt here
+    _ensure_stream_fixture(moved, build)
+    _ensure_stream_fixture(base, build)
+    assert calls == [base, moved]

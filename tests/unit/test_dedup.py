@@ -3,7 +3,11 @@
 from __future__ import annotations
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
+
+from openie_spark.functions.lineage import cut_lineage
 
 from openie_spark.operators.dedup import (
     minhash_dup_pairs,
@@ -211,11 +215,61 @@ def test_ngram_prefix_bounds_candidates(spark):
     )
 
 
-def test_minhash_scale_shape(spark, corpus):
-    """The LSH plan must be a band-key equi-join, not a cross product."""
-    plan = minhash_dup_pairs(corpus, "doc_id", "text")._jdf.queryExecution().executedPlan().toString()
+def _final_plan(df) -> str:
+    """The executed physical plan; of an adaptive plan, the final one."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_minhash_scale_shape(spark, corpus, monkeypatch):
+    """The LSH plan must be a band-key equi-join, not a cross product.  Its
+    band keys come from ONE mapInArrow fence (no pandas UDF) that runs once
+    per document under an eager cut, so the pairs plan holds no Python
+    node at all."""
+    from openie_spark.operators import dedup
+
+    cuts = []
+
+    def spy(df, eager=False):
+        out = cut_lineage(df, eager=eager)
+        cuts.append((eager, _final_plan(df)))
+        return out
+
+    monkeypatch.setattr(dedup, "cut_lineage", spy)
+    pairs = minhash_dup_pairs(corpus, "doc_id", "text")
+    pairs.collect()
+    plan = _final_plan(pairs)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    assert "MapInArrow" not in plan and "ArrowEvalPython" not in plan
+    [(eager, fence_plan)] = cuts
+    assert eager is True
+    assert fence_plan.count("MapInArrow") == 1
+    assert "ArrowEvalPython" not in fence_plan
+
+
+_WS_TEXT = st.one_of(
+    st.none(),
+    st.text(alphabet="abC \t\n", max_size=24),
+    st.lists(st.sampled_from(["the", "Fox", "a", "b"]), max_size=8).map(" ".join),
+)
+
+
+@settings(max_examples=20, deadline=None)
+@given(st.lists(_WS_TEXT, min_size=1, max_size=16))
+@example([None, "", " ", "\t\n", "a", "a b", " a  b ", "a b c", "a b c ", "x y z w v"])
+def test_word_shingles_col_matches_twin(spark, texts):
+    """word_shingles_col is, as a set, the dedup twin's shingling on ASCII
+    text: leading/trailing/multiple whitespace keeps its empty tokens, a
+    text under 3 tokens is one whole-text gram, NULL reads as ''."""
+    from openie_spark.fixtures.gen_dedup_twin import _word_shingles
+    from openie_spark.operators.dedup import word_shingles_col
+
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    got = {r.i: r.sh for r in df.select("i", word_shingles_col("text").alias("sh")).collect()}
+    for i, t in enumerate(texts):
+        assert len(got[i]) == len(set(got[i]))
+        assert set(got[i]) == _word_shingles(t or ""), t
 
 
 def test_near_dup_groups_transitive_closure(spark):

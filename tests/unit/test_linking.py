@@ -122,9 +122,10 @@ def test_blocking_quality_matches_bruteforce(spark, alias_dict_path):
 
 
 def test_band_key_rows_is_the_exploded_batch_kernel(spark, alias_dict_path):
-    """band_key_rows == the Python explode of band_keys_for_batch: the
-    pass-through columns survive, NULL and '' emit no row, and the LSH
-    plan holds mapInArrow fences, never an ArrowEvalPython (pandas) one."""
+    """band_key_rows == the Python explode of the batch kernel, for a
+    string and an array<string> first column: the pass-through columns
+    survive, rows without shingles emit no row, and the LSH plan holds
+    mapInArrow fences, never an ArrowEvalPython (pandas) one."""
     norms = [None, "", "a", "ab", "abc", "acme corp", "acme corp",
              "ünïcode naïve", "meridian " * 40]
     df = spark.createDataFrame(
@@ -139,6 +140,22 @@ def test_band_key_rows_is_the_exploded_batch_kernel(spark, alias_dict_path):
     )
     assert sorted(map(tuple, out.collect())) == want
     assert {e for _, e, _ in want}.isdisjoint({1000, 1001})
+
+    # an array<string> first column is taken as the shingles themselves:
+    # NULL and [] emit no row, [""] is one shingle and does
+    lists = [None, [], [""], ["x y z", "x y z", "y z w"], ["y z w", "x y z"],
+             ["q"] * 5]
+    arr = spark.createDataFrame(
+        [(sh, i) for i, sh in enumerate(lists)], "sh array<string>, id long"
+    )
+    out = band_key_rows(arr)
+    assert out.columns == ["sh", "id", "band_key"]
+    keys = mh.band_keys_batch(mh.signatures_batch([sh or [] for sh in lists]))
+    want = sorted(
+        (i, int(k)) for i, sh in enumerate(lists) if sh for k in keys[i]
+    )
+    assert sorted((r.id, r.band_key) for r in out.collect()) == want
+    assert {i for i, _ in want} == {2, 3, 4, 5}
 
     unlinked = spark.createDataFrame([(n,) for n in norms[2:]], "mention_norm string")
     links = lsh_links(unlinked, _aliases(spark, alias_dict_path))
