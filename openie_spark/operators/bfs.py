@@ -18,7 +18,7 @@ an empty frontier terminates the loop before k.
 
 No driver-side state beyond the loop counter and the per-round frontier
 count (a single long), like components.py's one-action-per-round
-star-forest convergence test.
+star convergence test.
 """
 
 from __future__ import annotations

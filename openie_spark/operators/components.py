@@ -11,13 +11,17 @@ Round shape (all edges kept canonically src<dst between rounds, OP-40):
   large-star: connect every strictly-larger neighbor of u to
               m(u) = min(Γ(u) ∪ {u})
   small-star: connect every neighbor ≤ u (and u itself) to m(u)
-Convergence (OP-43) is tested BEFORE each round with one action: the edge
-set is a star forest — no node is both a src and a dst, and every dst has
-exactly one src.  With src<dst each star is centred on its component's
-minimum, which is the state the rounds converge to and a fixed point of
-both operations, so no confirming round is needed.  Each round's output
-is a lineage cut (SURVEY.md §4.2-E) — without it plan analysis time
-doubles every round.
+Convergence (OP-43) is tested BEFORE each round with one action: does
+every edge have an end of degree 1?  Then every component is a star
+centred on ANY node, and its minimum has a closed form (OP-44): with
+m(u) = least(u, min Γ(u)), rep(u) = least(u, min of m(v) over Γ(u)) =
+least(centre, min(leaves)).  One node aggregate gives deg (self-loops
+count 0, so it is also the vertex universe) and m; one join + aggregate
+gives rep and the test.  The sameAs graph (each mention node has one
+link) thus runs no round; other graphs run rounds until their converged
+state, stars centred on the minimum, passes the same test.  Each round's
+output is a lineage cut (SURVEY.md §4.2-E) — without it plan analysis
+time doubles every round.
 """
 
 from __future__ import annotations
@@ -80,57 +84,57 @@ def small_star(edges: DataFrame) -> DataFrame:
     return _star(edges, F.col("v") <= F.col("u"))
 
 
-def is_star_forest(edges: DataFrame) -> bool:
-    """True iff no node is both a src and a dst and every dst has exactly
-    one src — i.e. every node that is a dst has degree 1.  One action."""
-    ends = edges.select(
-        F.inline(
-            F.array(
-                F.struct(F.col("src").alias("n"), F.lit(0).alias("is_dst")),
-                F.struct(F.col("dst").alias("n"), F.lit(1).alias("is_dst")),
-            )
+def star_components(edges: DataFrame) -> tuple[DataFrame, bool]:
+    """The convergence test and the closed-form answer, in one action.
+
+    ``edges`` must be canonical (``canonical_edges``: distinct, src ≤ dst;
+    self-loops allowed).  Returns ``(assign, is_star)``: ``is_star`` is
+    true iff every non-loop edge has an end of degree 1, and then
+    ``assign(id, rep)`` maps every node, self-loop-only ones included, to
+    the minimum of its component.  ``assign`` is a lineage cut that the
+    test's action has filled."""
+    nbrs = _neighbors(edges)
+    ring = F.col("u") != F.col("v")  # a self-loop is no neighbour
+    deg = F.count(F.when(ring, 1))
+    nodes = nbrs.groupBy("u").agg(
+        deg.alias("deg"), F.least(F.col("u"), F.min("v")).alias("m")
+    )
+    assign = cut_lineage(
+        nbrs.join(
+            nodes.select(
+                F.col("u").alias("v"), F.col("deg").alias("dv"), F.col("m").alias("mv")
+            ),
+            "v",
         )
+        .groupBy("u")
+        .agg(
+            F.least(F.col("u"), F.min("mv")).alias("rep"),
+            # an edge whose two ends both have degree ≥ 2
+            ((deg >= 2) & (F.max(F.when(ring, F.col("dv"))) >= 2)).alias("bad"),
+        )
+        .select(F.col("u").alias("id"), "rep", "bad")
     )
-    bad = (
-        ends.groupBy("n")
-        .agg(F.max("is_dst").alias("is_dst"), F.count("*").alias("deg"))
-        .where((F.col("is_dst") == 1) & (F.col("deg") > 1))
-    )
-    return bad.count() == 0
+    is_star = assign.where("bad").count() == 0
+    return assign.select("id", "rep"), is_star
 
 
 def connected_components(edges: DataFrame) -> DataFrame:
     """edges(src,dst) → assignments(id, rep) with rep = min(component).
 
-    OP-43: driver-side loop; before each round one action tests whether the
-    edges already form a star forest (the converged state), and each round's
-    output is a lineage cut.  Isolated nodes must arrive as self-loops."""
-    # remember the full vertex universe before dropping self-loops
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    vertices = cut_lineage(vertices, eager=True)
-
-    cur = canonical_edges(edges).where(F.col("src") != F.col("dst"))
-    # lazy cuts: the star-forest test is the FIRST action on each cut
-    # dataset, so one job both materializes the checkpoint blocks and
-    # decides convergence — at vocab-bounded edge counts the loop is pure
-    # fixed per-job overhead
-    cur = cut_lineage(cur)
+    OP-43: driver-side loop; before each round one action tests whether
+    every component is already a star and, if so, yields the answer
+    (``star_components``); each round's output is a lineage cut.  Isolated
+    nodes must arrive as self-loops; rounds drop self-loops, so the input's
+    are re-attached to each round's output."""
+    # lazy cut: the first test's action fills it, and it is read again
+    # only if a round runs
+    cur = cut_lineage(canonical_edges(edges))
+    loops = cur.where(F.col("src") == F.col("dst"))
     for _ in range(MAX_ROUNDS):
-        if is_star_forest(cur):
-            break
-        cur = cut_lineage(small_star(large_star(cur)))
-    else:  # pragma: no cover
-        raise RuntimeError(f"connected components did not converge in {MAX_ROUNDS} rounds")
-
-    # after convergence every edge is (rep, member) with rep = min(component);
-    # canonical form is src=min, so rep = src side
-    assign = cur.select(F.col("dst").alias("id"), F.col("src").alias("rep"))
-    # nodes that are themselves representatives (or isolated) map to self
-    return (
-        vertices.join(assign, "id", "left")
-        .select("id", F.coalesce("rep", F.col("id")).alias("rep"))
+        assign, is_star = star_components(cur)
+        if is_star:
+            return assign
+        cur = cut_lineage(small_star(large_star(cur)).unionByName(loops))
+    raise RuntimeError(  # pragma: no cover
+        f"connected components did not converge in {MAX_ROUNDS} rounds"
     )

@@ -114,13 +114,12 @@ def minhash_dup_pairs(
     )
     # The band-key fence is cut EAGERLY right after it, so it runs once
     # per document (a lazy cut left one copy in each side of the self-join
-    # below).  Only (id, band_key) rides the 16x-replicated band join:
-    # carrying the shingle arrays would multiply shuffle bytes by their
-    # payload, and candidate pairs are orders of magnitude fewer, so
-    # shingles are re-joined only for the verify step.
-    exp = cut_lineage(
-        band_key_rows(base.select("sh", "id")).select("id", "band_key"), eager=True
-    )
+    # below).  Only (id, band_key) rides the 16x-replicated band join (the
+    # fence consumes the shingle array column): carrying the shingle
+    # arrays would multiply shuffle bytes by their payload, and candidate
+    # pairs are orders of magnitude fewer, so shingles are re-joined only
+    # for the verify step.
+    exp = cut_lineage(band_key_rows(base.select("sh", "id")), eager=True)
     a = exp.select(F.col("id").alias("id_a"), "band_key")
     b = exp.select(F.col("id").alias("id_b"), "band_key")
     pairs = (

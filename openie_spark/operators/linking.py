@@ -1,9 +1,10 @@
 """Entity linking (OP-30..35, SURVEY.md §2.4).
 
-Two paths, in order:
-  1. OP-30 exact: broadcast hash join mentions ⋈ alias_dict on
-     mention_norm = alias_norm (the dict is the small dimension the north
-     star calls the "broadcast alias dictionary").
+Three decisions, in order of precedence, over the DISTINCT mentions:
+  1. OP-30 exact: broadcast hash left join mentions ⟕ alias_dict on
+     mention_norm = alias_norm, grouped to the min entity per mention (the
+     dict is the small dimension the north star calls the "broadcast
+     alias dictionary").  Its null rows are the LSH input.
   2. OP-31..34 MinHash-LSH for the remainder: char-3-gram shingles
      (JVM-side higher-order functions — no UDF), 64-perm MinHash + 16x4
      banding (one mapInArrow fence over the shared frozen scheme in
@@ -14,6 +15,8 @@ Two paths, in order:
   3. OP-35 minting: still-unlinked mentions get entity_id =
      xxhash64(mention_norm) — deterministic, partition-independent (never
      monotonically_increasing_id).
+Each mention is resolved by one left join of the exact rows with the LSH
+rows: coalesce(exact, lsh, xxhash64) and the matching method.
 
 Scale notes (10^12-doc posture): the LSH join is a plain shuffled equi-join
 on 16 exploded band keys per side — linear fan-out, no cross product; the
@@ -31,7 +34,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from openie_spark.functions import minhash as mh
@@ -53,49 +56,42 @@ def shingles_col(col: str):
 
 def _band_key_batches(batches):
     """mapInArrow kernel of ``band_key_rows``: each row once per band key
-    of its first column, with the key appended as ``band_key``."""
+    of its first column, with the key appended as ``band_key``; a shingle
+    array column is consumed, not passed through."""
     for batch in batches:
         col = batch.column(0)
         if pa.types.is_list(col.type):  # shingles as given
             lists = [lst or [] for lst in col.to_pylist()]
+            first = 1
         else:  # a string: its char-3-gram shingles
             lists = [mh.shingles(s) if s else [] for s in col.to_pylist()]
+            first = 0
         keys, has_keys = mh.band_keys_matrix(lists)
-        rows = np.repeat(np.flatnonzero(has_keys), mh.BANDS)
+        rows = pa.array(np.repeat(np.flatnonzero(has_keys), mh.BANDS))
         yield pa.RecordBatch.from_arrays(
-            [*batch.take(pa.array(rows)).columns, pa.array(keys[has_keys].reshape(-1))],
-            names=[*batch.schema.names, "band_key"],
+            [*(c.take(rows) for c in batch.columns[first:]),
+             pa.array(keys[has_keys].reshape(-1))],
+            names=[*batch.schema.names[first:], "band_key"],
         )
 
 
 def band_key_rows(df: DataFrame) -> DataFrame:
     """OP-32/33: MinHash signature → 16 LSH band keys (frozen scheme) of
     ``df``'s first column, exploded: one output row per (row, band key),
-    every column of ``df`` passed through and ``band_key`` appended.  A
-    string column is shingled into char 3-grams (a NULL or empty string
-    has none); an ``array<string>`` column is taken as the shingles
-    themselves (a NULL or empty array has none).  A row without shingles
-    emits no row.  ONE Arrow fence for every MinHash user (entity linking
-    and document dedup), numpy-vectorized across the batch (minhash.py
-    batch path, bit-identical to the scalar oracle path)."""
-    schema = StructType([*df.schema.fields, StructField("band_key", LongType(), False)])
+    with ``band_key`` appended.  A string first column is shingled into
+    char 3-grams (a NULL or empty string has none) and passed through; an
+    ``array<string>`` first column is taken as the shingles themselves (a
+    NULL or empty array has none) and dropped, so the array is not copied
+    once per band key.  Every other column is passed through.  A row
+    without shingles emits no row.  ONE Arrow fence for every MinHash user
+    (entity linking and document dedup), numpy-vectorized across the
+    batch (minhash.py batch path, bit-identical to the scalar oracle
+    path)."""
+    fields = df.schema.fields
+    if isinstance(fields[0].dataType, ArrayType):
+        fields = fields[1:]
+    schema = StructType([*fields, StructField("band_key", LongType(), False)])
     return df.mapInArrow(_band_key_batches, schema)
-
-
-def exact_links(mentions_distinct: DataFrame, alias_dict: DataFrame) -> DataFrame:
-    """OP-30: broadcast exact-alias join → (mention_norm, entity_id, method)."""
-    return (
-        mentions_distinct.join(
-            F.broadcast(alias_dict),
-            mentions_distinct.mention_norm == alias_dict.alias_norm,
-            "inner",
-        )
-        # a mention may hit several aliases of several entities; keep the
-        # deterministic min entity per mention
-        .groupBy("mention_norm")
-        .agg(F.min("entity_id").alias("entity_id"))
-        .withColumn("method", F.lit("exact"))
-    )
 
 
 def lsh_links(unlinked: DataFrame, alias_dict: DataFrame) -> DataFrame:
@@ -109,7 +105,7 @@ def lsh_links(unlinked: DataFrame, alias_dict: DataFrame) -> DataFrame:
     # candidate pairs instead of being carried through the shuffle
     #
     # explicit repartition before the MinHash fence: `unlinked` arrives from
-    # an anti-join whose output AQE coalesces to ~1 partition at small
+    # a grouped cut whose output AQE coalesces to ~1 partition at small
     # scale, which serializes the Python signature work (measured 7.9 s →
     # ~1 s at 92k mentions on 32 cores).  Partition count = cluster slots
     # (defaultParallelism), NOT spark.sql.shuffle.partitions: the right
@@ -146,37 +142,42 @@ def lsh_links(unlinked: DataFrame, alias_dict: DataFrame) -> DataFrame:
     )
 
 
-def mint_ids(unlinked: DataFrame) -> DataFrame:
-    """OP-35: deterministic new-entity ids for unlinked mentions."""
-    return unlinked.select(
-        "mention_norm",
-        F.xxhash64("mention_norm").alias("entity_id"),
-        F.lit("minted").alias("method"),
-    )
-
-
 def link_mentions(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
-    """Full linking stage: distinct mentions → exact ∪ lsh ∪ minted links.
-    Input needs a mention_norm column; output one row per distinct
+    """Full linking stage: distinct mentions → exact, else lsh, else minted
+    links.  Input needs a mention_norm column; output one row per distinct
     mention_norm with (entity_id, method).
 
-    Each stage boundary is an EAGER lineage cut: the three-way union
-    references every subtree at least twice (lsh feeds both a union branch
-    and rest2's anti-join), and materializing the whole tree in one job
-    recomputes the shared subtrees — concurrent stages race the lazy cache
-    and each loser recomputes from the parquet scan up (measured 12 s vs
-    ~6 s for the eager version at 92k distinct mentions).  Every cut
-    dataset here is vocabulary-bounded (distinct mentions, not corpus
-    rows), so the extra jobs stay tiny at any corpus size."""
-    distinct = cut_lineage(mentions.select("mention_norm").distinct(), eager=True)
-    exact = cut_lineage(exact_links(distinct, alias_dict), eager=True)
-    rest1 = cut_lineage(
-        distinct.join(exact, "mention_norm", "left_anti"), eager=True  # OP-53
+    Two EAGER lineage cuts, both vocabulary-bounded: the exact rows
+    (every distinct mention, its min exact entity or null) and the LSH
+    rows over the nulls.  Each is read twice, and one job over the whole
+    tree recomputes shared subtrees — concurrent stages race the lazy
+    cache (measured 12 s vs ~6 s eager at 92k distinct mentions).  The
+    resolving join stays lazy: the caller's write runs it."""
+    aliases = F.broadcast(alias_dict.select("alias_norm", "entity_id"))
+    distinct = mentions.select("mention_norm").distinct()
+    exact = cut_lineage(
+        distinct.join(aliases, distinct.mention_norm == aliases.alias_norm, "left")
+        # a mention may hit several aliases of several entities; keep the
+        # deterministic min entity per mention
+        .groupBy("mention_norm")
+        .agg(F.min("entity_id").alias("exact_id")),
+        eager=True,
     )
-    lsh = cut_lineage(lsh_links(rest1, alias_dict), eager=True)
-    rest2 = rest1.join(lsh, "mention_norm", "left_anti")
-    minted = mint_ids(rest2)
-    return exact.unionByName(lsh).unionByName(minted)
+    unlinked = exact.where(F.col("exact_id").isNull()).select("mention_norm")
+    lsh = cut_lineage(lsh_links(unlinked, alias_dict), eager=True)
+    resolved = exact.join(
+        lsh.select("mention_norm", F.col("entity_id").alias("lsh_id")),
+        "mention_norm",
+        "left",
+    )
+    return resolved.select(
+        "mention_norm",
+        F.coalesce("exact_id", "lsh_id", F.xxhash64("mention_norm")).alias("entity_id"),
+        F.when(F.col("exact_id").isNotNull(), F.lit("exact"))
+        .when(F.col("lsh_id").isNotNull(), F.lit("lsh"))
+        .otherwise(F.lit("minted"))
+        .alias("method"),
+    )
 
 
 def blocking_quality(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:

@@ -123,9 +123,10 @@ def test_blocking_quality_matches_bruteforce(spark, alias_dict_path):
 
 def test_band_key_rows_is_the_exploded_batch_kernel(spark, alias_dict_path):
     """band_key_rows == the Python explode of the batch kernel, for a
-    string and an array<string> first column: the pass-through columns
-    survive, rows without shingles emit no row, and the LSH plan holds
-    mapInArrow fences, never an ArrowEvalPython (pandas) one."""
+    string and an array<string> first column: the other columns pass
+    through (a string first column too), rows without shingles emit no
+    row, and the LSH plan holds mapInArrow fences, never an
+    ArrowEvalPython (pandas) one."""
     norms = [None, "", "a", "ab", "abc", "acme corp", "acme corp",
              "ünïcode naïve", "meridian " * 40]
     df = spark.createDataFrame(
@@ -141,15 +142,16 @@ def test_band_key_rows_is_the_exploded_batch_kernel(spark, alias_dict_path):
     assert sorted(map(tuple, out.collect())) == want
     assert {e for _, e, _ in want}.isdisjoint({1000, 1001})
 
-    # an array<string> first column is taken as the shingles themselves:
-    # NULL and [] emit no row, [""] is one shingle and does
+    # an array<string> first column is taken as the shingles themselves
+    # and not passed through: NULL and [] emit no row, [""] is one
+    # shingle and does
     lists = [None, [], [""], ["x y z", "x y z", "y z w"], ["y z w", "x y z"],
              ["q"] * 5]
     arr = spark.createDataFrame(
         [(sh, i) for i, sh in enumerate(lists)], "sh array<string>, id long"
     )
     out = band_key_rows(arr)
-    assert out.columns == ["sh", "id", "band_key"]
+    assert out.columns == ["id", "band_key"]  # the shingles are consumed
     keys = mh.band_keys_batch(mh.signatures_batch([sh or [] for sh in lists]))
     want = sorted(
         (i, int(k)) for i, sh in enumerate(lists) if sh for k in keys[i]
@@ -163,3 +165,28 @@ def test_band_key_rows_is_the_exploded_batch_kernel(spark, alias_dict_path):
     plan = links._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan
     assert "ArrowEvalPython" not in plan
+
+
+def test_link_mentions_makes_two_eager_cuts(spark, alias_dict_path, monkeypatch):
+    """link_mentions cuts the exact rows (every distinct mention with its
+    exact entity or null) and the LSH rows — two eager cuts, nothing
+    else; the resolving join stays lazy for the caller's write."""
+    from openie_spark.operators import linking
+
+    cuts = []
+    real = linking.cut_lineage
+
+    def spy(df, eager=False):
+        cuts.append(eager)
+        return real(df, eager=eager)
+
+    monkeypatch.setattr(linking, "cut_lineage", spy)
+    names = entity_names()
+    mentions = spark.createDataFrame(
+        [(names[0],), (names[0],), (names[2],), ("completely unrelated thing",)],
+        "mention_norm string",
+    )
+    links = link_mentions(mentions, _aliases(spark, alias_dict_path))
+    assert cuts == [True, True]
+    assert sorted(r.method for r in links.collect()) == ["exact", "lsh", "minted"]
+    assert cuts == [True, True]

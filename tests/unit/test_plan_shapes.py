@@ -120,3 +120,43 @@ def test_mention_normalization_jvm_side(spark, golden_docs_path):
     fences = plan.count("MapInArrow") + plan.count("ArrowEvalPython")
     assert fences <= 2, plan  # one per union branch, same kernel
     assert "BatchEvalPython" not in plan
+
+
+def test_pipeline_stage_tables_read_back(
+    spark, golden_docs_path, alias_dict_path, tmp_path, monkeypatch
+):
+    """Link and canonicalize write their plan straight to `links` and
+    `cc_assign`, and materialize reads both back from the catalog: its
+    inputs are bare parquet scans of those tables, on a computed run and
+    on a resumed one alike."""
+    import shutil
+
+    from openie_spark.catalog import ParquetCatalog
+    from openie_spark.plans import pipeline as pl
+    from openie_spark.sources.tables import load_alias_dict, load_docs
+
+    seen = []
+    real = pl._materialize
+
+    def spy(cat, cfg, triples, mentions, links, cc, alias_dict):
+        seen.append((links, cc))
+        return real(cat, cfg, triples, mentions, links, cc, alias_dict)
+
+    monkeypatch.setattr(pl, "_materialize", spy)
+    docs = load_docs(spark, golden_docs_path).where(
+        F.pmod(F.xxhash64("doc_id"), F.lit(8)) == 0
+    )
+    aliases = load_alias_dict(spark, alias_dict_path)
+    cat = ParquetCatalog(spark, str(tmp_path))
+    pl.run_pipeline(spark, docs, aliases, cat, pl.PipelineConfig(run_id="rb"))
+    # a resumed run with materialize's table gone: link and canonicalize
+    # are skipped, materialize recomputes from the tables read back
+    shutil.rmtree(tmp_path / "edges")
+    res = pl.run_pipeline(spark, docs, aliases, cat, pl.PipelineConfig(run_id="rb"))
+    assert res["link_skipped"] and res["canonicalize_skipped"]
+    assert len(seen) == 2
+    for links, cc in seen:
+        for df, table in ((links, "links"), (cc, "cc_assign")):
+            plan = df._jdf.queryExecution().analyzed().toString()
+            assert plan.startswith("Relation ") and "parquet" in plan, plan
+            assert str(tmp_path / table) in df.inputFiles()[0], df.inputFiles()
